@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.RawReader
 import graft.ops.{DistrictExtract, FuzzyMatch, Normalize, SchemaAlign}
@@ -11,6 +17,13 @@ import graft.schema.ContestSchema
   *
   *   stage dir → sniff/scan/union → fuzzy column map → normalize →
   *   district extraction (gated) → schema align → parquet (or JDBC)
+  *
+  * One pass over the input: the read is all-string with schemas taken
+  * from the files' headers (no inference job), [[SchemaAlign]] casts each
+  * grand-schema column once, and the write's own job fills an
+  * `Observation` with the rows written and, per cast column, the
+  * malformed cells (a non-null source value whose cast failed, stored as
+  * null) — see [[IngestReport]].
   *
   * Usage: `runMain graft.IngestJob <inDir> <outPath> [precinct|county]
   * [canonical=sourceOrConst ...]` where extra args add/override the
@@ -30,7 +43,7 @@ object IngestJob {
     * not silently eat `k=v` as an unknown kind). Non-`k=v` stragglers
     * are rejected, not dropped. */
   private[graft] def parseArgs(args: Array[String])
-      : (String, String, org.apache.spark.sql.types.StructType, Seq[(String, String)]) = {
+      : (String, String, StructType, Seq[(String, String)]) = {
     require(args.length >= 2,
       "usage: IngestJob <inDir> <outPath> [precinct|county] [canonical=sourceOrConst ...]")
     val (schema, rest) = args.drop(2) match {
@@ -57,14 +70,30 @@ object IngestJob {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, inDir, outPath, schema, overrides)
+    try println(s"[ingest] $inDir -> $outPath: ${ingest(spark, inDir, outPath, schema, overrides)}")
     finally spark.stop()
   }
 
+  /** How long the write's row counts may take to arrive after the write
+    * returns (they come over the listener bus). */
+  val ObservedTimeout: FiniteDuration = 60.seconds
+
+  /** The observed counts of `obs`, failing loudly when the pass that
+    * should fill them has not done so within `timeout`. */
+  private[graft] def awaitObserved(obs: Observation, timeout: FiniteDuration): Map[String, Long] = {
+    val row = try Await.result(obs.future, timeout)
+    catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"observation '${obs.name}' was not filled within $timeout of its pass", e)
+    }
+    row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
+      n -> (if (row.isNullAt(i)) 0L else row.getLong(i))
+    }.toMap
+  }
+
   /** overrides: canonical → sourceColumnOrConstant (wins over fuzzy). */
-  def run(spark: SparkSession, inDir: String, outPath: String,
-      schema: org.apache.spark.sql.types.StructType,
-      overrides: Seq[(String, String)] = Nil): Long = {
+  def ingest(spark: SparkSession, inDir: String, outPath: String, schema: StructType,
+      overrides: Seq[(String, String)] = Nil): IngestReport = {
     val raw = RawReader.readDir(spark, inDir)
     // T3 fuzzy pass (canonical → source), then explicit overrides win
     val merged = FuzzyMatch.mapColumns(schema.fieldNames.toSeq, raw.columns.toSeq) ++
@@ -73,13 +102,30 @@ object IngestJob {
     val mapping = schema.fieldNames.toSeq.flatMap(c => merged.get(c).map(_ -> c))
     val normalized = Normalize(raw, mapping)
     val extracted = DistrictExtract.withGate(normalized)
-    val aligned = SchemaAlign(extracted, schema)
-    aligned.write
+    val obs = Observation("ingest")
+    SchemaAlign.observed(extracted, schema, obs).write
       .mode("append")
       .partitionBy("election_date")
       .parquet(outPath)
-    // this run's row count (re-runs the narrow pipeline; a full store
-    // read-back would report the CUMULATIVE count under append mode)
-    aligned.count()
+    // this run's counts, from the write's own pass (a store read-back
+    // would report the CUMULATIVE count under append mode)
+    val counts = awaitObserved(obs, ObservedTimeout)
+    IngestReport(counts("rows"), counts - "rows")
+  }
+
+  /** [[ingest]], returning the number of rows this run wrote. */
+  def run(spark: SparkSession, inDir: String, outPath: String, schema: StructType,
+      overrides: Seq[(String, String)] = Nil): Long =
+    ingest(spark, inDir, outPath, schema, overrides).rows
+}
+
+/** One ingest run's counts: rows written, and per grand-schema column
+  * the malformed cells stored as null. */
+final case class IngestReport(rows: Long, malformed: Map[String, Long]) {
+  def malformedCells: Long = malformed.values.sum
+
+  override def toString: String = {
+    val bad = malformed.filter(_._2 > 0).toSeq.sortBy(_._1).map { case (c, n) => s"$c=$n" }
+    s"rows=$rows malformed_cells=$malformedCells" + (if (bad.isEmpty) "" else bad.mkString(" (", ", ", ")"))
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * Reference semantics, preserved exactly:
   *  - Gate (F2): runs only when the `district` column is absent OR has
   *    no truthy value — pandas `.any()` truthiness: null and `""` are
-  *    both falsy (SURVEY.md §7.3).
+  *    both falsy (SURVEY.md §7.3). A frame with no `contest_name`
+  *    column has nothing to extract from and passes through.
   *  - Three case-insensitive patterns applied SEQUENTIALLY, each mask
   *    recomputed on the already-mutated contest_name:
   *      1. `DISTRICT \d`          — digit districts
@@ -37,10 +38,11 @@ object DistrictExtract {
     "(?i)DISTRICT (IX|I?V|V?I{1,3})\\b",
   )
 
-  /** F2 gate: pandas-truthiness "any" over the district column. */
+  /** F2 gate: pandas-truthiness "any" over the district column. False
+    * when there is no contest_name to extract from. */
   def shouldExtract(df: DataFrame): Boolean =
-    !df.columns.contains("district") ||
-      df.filter(col("district").isNotNull && col("district") =!= "").isEmpty
+    df.columns.contains("contest_name") && (!df.columns.contains("district") ||
+      df.filter(col("district").isNotNull && col("district") =!= "").isEmpty)
 
   /** The unconditional 3-pattern pipeline. */
   def apply(df: DataFrame): DataFrame = {

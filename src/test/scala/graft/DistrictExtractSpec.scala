@@ -81,4 +81,12 @@ class DistrictExtractSpec extends SparkSpec {
     val df = Seq(("a", "COURT DISTRICT 1")).toDF("id", "contest_name")
     assert(DistrictExtract.shouldExtract(df))
   }
+
+  test("gate: no contest_name column → nothing to extract, frame passes through") {
+    val df = Seq(("WAKE", "5")).toDF("county", "total_votes")
+    assert(!DistrictExtract.shouldExtract(df))
+    val out = DistrictExtract.withGate(df)
+    assert(out.columns.toSeq === Seq("county", "total_votes"))
+    assert(out.collect().toSeq === Seq(Row("WAKE", "5")))
+  }
 }

@@ -2,13 +2,25 @@ package graft
 
 import java.nio.file.Files
 
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
-import graft.ops.{ContestData, CountyRollup}
+import graft.ops.{ContestData, CountyRollup, FuzzyMatch}
 import graft.schema.ContestSchema
 
 /** End-to-end ingest job + partitioned county materialization with
   * partition pruning verified in the physical plan. */
 class IngestJobSpec extends SparkSpec {
+
+  /** A staged batch directory holding `files` (name → content). */
+  private def batch(files: (String, String)*): String = {
+    val dir = Files.createTempDirectory("graft_batch")
+    files.foreach { case (n, c) => Files.writeString(dir.resolve(n), c) }
+    dir.toString
+  }
+
+  private def store(): String = Files.createTempDirectory("graft_store").toString + "/contest"
 
   test("IngestJob: staged CSVs → partitioned canonical parquet") {
     val in = Files.createTempDirectory("graft_job_in").toFile
@@ -68,5 +80,53 @@ class IngestJobSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       IngestJob.parseArgs(Array("in", "out", "precint"))
     }
+  }
+
+  test("mixed union batch: one file's malformed total lands as null and is counted once") {
+    // a comma file with an unparseable total, and a tab file with permuted
+    // columns and none: every file is read as strings, so the union never
+    // casts the first file's cells to the second file's inferred type
+    val in = batch(
+      "a.csv" -> ("County,Election Date,Contest Name,Choice,Election Day,Total Votes\n" +
+        "WAKE,2012-11-06,US SENATE,Jane Doe,3,5#\n" +
+        "DURHAM,2012-11-06,US SENATE,John Roe,4,7\n"),
+      "b.tsv" -> ("Total Votes\tElection Day\tChoice\tContest Name\tElection Date\tCounty\n" +
+        "11\t6\tJane Doe\tGOVERNOR\t2012-11-06\tORANGE\n"))
+    val out = store()
+    val r = IngestJob.ingest(spark, in, out, ContestSchema.precinct)
+    assert(r.rows === 3L)
+    assert(r.malformedCells === 1L)
+    assert(r.malformed("total_votes") === 1L)
+    val totals = spark.read.parquet(out).select("county", "total_votes").collect()
+      .map(row => row.getString(0) -> Option(row.get(1))).toMap
+    assert(totals === Map("WAKE" -> None, "DURHAM" -> Some(7L), "ORANGE" -> Some(11L)))
+  }
+
+  test("header-only batch writes no rows and returns 0") {
+    val in = batch("a.csv" -> "County,Contest Name,Total Votes\n")
+    assert(IngestJob.run(spark, in, store(), ContestSchema.precinct,
+      overrides = Seq("election_date" -> "11/06/2012")) === 0L)
+  }
+
+  test("batch with no contest-name column lands; district extraction is skipped") {
+    val header = "County,Precinct,Total Votes"
+    assert(!FuzzyMatch.mapColumns(ContestSchema.precinctColumns, header.split(",").toSeq)
+      .contains("contest_name"))
+    val out = store()
+    val n = IngestJob.run(spark, batch("a.csv" -> s"$header\nWAKE,P1,5\n"), out,
+      ContestSchema.precinct, overrides = Seq("election_date" -> "11/06/2012"))
+    assert(n === 1L)
+    val row = spark.read.parquet(out).head()
+    assert(row.getAs[String]("county") === "WAKE")
+    assert(row.isNullAt(row.fieldIndex("contest_name")) && row.isNullAt(row.fieldIndex("district")))
+  }
+
+  test("counts that never arrive fail within the bound instead of hanging") {
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      IngestJob.awaitObserved(Observation("never_filled"), 200.millis)
+    }
+    assert(e.getMessage.contains("never_filled"))
+    assert(System.nanoTime() - t0 < 10.seconds.toNanos)
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Date
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Observation, Row}
 import graft.ingest.{RawReader, Sniffer}
 import graft.ops.{Normalize, SchemaAlign}
 import graft.schema.ContestSchema
@@ -75,5 +76,36 @@ class IngestSpec extends SparkSpec {
     assert(rows === Set(
       ("US HOUSE OF REPRESENTATIVES ", " 4", "Jane Doe", 1234L),
       ("US SENATE", null, "John Roe", null)))
+  }
+
+  test("U1 cast table: string cells store what the inference path stored") {
+    // (target column, raw cell, stored value, counted as malformed)
+    val cases = Seq[(String, String, Any, Boolean)](
+      ("total_votes", "5", 5L, false),
+      ("total_votes", " 6 ", 6L, false),
+      ("total_votes", "1.0", 1L, false),
+      ("total_votes", "5#", null, true),
+      ("total_votes", "Not Found", null, false),
+      ("is_partisan", "True", true, false),
+      ("is_partisan", "yes", true, false),
+      ("candidacy_date", "2012-11-06", Date.valueOf("2012-11-06"), false),
+      ("candidacy_date", "2012-11-06 00:00:00", Date.valueOf("2012-11-06"), false),
+      ("candidacy_date", "11/06/2012", null, true))
+    val targets = cases.map(_._1).distinct
+    // one line per case: its cell under its column, the others empty (null)
+    val dir = Files.createTempDirectory("graft_casts")
+    Files.writeString(dir.resolve("cases.csv"), ("county" +: targets).mkString(",") + "\n" +
+      cases.zipWithIndex.map { case ((t, raw, _, _), i) =>
+        (s"case$i" +: targets.map(c => if (c == t) raw else "")).mkString(",")
+      }.mkString("\n") + "\n")
+    val obs = Observation("cast_table")
+    val stored = SchemaAlign.observed(RawReader.readDir(spark, dir.toString), ContestSchema.precinct, obs)
+      .collect().map(r => r.getAs[String]("county") -> r).toMap
+    cases.zipWithIndex.foreach { case ((t, raw, want, _), i) =>
+      assert(stored(s"case$i").getAs[Any](t) === want, s"$t <- '$raw'")
+    }
+    val counts = graft.IngestJob.awaitObserved(obs, graft.IngestJob.ObservedTimeout)
+    assert(counts("rows") === cases.size.toLong)
+    targets.foreach(t => assert(counts(t) === cases.count(c => c._1 == t && c._4).toLong, t))
   }
 }

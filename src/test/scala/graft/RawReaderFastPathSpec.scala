@@ -5,8 +5,18 @@ import java.nio.file.Files
 import graft.ingest.RawReader
 import graft.ops.Normalize
 
-/** RawReader's single-scan fast path + Normalize date fallback. */
+/** RawReader's single-scan fast path, header naming, file listing and
+  * job-free read + Normalize date fallback. */
 class RawReaderFastPathSpec extends SparkSpec {
+
+  private def dirOf(files: (String, String)*): String = {
+    val dir = Files.createTempDirectory("graft_raw")
+    files.foreach { case (n, c) => Files.writeString(dir.resolve(n), c) }
+    dir.toString
+  }
+
+  private def isSingleScan(df: org.apache.spark.sql.DataFrame): Boolean =
+    !df.queryExecution.executedPlan.toString.contains("Union")
 
   test("S5 fast path: same delimiter + same header → one distributed scan") {
     val dir = Files.createTempDirectory("graft_fast").toFile
@@ -28,5 +38,57 @@ class RawReaderFastPathSpec extends SparkSpec {
     // garbage constant → null, not an ANSI error
     val out2 = Normalize(df, Seq("src" -> "a", "not a date" -> "election_date"))
     assert(out2.select("election_date").head().isNullAt(0))
+  }
+
+  test("header names: CSV tokenizer + Spark's safe-header rule, as inference names them") {
+    // a quoted name holding the separator, a case-insensitive duplicate,
+    // an empty name, CRLF line ends
+    val dir = dirOf("a.csv" ->
+      "\"Contest, Name\",County,county,,Total Votes\r\nUS SENATE,WAKE,wake,x,5\r\nGOVERNOR,DURHAM,durham,y,7\r\n")
+    val df = RawReader.readDir(spark, dir)
+    assert(df.columns.toSeq === Seq("Contest, Name", "County1", "county2", "_c3", "Total Votes"))
+    val inferred = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
+    assert(df.columns.toSeq === inferred.columns.toSeq)
+    assert(df.collect().map(_.getString(4)).toSet === Set("5", "7")) // no CR kept
+    assert(df.schema.fields.forall(_.dataType == org.apache.spark.sql.types.StringType))
+  }
+
+  test("listing: hidden, underscore-prefixed and zero-byte files are skipped like Spark's scan") {
+    val dir = dirOf(
+      "a.csv" -> "x,y\n1,2\n",
+      "b.csv" -> "x,y\n3,4\n",
+      "_SUCCESS.csv" -> "",
+      "_committed.csv" -> "q\n9\n",
+      ".hidden.csv" -> "q,r\n9,9\n",
+      "empty.csv" -> "")
+    val df = RawReader.readDir(spark, dir)
+    assert(isSingleScan(df))
+    assert(df.columns.toSeq === Seq("x", "y"))
+    assert(df.count() === 2)
+  }
+
+  test("a header-only file still contributes its columns") {
+    val df = RawReader.readDir(spark, dirOf("a.csv" -> "x,y\n1,2\n", "b.csv" -> "x,y,z\n"))
+    assert(df.columns.toSet === Set("x", "y", "z"))
+    assert(df.collect().toSeq.map(r => (r.getAs[String]("x"), r.getAs[String]("z"))) === Seq(("1", null)))
+  }
+
+  test("readDir runs no Spark job on the single-scan or the union path") {
+    val single = dirOf("a.csv" -> "x,y\n1,2\n", "b.csv" -> "x,y\n3,4\n")
+    val union = dirOf("a.csv" -> "x,y\n1,2\n", "b.tsv" -> "y\tx\n3\t4\n")
+    val sc = spark.sparkContext
+    val group = "graft_rawreader_jobs"
+    sc.setJobGroup(group, "readDir")
+    try {
+      assert(isSingleScan(RawReader.readDir(spark, single)))
+      assert(!isSingleScan(RawReader.readDir(spark, union)))
+      sc.parallelize(Seq(1), 1).count() // a sentinel: its job is the group's only one
+    } finally sc.clearJobGroup()
+    // job events arrive in order, so once the sentinel shows, any job
+    // the reads started shows too
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def jobs = sc.statusTracker.getJobIdsForGroup(group)
+    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(jobs.length === 1)
   }
 }
