@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Spark mapping:
   *  - every file is read with an explicit all-`StringType` schema named
-  *    from its own header, read on the driver (first non-blank line,
+  *    from its own header, which is read locally (first non-blank line,
   *    tokenized like Spark's CSV reader). A read therefore runs no Spark
   *    job: no header job, no schema-inference pass. Typing happens once,
   *    later, in [[graft.ops.SchemaAlign]]'s cast to the grand schema,
@@ -93,7 +93,7 @@ object RawReader {
   /** Glob + per-file sniff + union-by-name, like the reference loop.
     * Fast-paths to a single multi-file scan when all seps agree and
     * headers match — decided from the header line of each file
-    * (driver-side, metadata cost). A file with no header line holds no
+    * (metadata cost, no Spark job). A file with no header line holds no
     * rows and adds no columns. */
   def readDir(spark: SparkSession, dir: String): DataFrame = {
     val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis

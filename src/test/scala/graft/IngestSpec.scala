@@ -104,7 +104,7 @@ class IngestSpec extends SparkSpec {
     cases.zipWithIndex.foreach { case ((t, raw, want, _), i) =>
       assert(stored(s"case$i").getAs[Any](t) === want, s"$t <- '$raw'")
     }
-    val counts = graft.IngestJob.awaitObserved(obs, graft.IngestJob.ObservedTimeout)
+    val counts = IngestJob.awaitObserved(obs, IngestJob.ObservedTimeout)
     assert(counts("rows") === cases.size.toLong)
     targets.foreach(t => assert(counts(t) === cases.count(c => c._1 == t && c._4).toLong, t))
   }

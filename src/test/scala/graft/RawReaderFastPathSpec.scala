@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StringType
+
 import graft.ingest.RawReader
 import graft.ops.Normalize
 
@@ -15,7 +18,7 @@ class RawReaderFastPathSpec extends SparkSpec {
     dir.toString
   }
 
-  private def isSingleScan(df: org.apache.spark.sql.DataFrame): Boolean =
+  private def isSingleScan(df: DataFrame): Boolean =
     !df.queryExecution.executedPlan.toString.contains("Union")
 
   test("S5 fast path: same delimiter + same header → one distributed scan") {
@@ -50,7 +53,7 @@ class RawReaderFastPathSpec extends SparkSpec {
     val inferred = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
     assert(df.columns.toSeq === inferred.columns.toSeq)
     assert(df.collect().map(_.getString(4)).toSet === Set("5", "7")) // no CR kept
-    assert(df.schema.fields.forall(_.dataType == org.apache.spark.sql.types.StringType))
+    assert(df.schema.fields.forall(_.dataType == StringType))
   }
 
   test("listing: hidden, underscore-prefixed and zero-byte files are skipped like Spark's scan") {
