@@ -5,7 +5,7 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.RawReader
@@ -62,12 +62,13 @@ object IngestJob {
   def main(args: Array[String]): Unit = {
     val (inDir, outPath, schema, overrides) = parseArgs(args)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
+    // the session the engine's benchmarks run: Graft's extensions and
+    // configs, and the scan split sizes graft.Bench and perfbench set
+    val spark = Graft.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try println(s"[ingest] $inDir -> $outPath: ${ingest(spark, inDir, outPath, schema, overrides)}")
@@ -91,19 +92,25 @@ object IngestJob {
     }.toMap
   }
 
-  /** overrides: canonical → sourceColumnOrConstant (wins over fuzzy). */
-  def ingest(spark: SparkSession, inDir: String, outPath: String, schema: StructType,
-      overrides: Seq[(String, String)] = Nil): IngestReport = {
+  /** The batch in `inDir` as grand-schema rows, with `obs` filled by the
+    * pass that consumes them. overrides: canonical →
+    * sourceColumnOrConstant (wins over fuzzy). */
+  private[graft] def aligned(spark: SparkSession, inDir: String, schema: StructType,
+      overrides: Seq[(String, String)], obs: Observation): DataFrame = {
     val raw = RawReader.readDir(spark, inDir)
     // T3 fuzzy pass (canonical → source), then explicit overrides win
     val merged = FuzzyMatch.mapColumns(schema.fieldNames.toSeq, raw.columns.toSeq) ++
       overrides.toMap
     // Normalize expects (sourceOrConstant → canonical), in schema order
     val mapping = schema.fieldNames.toSeq.flatMap(c => merged.get(c).map(_ -> c))
-    val normalized = Normalize(raw, mapping)
-    val extracted = DistrictExtract.withGate(normalized)
+    SchemaAlign.observed(DistrictExtract.withGate(Normalize(raw, mapping)), schema, obs)
+  }
+
+  /** overrides: canonical → sourceColumnOrConstant (wins over fuzzy). */
+  def ingest(spark: SparkSession, inDir: String, outPath: String, schema: StructType,
+      overrides: Seq[(String, String)] = Nil): IngestReport = {
     val obs = Observation("ingest")
-    SchemaAlign.observed(extracted, schema, obs).write
+    aligned(spark, inDir, schema, overrides, obs).write
       .mode("append")
       .partitionBy("election_date")
       .parquet(outPath)

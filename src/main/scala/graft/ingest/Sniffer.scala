@@ -1,7 +1,8 @@
 package graft.ingest
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** S3 — delimiter inference (/root/reference/ingestor_precinct.py:27-31:
   * `csv.Sniffer().sniff(first line)`).
@@ -22,9 +23,15 @@ object Sniffer {
     if (line.count(_ == best) == 0) "," else best.toString
   }
 
-  def sniffFile(path: String): String = {
-    val reader = Files.newBufferedReader(Paths.get(path))
-    try sniffLine(Option(reader.readLine()).getOrElse(""))
+  /** The first non-blank line, as Spark's CSV reader takes the header:
+    * decoded as UTF-8 with U+FFFD for invalid bytes, as Spark decodes it
+    * (a strict decoder would fail the whole batch on one stray byte). */
+  def headerLine(path: String): Option[String] = {
+    val reader = new BufferedReader(
+      new InputStreamReader(Files.newInputStream(Paths.get(path)), StandardCharsets.UTF_8))
+    try Iterator.continually(reader.readLine()).takeWhile(_ != null).find(_.trim.nonEmpty)
     finally reader.close()
   }
+
+  def sniffFile(path: String): String = sniffLine(headerLine(path).getOrElse(""))
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StringType
 
-import graft.ingest.RawReader
+import graft.ingest.{RawReader, Sniffer}
 import graft.ops.Normalize
 
 /** RawReader's single-scan fast path, header naming, file listing and
@@ -54,6 +54,27 @@ class RawReaderFastPathSpec extends SparkSpec {
     assert(df.columns.toSeq === inferred.columns.toSeq)
     assert(df.collect().map(_.getString(4)).toSet === Set("5", "7")) // no CR kept
     assert(df.schema.fields.forall(_.dataType == StringType))
+  }
+
+  test("a non-UTF-8 header byte is read as U+FFFD, as Spark reads it, on both paths") {
+    def dirOfBytes(files: (String, String)*): String = {
+      val dir = Files.createTempDirectory("graft_raw_bytes")
+      files.foreach { case (n, c) => Files.write(dir.resolve(n), c.getBytes("ISO-8859-1")) }
+      dir.toString
+    }
+    val single = dirOfBytes("a.csv" -> "N\u00famero,County\n5,WAKE\n", "b.csv" -> "N\u00famero,County\n7,DURHAM\n")
+    val df = RawReader.readDir(spark, single)
+    assert(isSingleScan(df))
+    assert(df.columns.toSeq === Seq("N\uFFFDmero", "County"))
+    assert(df.columns.toSeq === spark.read.option("header", "true").csv(single).columns.toSeq)
+    assert(df.count() === 2)
+    val union = dirOfBytes("a.csv" -> "N\u00famero,County\n5,WAKE\n", "b.tsv" -> "\n \nCounty\tN\u00famero\nDURHAM\t7\n")
+    val u = RawReader.readDir(spark, union)
+    assert(!isSingleScan(u))
+    assert(u.columns.toSeq === Seq("N\uFFFDmero", "County"))
+    assert(u.collect().map(r => (r.getString(0), r.getString(1))).toSet === Set(("5", "WAKE"), ("7", "DURHAM")))
+    // the sniffer takes the same line: the first non-blank one
+    assert(Sniffer.sniffFile(s"$union/b.tsv") === "\t")
   }
 
   test("listing: hidden, underscore-prefixed and zero-byte files are skipped like Spark's scan") {
