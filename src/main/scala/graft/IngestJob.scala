@@ -62,13 +62,10 @@ object IngestJob {
   def main(args: Array[String]): Unit = {
     val (inDir, outPath, schema, overrides) = parseArgs(args)
 
-    // the session the engine's benchmarks run: Graft's extensions and
-    // configs, and the scan split sizes graft.Bench and perfbench set
+    // the session the engine's benchmarks run: Graft's extensions and configs
     val spark = Graft.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try println(s"[ingest] $inDir -> $outPath: ${ingest(spark, inDir, outPath, schema, overrides)}")

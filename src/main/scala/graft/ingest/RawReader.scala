@@ -23,20 +23,20 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    whose target types the reference also fixes up front (:192-218);
   *  - same-delimiter, same-header directories: ONE distributed
   *    `spark.read.csv(dir)` call (splittable, parallel by file/block);
-  *  - mixed delimiters / differing headers: the files are grouped by
-  *    (delimiter, header), each group is one multi-path scan, and the
-  *    groups are unioned. Every file is all-string, so the union never
-  *    coerces one file's values to another file's type.
+  *  - mixed delimiters / differing headers: every file is its own
+  *    single-path scan and the scans are unioned. Every file is
+  *    all-string, so the union never coerces one file's values to
+  *    another file's type.
   *
   * The union path keeps what consumes it out of the per-file plans.
   * Catalyst's `PushProjectionThroughUnion` copies any deterministic
   * projection that sits on a `Union` into every child, where it is bound
   * to that child's own column order: the fuzzy map, the district regexes
   * and the casts above would be generated and compiled anew for every
-  * group of every batch, on the driver and again in the tasks. So:
-  *  - each group is projected to one layout that does not depend on
+  * file of every batch, on the driver and again in the tasks. So:
+  *  - each file is projected to one layout that does not depend on
   *    file order: the batch's column set, sorted, with a typed string
-  *    null where the group lacks a column. A group's plan is then only
+  *    null where the file lacks a column. A file's plan is then only
   *    its scan and that projection;
   *  - a no-shuffle `coalesce(Int.MaxValue)` sits on the union. It is a
   *    barrier the projection is not pushed through, starts no job, and,
@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *    case-insensitively unless the session is case-sensitive). It
   *    collapses into the projection above the barrier, whose generated
   *    code is then the same for every batch with the same column set
-  *    and number of groups: the first such batch of a session compiles
+  *    and number of files: the first such batch of a session compiles
   *    it, the later ones reuse it.
   *
   * The files read are the ones Spark's own scan of the directory lists:
@@ -97,21 +97,21 @@ object RawReader {
     }
   }
 
-  private def read(spark: SparkSession, paths: Seq[String], sep: String, names: Seq[String]): DataFrame =
+  private def read(spark: SparkSession, path: String, sep: String, names: Seq[String]): DataFrame =
     spark.read
       .schema(StructType(names.map(StructField(_, StringType))))
       .option("header", "true")
       .option("sep", sep)
       .option("nullValue", NullToken)
-      .csv(paths: _*)
+      .csv(path)
 
   private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** Glob + per-file sniff + union-by-name, like the reference loop.
     * Fast-paths to a single multi-file scan when all seps agree and
     * headers match — decided from the header line of each file
-    * (metadata cost, no Spark job); otherwise one scan per (sep, header)
-    * group, unioned below a barrier (see above). A file with no header
+    * (metadata cost, no Spark job); otherwise one scan per file,
+    * unioned below a barrier (see above). A file with no header
     * line holds no rows and adds no columns. */
   def readDir(spark: SparkSession, dir: String): DataFrame = {
     val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
@@ -122,22 +122,18 @@ object RawReader {
       }
     }
     require(files.nonEmpty, s"no input files in $dir")
-    val groups = files.map(f => (f._2, f._3)).distinct
-    if (groups.length == 1) read(spark, Seq(dir), files.head._2, files.head._3) // one distributed scan
+    if (files.map(_._2).distinct.length == 1 && files.map(_._3).distinct.length == 1)
+      read(spark, dir, files.head._2, files.head._3) // one distributed scan
     else {
       def key(n: String) = if (caseSensitive) n else n.toLowerCase(Locale.ROOT)
       // unionByName's columns: first-appearance order and spelling
       val columns = files.flatMap(_._3).distinctBy(key)
       val spelling = columns.map(n => key(n) -> n).toMap
       val layout = columns.sortBy(key)
-      // more paths than this in one read would list them with a Spark job
-      val perScan = math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-      val scans = groups.flatMap { case g @ (sep, names) =>
+      val scans = files.map { case (path, sep, names) =>
         val have = names.map(key).toSet
-        val toLayout = layout.map(n => if (have(key(n))) col(quoted(n)) else lit(null).cast(StringType).as(n))
-        files.filter(f => (f._2, f._3) == g).map(_._1).grouped(perScan).map { paths =>
-          read(spark, paths, sep, names.map(n => spelling(key(n)))).select(toLayout: _*)
-        }
+        read(spark, path, sep, names.map(n => spelling(key(n))))
+          .select(layout.map(n => if (have(key(n))) col(quoted(n)) else lit(null).cast(StringType).as(n)): _*)
       }
       scans.reduce(_.union(_)).coalesce(Int.MaxValue).select(columns.map(n => col(quoted(n))): _*)
     }

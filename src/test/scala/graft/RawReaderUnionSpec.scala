@@ -10,9 +10,9 @@ import graft.ingest.{RawReader, Sniffer}
 import graft.ops.FuzzyMatch
 import graft.schema.ContestSchema
 
-/** RawReader's union path: files grouped by (delimiter, header), one
-  * file-order-free column layout per group, and a barrier that keeps the
-  * map/cast projection above the union. */
+/** RawReader's union path: one scan per file, each projected to one
+  * file-order-free column layout, and a barrier that keeps the map/cast
+  * projection above the union. */
 class RawReaderUnionSpec extends SparkSpec {
 
   private def dirOf(files: (String, String)*): String = {
@@ -21,8 +21,8 @@ class RawReaderUnionSpec extends SparkSpec {
     dir.toString
   }
 
-  /** What the union path returned before it grouped files: one read per
-    * file, unioned by name. */
+  /** What the union path returned before the column layout and the
+    * barrier: one inferred read per file, unioned by name. */
   private def perFileUnion(dir: String): DataFrame =
     new java.io.File(dir).listFiles().map(_.getPath).sorted.toSeq.map { f =>
       spark.read.option("header", "true").option("sep", Sniffer.sniffFile(f))
@@ -42,8 +42,6 @@ class RawReaderUnionSpec extends SparkSpec {
     val before = perFileUnion(dir)
     assert(df.columns.toSeq === before.columns.toSeq)
     assert(rows(df) === rows(before))
-    // a.csv and d.csv share a delimiter and a header: one scan of both
-    assert(df.queryExecution.analyzed.collectLeaves().size === 3)
   }
 
   test("union path: a fuzzy-map tie resolves to the first-appearing column") {
@@ -81,31 +79,6 @@ class RawReaderUnionSpec extends SparkSpec {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (stages.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
     assert(stages.flatMap(tracker.getStageInfo).map(_.numTasks) === Seq(unionParts))
-  }
-
-  test("union path: a group of more files than one read lists without a job still runs none") {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val dir = dirOf("a.csv" -> "x,y\n1,2\n", "b.csv" -> "x,y\n3,4\n", "c.csv" -> "x,y\n5,6\n",
-      "d.tsv" -> "y\tx\n7\t8\n")
-    val sc = spark.sparkContext
-    val group = "graft_union_listing"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "2")
-    sc.setJobGroup(group, "readDir")
-    val df = try {
-      val d = RawReader.readDir(spark, dir)
-      sc.parallelize(Seq(1), 1).count() // a sentinel: its job is the group's only one
-      d
-    } finally {
-      sc.clearJobGroup()
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    def jobs = sc.statusTracker.getJobIdsForGroup(group)
-    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(jobs.length === 1)
-    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSet ===
-      Set(("1", "2"), ("3", "4"), ("5", "6"), ("8", "7")))
   }
 
   /** The nodes of one whole-stage-codegen stage, not those of the stages
