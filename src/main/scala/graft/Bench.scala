@@ -137,15 +137,21 @@ object Bench {
     // failure's (typically short) duration must not masquerade as a
     // fast success — and a pass-then-fail query is surfaced in the
     // `flaky` list rather than silently reported green on run 1 alone.
+    // A query whose steady runs call a fixture memo's `get` reads a
+    // memoized fixture: the cold pass below re-times exactly those.
+    val touched = Seq.newBuilder[String]
     val results = SparkEntry.queries.map { case (name, fn) =>
+      val gets0 = Scratch.FixtureMemo.gets
       val (dt1, ok1) = once(name, fn)
       val (dt, flaky) =
         if (ok1) {
           val (dt2, ok2) = once(name, fn)
           if (ok2) (math.min(dt1, dt2), false) else (dt1, true)
         } else (dt1, false)
+      if (Scratch.FixtureMemo.gets != gets0) touched += name
       (name, dt, ok1, flaky)
     }
+    val memoizedQueries = touched.result().sorted
     // Cold-accounting pass (round-7, per ADVICE r6): the memoized
     // pair-set consumers' steady-state numbers above are checkpoint-scan
     // timings — run 1 of the first consumer pays the LSH/shingle/simhash
@@ -163,7 +169,7 @@ object Bench {
     // on a quiet host (measured 361 vs 292 ms at sf0.001).
     System.gc(); Thread.sleep(200)
     val probeMidN = hostProbe(nThreads)
-    val coldResults = SparkEntry.memoizedQueries.toSeq.sorted.map { name =>
+    val coldResults = memoizedQueries.map { name =>
       SparkEntry.invalidateMemos()
       val (dt, ok) = once(name, SparkEntry.queries(name))
       (name, dt, ok)
@@ -220,13 +226,12 @@ object Bench {
       s""""probe_disagree":$probeDisagree,"uniform_inflation":$uniformInflation,""" +
       s""""contended":$contended"""
     val fullQs = allEntries.map(_._1).mkString("{", ",", "}")
-    val memoized = SparkEntry.memoizedQueries.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val memoizedJson = memoizedQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
     val coldQs = coldResults
       .map { case (k, v, ok) => "\"" + k + "\":" + (if (ok) fmt(v) else "-1.0") }
       .mkString("{", ",", "}")
     val coldTotal = coldResults.collect { case (_, v, true) => v }.sum
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"host_probe_1t_ms":$probe1,"host_probe_nt_ms":$probeN,$adjudication,"queries":$fullQs,"memoized":$memoized,"cold_queries":$coldQs,"cold_total":${fmt(coldTotal)},"errors":$errors,"flaky":$flaky,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"host_probe_1t_ms":$probe1,"host_probe_nt_ms":$probeN,$adjudication,"queries":$fullQs,"memoized":$memoizedJson,"cold_queries":$coldQs,"cold_total":${fmt(coldTotal)},"errors":$errors,"flaky":$flaky,"sf":"$sfDir"}"""
     // Complete per-query detail goes to a file; the harness that captures
     // stdout keeps only the last ~2000 characters, so the printed line is
     // size-bounded: slowest queries first, greedily packed to the budget.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped scratch directories for queries that materialize
   * intermediate layouts (streaming landings/checkpoints, lake-table
@@ -39,12 +39,10 @@ object Scratch {
     * slot's own lock, NOT inside `ConcurrentHashMap.computeIfAbsent`
     * — concurrent first calls whose keys collide on a map bin never
     * serialize behind each other's build, and a re-entrant build
-    * (one fixture consuming another through the same map) cannot
-    * deadlock on the bin lock. Same discipline as the x2 pair-set
-    * memos ([[graft.ext.Dedup]]); shared here so every fixture family
-    * (lake history, BPE training, stream source layouts) uses one
-    * audited implementation. */
-  final class Slot[T <: AnyRef](build: () => T) {
+    * (one fixture consuming another, e.g. the CC cluster map over the
+    * minhash pair set) cannot deadlock on the bin lock. Private:
+    * fixtures memoize through [[FixtureMemo]] only. */
+  private final class Slot[T <: AnyRef](build: () => T) {
     @volatile private var cached: T = _
     def get: T = {
       val c = cached
@@ -56,42 +54,89 @@ object Scratch {
     def peek: Option[T] = Option(cached)
   }
 
-  /** Generic landed-fixture memo: one [[Slot]] per (session, sfDir,
-    * input fingerprint) — the disclosed-memo policy every shared
-    * fixture family follows (BASELINE.md). A stale-fingerprint entry
-    * (the testdata under an already-memoized path was rewritten) is
-    * evicted WITH its teardown before the fresh build, and
-    * [[FixtureMemo.invalidate]] is the single switch Bench's
-    * cold-accounting pass flips: steady-state timings price the
-    * consumer of the landed fixture, `cold_queries` re-prices the
-    * full lifecycle. Factored in round 13 so the five write-lifecycle
-    * queries (VERDICT r12 #1) share one audited implementation with
-    * the lake-history/stat-table memos instead of a sixth copy of the
-    * eviction dance. */
-  final class FixtureMemo[T <: AnyRef](input: String => String,
-      teardown: T => Unit) {
-    private val m = new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), Slot[T]]()
-    def get(spark: SparkSession, sfDir: String)(build: () => T): T = {
-      val fp = fingerprint(input(sfDir))
+  /** Landed-fixture memo: one [[Slot]] per (session, sfDir, tag, input
+    * fingerprint) — the disclosed-memo policy every shared fixture
+    * family follows (BASELINE.md). `tag` tells apart the fixtures one
+    * memo lands under the same (session, sfDir): the streaming
+    * landing kind, the chronological source asset, the dedup
+    * pipeline. The fingerprint covers every input path the caller
+    * names, so rewritten testdata self-invalidates: a stale entry of
+    * the same (session, sfDir, tag) is evicted WITH its teardown
+    * before the fresh build.
+    *
+    * Every instance registers itself in the companion on
+    * construction, and [[FixtureMemo.invalidateAll]] tears down every
+    * live slot of every memo — the single switch Bench's cold pass
+    * flips ([[graft.SparkEntry.invalidateMemos]]): steady-state
+    * timings price the consumer of the landed fixture, `cold_queries`
+    * re-prices the full lifecycle. This is the only fixture-memo
+    * mechanism; `FixtureMemoSpec` fails on a hand-rolled map of
+    * slots anywhere else. */
+  final class FixtureMemo[T <: AnyRef](teardown: T => Unit) {
+    private type Key = (SparkSession, String, String, String)
+    private val m = new java.util.concurrent.ConcurrentHashMap[Key, Slot[T]]()
+    FixtureMemo.all.add(this)
+
+    def get(spark: SparkSession, sfDir: String, inputs: Seq[String],
+        tag: String = "")(build: () => T): T = {
+      FixtureMemo.touches.incrementAndGet()
+      val fp = inputs.map(fingerprint).mkString("|")
       import scala.jdk.CollectionConverters._
       m.keySet.asScala
-        .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-        .foreach(k => Option(m.remove(k)).foreach(_.peek.foreach(teardown)))
-      m.computeIfAbsent((spark, sfDir, fp), _ => new Slot(build)).get
+        .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 == tag && k._4 != fp)
+        .foreach(drop)
+      m.computeIfAbsent((spark, sfDir, tag, fp), _ => new Slot(build)).get
     }
-    def invalidate(): Unit = {
+
+    /** Remove one slot; its teardown runs only if it was built, and
+      * only for the caller whose `remove` won. */
+    private def drop(k: Key): Unit =
+      Option(m.remove(k)).foreach(_.peek.foreach(teardown))
+
+    private[graft] def invalidate(): Unit = {
       import scala.jdk.CollectionConverters._
-      m.values.asScala.foreach(_.peek.foreach(teardown))
-      m.clear()
+      m.keySet.asScala.foreach(drop)
     }
+
+    private[graft] def isEmpty: Boolean = m.isEmpty
   }
+
+  object FixtureMemo {
+    private val all =
+      new java.util.concurrent.CopyOnWriteArrayList[FixtureMemo[_ <: AnyRef]]()
+    private val touches = new java.util.concurrent.atomic.AtomicLong()
+
+    /** Every memo constructed so far in this JVM. */
+    private[graft] def registered: Seq[FixtureMemo[_ <: AnyRef]] = {
+      import scala.jdk.CollectionConverters._
+      all.asScala.toSeq
+    }
+
+    /** Count of [[FixtureMemo.get]] calls across all memos: a query
+      * whose run moves it read a memoized fixture, which is how Bench
+      * derives the set of queries its cold pass re-times. */
+    def gets: Long = touches.get
+
+    /** Tear down every live slot of every memo, never building one. */
+    def invalidateAll(): Unit = registered.foreach(_.invalidate())
+  }
+
+  /** Drop the checkpoint blocks behind a memoized frame. A
+    * `localCheckpoint` result is a `LogicalRDD` over the persisted
+    * RDD; unpersisting THAT rdd (not the Dataset, whose `unpersist`
+    * only consults the cache manager) frees the executor blocks
+    * immediately instead of waiting for the ContextCleaner's GC-driven
+    * sweep. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
 
   /** Cheap content fingerprint of an asset directory/file (name,
     * length, mtime of every file) — the memo-key component that makes
     * session-scoped fixtures self-invalidate when the data under an
-    * already-memoized path is rewritten. Same device as the x2
-    * pair-set memos ([[graft.ext.Dedup]]). */
+    * already-memoized path is rewritten. */
   def fingerprint(path: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)

@@ -670,66 +670,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (n, f, _) => n -> f }.toMap
 
-  /** Registered queries whose steady-state timing reads a
-    * once-per-session shared fixture: the pair-set/cluster memos
-    * ([[graft.ext.Dedup]]) and the lake three-version history
-    * ([[graft.lake.LakeQueries.sharedHistory]]). Bench re-times each
-    * of these COLD (fixtures invalidated via [[invalidateMemos]]) so
-    * BENCH_FULL.json always carries both accountings. */
-  val memoizedQueries: Set[String] = Set(
-    "x2_minhash_lsh", "x2_retention", "x9_dedup_mix", // minhash pair set
-    "x2_dup_clusters", "x2_canonical", "x2_cc_stats", // CC cluster map (over minhash pairs)
-    "x2_simhash", "x2_edit_verify", "x2_sketch_calibration", // simhash candidate set
-    "x2_ngram_jaccard", "x2_containment", // rare-shingle pair frame
-    "x2_sketch_table", // persisted band index table (build once, delta reads layout)
-    "x8_lake_cdf", "x8_lake_ivm", "x8_lake_meta_count", "x8_lake_sql",
-    "x8_lake_sqlmerge", // landed MERGE INTO lifecycle
-    "x8_lake_agg_push", "x8_lake_runtime_skip", "x8_lake_limit_push",
-    "x8_lake_autobcast", "x8_lake_topn", "x8_lake_topn_multi",
-    "x8_lake_colstats", "x8_lake_colstats4", "x8_lake_topn_col", // stat tables
-    "x8_lake_topn_filter", // same analyzed price-clustered fixture
-    "x8_lake_topn_alias", // aliased sort key over the same fixture
-    "x8_lake_colstats_inc", // analyze → append lifecycle, stat coverage
-    "x8_lake_inlist", // bloom-indexed date-clustered fixture
-    "x8_lake_evolve", // nine-commit evolution lifecycle (r12, disclosed memo)
-    "x8_lake_inlist_str", // string-keyed bloom-indexed corpus fixture
-    // round-13 (VERDICT r12 #1): the five write-lifecycle landings —
-    // steady state prices the landed serve, cold the full protocol
-    "x8_lake_pair", // cross-table atomic commit pair
-    "x8_lake_autocompact", // self-healing small-file lifecycle
-    "x8_lake_vacuum_pin", // vacuum × view-pin lifecycle (view stays registered)
-    "x8_mv_auto", // maintenance-on-commit lifecycle (view stays registered)
-    "x8_mv_auto_coalesce", // 6-commit burst, coalesced async passes
-    "x8_mv_parallel_maint", // gated 3-source burst, overlapped passes
-    "x6_stream_mv_auto", // declare→ingest auto-maintained streaming view
-    "x8_mv_rewrite", "x8_mv_stale", "x8_mv_refresh", // shared MV source hist
-    "x8_mv_append", "x8_mv_rollup", "x8_mv_join", "x8_mv_join_stale",
-    "x8_mv_star", "x8_mv_expr", "x8_mv_expr_stale", "x8_mv_timebucket",
-    "x8_mv_bucket_filter", "x8_mv_dim_churn",
-    "x8_mv_distinct", "x8_mv_distinct_stale", // distinct aux on MV source hist
-    "x8_mv_gsets", // rollup union over the shared 2-d view
-    "x8_mv_window", // window over the shared fresh view
-    "x8_mv_dim_serve", // churned-dim serve on MV source hist
-    "x8_mv_dim_minmax", // extrema over the same churned-dim fixture
-    "x8_mv_star_minmax", // composed extrema over the dim-serve2 fixture
-    "x8_mv_star_minmax_del", // delete-bearing extrema churn fixture
-    "x8_mv_dim_serve2", // 2-dim churn + fact append star serve fixture
-    "x8_mv_distinct_star", // events + churned user-dim distinct star fixture
-    "x8_mv_gsets_time", // bucket rollup over the day-grain view
-    "x8_mv_gsets_distinct", // distinct pyramid over the value-grain aux
-    "x8_mv_maintain", // optimized-table fixture beside the MV source
-    "x8_mv_wau", // daily distinct aux beside the MV source
-
-    "x6_stream_cdf", "x6_stream_medallion", // lake hist
-    "x4_bpe_merges", "x4_bpe_tokens", // BPE train-once memo
-    "x4_hll_table", // persisted HLL register table
-    "x6_stream_tumbling", "x6_stream_lake", "x6_stream_join", // chronological
-    "x6_stream_enrich", "x6_stream_dedup", "x6_stream_session",
-    "x6_stream_join_outer", "x6_stream_attribution",
-    "x6_stream_hll", "x6_stream_recovery",
-    "x6_stream_sink", "x6_stream_mv",
-    "x6_stream_distinct") // multi-file source layout
-
   /** Tear down every session-scoped fixture the memoized queries read
     * — the single switch Bench's cold-accounting pass flips. */
   def invalidateMemos(): Unit = {
@@ -739,31 +679,10 @@ object SparkEntry {
     // the previous build's deleted data files (10 cold-pass errors in
     // the round-14 gate before this).
     graft.lake.MatView.invalidatePlanMemo()
-    graft.ext.Dedup.invalidateMemos()
-    graft.lake.LakeQueries.invalidateHistory()
-    graft.lake.LakeQueries.invalidateMvHistory()
-    graft.lake.LakeQueries.invalidateMvExpr()
-    graft.lake.LakeQueries.invalidateStatTables()
-    graft.lake.LakeQueries.invalidateStatTables4()
-    graft.lake.LakeQueries.invalidateTopNCol()
-    graft.lake.LakeQueries.invalidateEvolve()
-    graft.lake.LakeQueries.invalidateDistinctStar()
-    graft.lake.LakeQueries.invalidateInList()
-    graft.lake.LakeQueries.invalidateDimServe2()
-    graft.lake.LakeQueries.invalidateStarMmDel()
-    graft.lake.LakeQueries.invalidateSqlMerge()
-    graft.lake.LakeQueries.invalidatePair()
-    graft.lake.LakeQueries.invalidateAutoCompact()
-    graft.lake.LakeQueries.invalidateVacPin()
-    graft.lake.LakeQueries.invalidateMvAuto()
-    graft.lake.LakeQueries.invalidateMvCoalesce()
-    graft.lake.LakeQueries.invalidateMvParallel()
-    graft.lake.LakeQueries.invalidateColstatsInc()
-    graft.streaming.EventStream.invalidateMvAuto()
-    graft.ext.Bpe.invalidateLearned()
-    graft.ext.TextStats.invalidateHllRegisters()
-    graft.streaming.StreamSource.invalidate()
-    graft.streaming.StreamMemo.invalidate()
+    Scratch.FixtureMemo.invalidateAll()
+    // the view registrations the MV fixtures recover on their next
+    // build, so the cold pass re-prices the view builds too
+    graft.lake.MatView.clear()
   }
 
   def oracleSql: Map[String, String] =

@@ -88,40 +88,20 @@ object Bpe {
     * it was still reading). The memo owns the final vocab as an
     * eagerly-materialized `localCheckpoint` (the per-iteration persist
     * chain is released inside the build), keyed by the documents
-    * fingerprint like the x2 pair memos; [[invalidateLearned]] frees
-    * the checkpoint blocks — Bench's cold pass uses it to publish
+    * fingerprint like the x2 pair memos; its teardown frees the
+    * checkpoint blocks, so Bench's cold pass publishes
     * training-inclusive timings next to the steady-state ones. */
-  private val learnMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[(Seq[Merge], DataFrame)]]()
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
+  private val learnMemo = new graft.Scratch.FixtureMemo[(Seq[Merge], DataFrame)](
+    v => graft.Scratch.releaseCheckpoint(v._2))
 
   private[graft] def learned(spark: SparkSession,
-      sfDir: String): (Seq[Merge], DataFrame) = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/documents.parquet")
-    import scala.jdk.CollectionConverters._
-    learnMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(learnMemo.remove(k))
-        .foreach(_.peek.foreach(v => releaseCheckpoint(v._2))))
-    learnMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val (merges, vocab) = learn(spark, sfDir)
-        val kept = vocab.localCheckpoint(true)
-        vocab.unpersist()
-        (merges, kept)
-      })).get
-  }
-
-  private[graft] def invalidateLearned(): Unit = {
-    import scala.jdk.CollectionConverters._
-    learnMemo.values.asScala.foreach(_.peek.foreach(v => releaseCheckpoint(v._2)))
-    learnMemo.clear()
-  }
+      sfDir: String): (Seq[Merge], DataFrame) =
+    learnMemo.get(spark, sfDir, Seq(s"$sfDir/documents.parquet")) { () =>
+      val (merges, vocab) = learn(spark, sfDir)
+      val kept = vocab.localCheckpoint(true)
+      vocab.unpersist()
+      (merges, kept)
+    }
 
   /** Registered query `x4_bpe_merges`: the learned merge table —
     * (rank, sym_a, sym_b, pair_count). The driver gate re-derives the

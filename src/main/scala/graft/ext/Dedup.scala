@@ -444,84 +444,20 @@ object Dedup {
     * executor-resident. Plan-shape tests assert on the `*Fresh`
     * builders — the memoized return is a checkpoint scan. Memo keys
     * carry a content fingerprint of the underlying files (rewritten
-    * data invalidates, stale slots are freed), and [[invalidateMemos]]
-    * gives explicit teardown — Bench uses it to publish COLD
-    * (pipeline-inclusive) timings next to the steady-state ones. */
-  /** One memo slot. The expensive Spark build runs inside [[frame]]'s
-    * own lock — NOT inside `ConcurrentHashMap.computeIfAbsent` — so
-    * concurrent first calls whose keys collide on a map bin never
-    * serialize behind each other's materialization job, and a
-    * re-entrant build (one pipeline consuming another's memo through
-    * the same map) cannot deadlock on the map's bin lock. */
-  private final class MemoSlot(build: () => DataFrame) {
-    @volatile private var cached: DataFrame = _
-    def frame: DataFrame = {
-      val c = cached
-      if (c != null) c
-      else synchronized { if (cached == null) cached = build(); cached }
-    }
-    /** The frame if already materialized — never triggers a build
-      * (invalidation must not run the pipeline it is discarding). */
-    def peek: Option[DataFrame] = Option(cached)
-  }
-
-  private type MemoKey = (String, SparkSession, String, String)
+    * data invalidates, stale slots are freed); Bench's cold pass tears
+    * every slot down ([[graft.SparkEntry.invalidateMemos]]) to publish
+    * COLD (pipeline-inclusive) timings next to the steady-state ones.
+    * The pipeline name is the memo tag. */
   private val pairMemo =
-    new java.util.concurrent.ConcurrentHashMap[MemoKey, MemoSlot]()
+    new graft.Scratch.FixtureMemo[DataFrame](graft.Scratch.releaseCheckpoint)
 
-  /** Cheap content fingerprint of the documents asset under `sfDir`
-    * (name, length, mtime of every file): part of the memo key, so a
-    * session that REWRITES the data under an already-memoized path
-    * (mode("overwrite") fixtures, regenerated testdata) gets a fresh
-    * build instead of the stale checkpoint. One local directory
-    * listing per memo access — noise next to a Spark job launch. */
-  private def docsFingerprint(sfDir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(s"$sfDir/documents.parquet")
-    if (!root.exists()) "absent"
-    else walk(root).map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(",")
-  }
-
-  /** Drop the checkpoint blocks behind a memoized frame. A
-    * `localCheckpoint` result is a `LogicalRDD` over the persisted
-    * RDD; unpersisting THAT rdd (not the Dataset, whose `unpersist`
-    * only consults the cache manager) frees the executor blocks
-    * immediately instead of waiting for the ContextCleaner's GC-driven
-    * sweep. */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Clear every memoized pair set and cluster map, releasing their
-    * checkpoint blocks. Used by Bench's cold-accounting pass and by
-    * anyone rewriting data mid-session who wants deterministic (rather
-    * than fingerprint-triggered) invalidation. */
-  def invalidateMemos(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (pairMemo.values.asScala ++ ccMemo.values.asScala).foreach(_.peek.foreach(release))
-    pairMemo.clear()
-    ccMemo.clear()
-    invalidateBandIndex()
-  }
+  private def docsInput(sfDir: String): Seq[String] = Seq(s"$sfDir/documents.parquet")
 
   private def memoizedPairs(key: String, spark: SparkSession, sfDir: String)(
-      build: => DataFrame): DataFrame = {
-    val fp = docsFingerprint(sfDir)
-    // evict (and free) any slot for the same logical key whose data
-    // has since been rewritten — without this, superseded entries
-    // would pin their checkpoint blocks for the JVM lifetime
-    import scala.jdk.CollectionConverters._
-    pairMemo.keySet.asScala
-      .filter(k => k._1 == key && (k._2 eq spark) && k._3 == sfDir && k._4 != fp)
-      .foreach(k => Option(pairMemo.remove(k)).foreach(_.peek.foreach(release)))
-    pairMemo.computeIfAbsent((key, spark, sfDir, fp),
-      _ => new MemoSlot(() => build.localCheckpoint(true))).frame
-  }
+      build: => DataFrame): DataFrame =
+    pairMemo.get(spark, sfDir, docsInput(sfDir), tag = key) { () =>
+      build.localCheckpoint(true)
+    }
 
   private[graft] def minhashNearDupFresh(spark: SparkSession, sfDir: String): DataFrame = {
     // both self-join sides are the same subtree: ReuseExchange / AQE
@@ -647,33 +583,22 @@ object Dedup {
     * docstring above has claimed "runs once per index rebuild" since
     * round 7, but the query was re-paying the build per invocation.
     * Steady state now prices the INCREMENTAL path (delta bands +
-    * bucketed join + verify); Bench's cold pass invalidates the memo
-    * (`x2_sketch_table` rides `memoizedQueries`), so the full
-    * build+persist cost stays published in `cold_queries`. Rewritten
-    * testdata self-invalidates via the fingerprint key. */
-  private val bandIdxMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+    * bucketed join + verify); Bench's cold pass invalidates the memo,
+    * so the full build+persist cost stays published in
+    * `cold_queries`. Rewritten testdata self-invalidates via the
+    * fingerprint key. The teardown is a no-op: the table can stay
+    * registered (the next build REPLACES it — the rebuild is what the
+    * cold number prices); only the slot is dropped. */
+  private val bandIdxMemo = new graft.Scratch.FixtureMemo[String](_ => ())
 
-  private[graft] def bandIndexTable(spark: SparkSession, sfDir: String): String = {
-    val fp = docsFingerprint(sfDir)
-    import scala.jdk.CollectionConverters._
-    bandIdxMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => { bandIdxMemo.remove(k); () })
-    bandIdxMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val table = "graft_band_idx_" +
-          java.lang.Integer.toHexString(sfDir.hashCode).toLowerCase
-        val index = bandedFrame(docs(spark, sfDir).filter(col("doc_id") % 5 =!= 0))
-        graft.sink.Sinks.replaceBucketed(index, table, BandTableBuckets, Seq("band", "bh"))
-        table
-      })).get
-  }
-
-  /** Cold-pass teardown for the band index memo: the table itself can
-    * stay registered (the next build REPLACES it — the rebuild is what
-    * the cold number prices); only the slot is dropped. */
-  private[graft] def invalidateBandIndex(): Unit = bandIdxMemo.clear()
+  private[graft] def bandIndexTable(spark: SparkSession, sfDir: String): String =
+    bandIdxMemo.get(spark, sfDir, docsInput(sfDir)) { () =>
+      val table = "graft_band_idx_" +
+        java.lang.Integer.toHexString(sfDir.hashCode).toLowerCase
+      val index = bandedFrame(docs(spark, sfDir).filter(col("doc_id") % 5 =!= 0))
+      graft.sink.Sinks.replaceBucketed(index, table, BandTableBuckets, Seq("band", "bh"))
+      table
+    }
 
   /** Registered query `x2_sketch_table` — the PRODUCTION sketch-table
     * lifecycle end-to-end, closing VERDICT r6's top item: (1) build
@@ -1304,16 +1229,11 @@ object Dedup {
     * per-query `clearCache()`; the frame is two long columns over the
     * corpus, trivially executor-resident at any SF. */
   private val ccMemo =
-    new java.util.concurrent.ConcurrentHashMap[MemoKey, MemoSlot]()
+    new graft.Scratch.FixtureMemo[DataFrame](graft.Scratch.releaseCheckpoint)
 
-  private[graft] def clusterMap(spark: SparkSession, sfDir: String): DataFrame = {
-    val fp = docsFingerprint(sfDir)
-    import scala.jdk.CollectionConverters._
-    ccMemo.keySet.asScala
-      .filter(k => (k._2 eq spark) && k._3 == sfDir && k._4 != fp)
-      .foreach(k => Option(ccMemo.remove(k)).foreach(_.peek.foreach(release)))
-    ccMemo.computeIfAbsent(("cc", spark, sfDir, fp), _ => new MemoSlot({ () =>
-      // builds OUTSIDE the map lock (MemoSlot), which matters here:
+  private[graft] def clusterMap(spark: SparkSession, sfDir: String): DataFrame =
+    ccMemo.get(spark, sfDir, docsInput(sfDir)) { () =>
+      // builds OUTSIDE the map lock (Scratch.Slot), which matters here:
       // this build re-enters pairMemo via minhashNearDup
       val edges = minhashNearDup(spark, sfDir).select(col("i"), col("j"))
       val labels = connectedComponents(edges)
@@ -1324,8 +1244,7 @@ object Dedup {
         .localCheckpoint(true)
       labels.unpersist()
       all
-    })).frame
-  }
+    }
 
   def dupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val all = clusterMap(spark, sfDir)

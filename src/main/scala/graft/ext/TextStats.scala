@@ -18,17 +18,10 @@ import graft.Tables
 object TextStats {
 
   /** Once-per-(session, sfDir, corpus fingerprint) persisted HLL
-    * register table ([[hllSketchTable]]); Bench's cold pass clears it
-    * via [[invalidateHllRegisters]]. */
-  private val hllRegMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
-
-  private[graft] def invalidateHllRegisters(): Unit = {
-    import scala.jdk.CollectionConverters._
-    hllRegMemo.values.asScala.foreach(_.peek.foreach(d =>
-      graft.Scratch.rm(new java.io.File(d))))
-    hllRegMemo.clear()
-  }
+    * register table ([[hllSketchTable]]); Bench's cold pass deletes
+    * it with every other registered fixture memo. */
+  private val hllRegMemo = new graft.Scratch.FixtureMemo[String](
+    d => graft.Scratch.rm(new java.io.File(d)))
 
   // ---- per-document stats + quality score -------------------------------
 
@@ -1006,17 +999,16 @@ object TextStats {
     // merges against, so steady state prices the INCREMENTAL path
     // (delta sketch + register merge + the exact calibration tail)
     // while Bench's cold pass re-prices the historical build
-    val sketchDir = hllRegMemo.computeIfAbsent(
-      (spark, sfDir, graft.Scratch.fingerprint(s"$sfDir/documents.parquet")),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = new java.io.File(
-          graft.Scratch.dir(spark, "hll-sketch", sfDir), "registers")
-          .getAbsolutePath
-        graft.Scratch.rm(new java.io.File(dir))
-        registers(docs.filter(col("doc_id") % 5 =!= 0))
-          .write.mode("overwrite").parquet(dir)
-        dir
-      })).get
+    val sketchDir = hllRegMemo.get(spark, sfDir,
+        Seq(s"$sfDir/documents.parquet")) { () =>
+      val dir = new java.io.File(
+        graft.Scratch.dir(spark, "hll-sketch", sfDir), "registers")
+        .getAbsolutePath
+      graft.Scratch.rm(new java.io.File(dir))
+      registers(docs.filter(col("doc_id") % 5 =!= 0))
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
     val delta = registers(docs.filter(col("doc_id") % 5 === 0))
     val merged = spark.read.parquet(sketchDir).unionByName(delta)
       .groupBy(col("source"), col("bucket")).agg(max(col("r")).as("r"))

@@ -29,6 +29,16 @@ object LakeQueries {
 
   private def rm(f: java.io.File): Unit = graft.Scratch.rm(f)
 
+  private def rmDirs(dirs: String*): Unit = dirs.foreach(d => rm(new java.io.File(d)))
+
+  /** Delete `dir` and every sibling whose name starts with its name —
+    * the view, dim and aux tables a fixture lands beside its source. */
+  private def rmWithSiblings(dir: String): Unit = {
+    val f = new java.io.File(dir)
+    Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(f.getName)).foreach(rm)
+  }
+
   // ---- shared three-version history fixture -----------------------------
 
   /** The create → upsert → delete history consumed by THREE registered
@@ -45,42 +55,26 @@ object LakeQueries {
     * rollup / metadata count); Bench's cold pass invalidates this memo
     * per query, so the full history-build cost is published alongside
     * (`cold_queries`). The fingerprint key makes rewritten testdata
-    * self-invalidate; [[invalidateHistory]] gives explicit teardown. */
-  private val histMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+    * self-invalidate. */
+  private val histMemo = new graft.Scratch.FixtureMemo[String](rmDirs(_))
 
-  private[graft] def sharedHistory(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    histMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(histMemo.remove(k))
-        .foreach(_.peek.foreach(d => rm(new java.io.File(d)))))
-    histMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-hist"
-        rm(new java.io.File(dir))
-        val orders = Tables.orders(spark, sfDir)
-        Lake.create(orders.filter(col("o_orderkey") % 3 =!= 0), dir, "o_orderkey",
-          targetFiles = 4)
-        val inserts = orders.filter(col("o_orderkey") % 3 === 0)
-        val priceUpdates = orders
-          .filter(col("o_orderkey") % 3 =!= 0 && col("o_orderkey") % 7 === 0)
-          .withColumn("o_totalprice",
-            (col("o_totalprice").cast("decimal(18,2)") * 2).cast("double"))
-        Lake.upsert(spark, dir, inserts.unionByName(priceUpdates))
-        Lake.delete(spark, dir,
-          orders.filter(col("o_orderkey") % 11 === 0).select(col("o_orderkey")))
-        dir
-      })).get
-  }
-
-  /** Tear down every memoized history fixture (Bench's cold pass). */
-  private[graft] def invalidateHistory(): Unit = {
-    import scala.jdk.CollectionConverters._
-    histMemo.values.asScala.foreach(_.peek.foreach(d => rm(new java.io.File(d))))
-    histMemo.clear()
-  }
+  private[graft] def sharedHistory(spark: SparkSession, sfDir: String): String =
+    histMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-hist"
+      rm(new java.io.File(dir))
+      val orders = Tables.orders(spark, sfDir)
+      Lake.create(orders.filter(col("o_orderkey") % 3 =!= 0), dir, "o_orderkey",
+        targetFiles = 4)
+      val inserts = orders.filter(col("o_orderkey") % 3 === 0)
+      val priceUpdates = orders
+        .filter(col("o_orderkey") % 3 =!= 0 && col("o_orderkey") % 7 === 0)
+        .withColumn("o_totalprice",
+          (col("o_totalprice").cast("decimal(18,2)") * 2).cast("double"))
+      Lake.upsert(spark, dir, inserts.unionByName(priceUpdates))
+      Lake.delete(spark, dir,
+        orders.filter(col("o_orderkey") % 11 === 0).select(col("o_orderkey")))
+      dir
+    }
 
   def lakeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = scratchDir(spark, sfDir)
@@ -336,71 +330,45 @@ object LakeQueries {
     * order key — the [[lakeInList]] fixture, built once per (session,
     * sfDir, fingerprint) under the disclosed-memo policy: the IN-list
     * pruning it exists to prove is metadata-only. */
-  private val inListMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+  private val inListMemo = new graft.Scratch.FixtureMemo[String](rmDirs(_))
 
-  private def inListTable(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    inListMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(inListMemo.remove(k))
-        .foreach(_.peek.foreach(d => rm(new java.io.File(d)))))
-    inListMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-inlist"
-        rm(new java.io.File(dir))
-        val orders = Tables.orders(spark, sfDir)
-          .withColumn("o_days",
-            datediff(col("o_orderdate"), lit("1995-01-01")).cast("long"))
-          .drop("o_orderdate")
-        Lake.create(orders, dir, "o_orderkey", targetFiles = 4)
-        Lake.compactWithBloom(spark, dir, "o_days", "o_orderkey",
-          targetFiles = 8)
-        dir
-      })).get
-  }
-
-  private[graft] def invalidateInList(): Unit = {
-    import scala.jdk.CollectionConverters._
-    (inListMemo.values.asScala ++ inListStrMemo.values.asScala)
-      .foreach(_.peek.foreach(d => rm(new java.io.File(d))))
-    inListMemo.clear()
-    inListStrMemo.clear()
-  }
+  private def inListTable(spark: SparkSession, sfDir: String): String =
+    inListMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-inlist"
+      rm(new java.io.File(dir))
+      val orders = Tables.orders(spark, sfDir)
+        .withColumn("o_days",
+          datediff(col("o_orderdate"), lit("1995-01-01")).cast("long"))
+        .drop("o_orderdate")
+      Lake.create(orders, dir, "o_orderkey", targetFiles = 4)
+      Lake.compactWithBloom(spark, dir, "o_days", "o_orderkey",
+        targetFiles = 8)
+      dir
+    }
 
   /** STRING-KEYED corpus table, length-clustered, with a Bloom index
     * over the (scattered) string doc key — the [[lakeInListStr]]
     * fixture, same disclosed-memo policy as [[inListTable]]. */
-  private val inListStrMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+  private val inListStrMemo = new graft.Scratch.FixtureMemo[String](rmDirs(_))
 
-  private def inListStrTable(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/documents.parquet")
-    import scala.jdk.CollectionConverters._
-    inListStrMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(inListStrMemo.remove(k))
-        .foreach(_.peek.foreach(d => rm(new java.io.File(d)))))
-    inListStrMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-inliststr"
-        rm(new java.io.File(dir))
-        val docs = Tables.documents(spark, sfDir)
-          .select(
-            concat(lit("doc-"),
-              lpad(col("doc_id").cast("string"), 8, "0")).as("doc_key"),
-            col("lang"), col("source"), col("n_chars"))
-        Lake.create(docs, dir, "doc_key", targetFiles = 4)
-        // re-cluster by document LENGTH (an ingest-quality layout every
-        // corpus ends up with after bucketing by size): each file now
-        // spans the whole doc_key domain, so key range stats prune
-        // nothing — only the string-hashed membership bits do
-        Lake.compactWithBloom(spark, dir, "n_chars", "doc_key",
-          targetFiles = 8)
-        dir
-      })).get
-  }
+  private def inListStrTable(spark: SparkSession, sfDir: String): String =
+    inListStrMemo.get(spark, sfDir, Seq(s"$sfDir/documents.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-inliststr"
+      rm(new java.io.File(dir))
+      val docs = Tables.documents(spark, sfDir)
+        .select(
+          concat(lit("doc-"),
+            lpad(col("doc_id").cast("string"), 8, "0")).as("doc_key"),
+          col("lang"), col("source"), col("n_chars"))
+      Lake.create(docs, dir, "doc_key", targetFiles = 4)
+      // re-cluster by document LENGTH (an ingest-quality layout every
+      // corpus ends up with after bucketing by size): each file now
+      // spans the whole doc_key domain, so key range stats prune
+      // nothing — only the string-hashed membership bits do
+      Lake.compactWithBloom(spark, dir, "n_chars", "doc_key",
+        targetFiles = 8)
+      dir
+    }
 
   private[graft] val DocProbeIds = Seq(7L, 77L, 177L, 377L, 477L)
   private[graft] def docKeyOf(id: Long): String = f"doc-$id%08d"
@@ -1388,63 +1356,47 @@ object LakeQueries {
     * / widened / re-added columns resolving through column mapping)
     * plus the below-the-ALTERs time-travel pins; Bench's cold pass
     * re-prices the full lifecycle. */
-  private val evolveMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[(String, String)]]()
-
-  private[graft] def invalidateEvolve(): Unit = {
-    import scala.jdk.CollectionConverters._
-    evolveMemo.values.asScala.foreach(_.peek.foreach { case (_, dir) =>
-      rm(new java.io.File(dir))
-    })
-    evolveMemo.clear()
-  }
+  private val evolveMemo = new graft.Scratch.FixtureMemo[(String, String)](
+    t => rmDirs(t._2))
 
   /** Land the nine-commit evolution lifecycle; returns (catalog table
     * name, table dir). */
-  private def evolveTable(spark: SparkSession, sfDir: String): (String, String) = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    evolveMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(evolveMemo.remove(k))
-        .foreach(_.peek.foreach { case (_, dir) => rm(new java.io.File(dir)) }))
-    evolveMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val wh = new java.io.File(graft.Scratch.root,
-          s"graft-lakecat-${spark.sparkContext.applicationId}")
-        wh.mkdirs()
-        spark.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sources.LakeCatalog].getName)
-        spark.conf.set("spark.sql.catalog.graft.warehouse", wh.getAbsolutePath)
-        val ns = "sf" + java.lang.Integer.toHexString(sfDir.hashCode)
-        val t = s"graft.$ns.orders_evolve"
-        spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        Tables.orders(spark, sfDir).createOrReplaceTempView("orders_src_evolve")
-        spark.sql(
-          s"""CREATE TABLE $t TBLPROPERTIES ('key'='o_orderkey')
-             |AS SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
-             |  CAST(o_orderkey % 100 AS INT) AS small_i
-             |FROM orders_src_evolve WHERE o_orderkey % 2 = 1""".stripMargin)
-        spark.sql(s"ALTER TABLE $t ADD COLUMNS (margin_cents BIGINT)")
-        spark.sql(
-          s"""INSERT INTO $t
-             |SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
-             |  CAST(o_orderkey % 100 AS INT),
-             |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-             |FROM orders_src_evolve WHERE o_orderkey % 2 = 0""".stripMargin)
-        spark.sql(s"ALTER TABLE $t RENAME COLUMN o_orderpriority TO prio")
-        spark.sql(s"ALTER TABLE $t ALTER COLUMN small_i TYPE BIGINT")
-        spark.sql(s"ALTER TABLE $t DROP COLUMN o_custkey")
-        spark.sql(s"ALTER TABLE $t ADD COLUMNS (o_custkey BIGINT)")
-        spark.sql(
-          s"""INSERT INTO $t VALUES
-             |  (900000001, '5-LOW', 111.0, 1, 11100, 42),
-             |  (900000002, '5-LOW', 222.0, 2, 22200, 42),
-             |  (900000003, '1-URGENT', 333.0, 3, 33300, 42)""".stripMargin)
-        (t, s"${wh.getAbsolutePath}/$ns/orders_evolve")
-      })).get
-  }
+  private def evolveTable(spark: SparkSession, sfDir: String): (String, String) =
+    evolveMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val wh = new java.io.File(graft.Scratch.root,
+        s"graft-lakecat-${spark.sparkContext.applicationId}")
+      wh.mkdirs()
+      spark.conf.set("spark.sql.catalog.graft",
+        classOf[graft.sources.LakeCatalog].getName)
+      spark.conf.set("spark.sql.catalog.graft.warehouse", wh.getAbsolutePath)
+      val ns = "sf" + java.lang.Integer.toHexString(sfDir.hashCode)
+      val t = s"graft.$ns.orders_evolve"
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      Tables.orders(spark, sfDir).createOrReplaceTempView("orders_src_evolve")
+      spark.sql(
+        s"""CREATE TABLE $t TBLPROPERTIES ('key'='o_orderkey')
+           |AS SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
+           |  CAST(o_orderkey % 100 AS INT) AS small_i
+           |FROM orders_src_evolve WHERE o_orderkey % 2 = 1""".stripMargin)
+      spark.sql(s"ALTER TABLE $t ADD COLUMNS (margin_cents BIGINT)")
+      spark.sql(
+        s"""INSERT INTO $t
+           |SELECT o_orderkey, o_custkey, o_orderpriority, o_totalprice,
+           |  CAST(o_orderkey % 100 AS INT),
+           |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+           |FROM orders_src_evolve WHERE o_orderkey % 2 = 0""".stripMargin)
+      spark.sql(s"ALTER TABLE $t RENAME COLUMN o_orderpriority TO prio")
+      spark.sql(s"ALTER TABLE $t ALTER COLUMN small_i TYPE BIGINT")
+      spark.sql(s"ALTER TABLE $t DROP COLUMN o_custkey")
+      spark.sql(s"ALTER TABLE $t ADD COLUMNS (o_custkey BIGINT)")
+      spark.sql(
+        s"""INSERT INTO $t VALUES
+           |  (900000001, '5-LOW', 111.0, 1, 11100, 42),
+           |  (900000002, '5-LOW', 222.0, 2, 22200, 42),
+           |  (900000003, '1-URGENT', 333.0, 3, 33300, 42)""".stripMargin)
+      (t, s"${wh.getAbsolutePath}/$ns/orders_evolve")
+    }
 
   def lakeEvolve(spark: SparkSession, sfDir: String): DataFrame = {
     val (t, dir) = evolveTable(spark, sfDir)
@@ -1629,29 +1581,27 @@ object LakeQueries {
     // (CTAS + the four-clause atomic merge) stays published in
     // cold_queries; steady state prices the consumer aggregate + the
     // delta-log version pin.
-    sqlMergeMemo.computeIfAbsent(
-      (spark, sfDir, graft.Scratch.fingerprint(s"$sfDir/orders.parquet")),
-      _ => new graft.Scratch.Slot(() => {
-        spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-        Tables.orders(spark, sfDir)
-          .select("o_orderkey", "o_orderpriority", "o_totalprice")
-          .createOrReplaceTempView("orders_src_mrg")
-        spark.sql(
-          s"""CREATE TABLE $t TBLPROPERTIES ('key'='o_orderkey')
-             |AS SELECT * FROM orders_src_mrg WHERE o_orderkey % 3 <> 0""".stripMargin)
-        spark.sql(
-          s"""MERGE INTO $t t
-             |USING (SELECT * FROM orders_src_mrg WHERE o_orderkey % 5 <> 0) s
-             |ON t.o_orderkey = s.o_orderkey
-             |WHEN MATCHED AND s.o_orderkey % 11 = 0 THEN DELETE
-             |WHEN MATCHED AND s.o_orderkey % 7 = 0 THEN UPDATE SET
-             |  o_totalprice = CAST(CAST(t.o_totalprice AS DECIMAL(18,2)) * 2 AS DOUBLE)
-             |WHEN NOT MATCHED AND s.o_orderkey % 2 = 0 THEN INSERT *
-             |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey % 9 = 0 THEN UPDATE SET
-             |  o_orderpriority = '9-STALE'""".stripMargin)
-        s"${wh.getAbsolutePath}/$ns/orders_mrg"
-      })).get
+    val merged = sqlMergeMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft.$ns")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      Tables.orders(spark, sfDir)
+        .select("o_orderkey", "o_orderpriority", "o_totalprice")
+        .createOrReplaceTempView("orders_src_mrg")
+      spark.sql(
+        s"""CREATE TABLE $t TBLPROPERTIES ('key'='o_orderkey')
+           |AS SELECT * FROM orders_src_mrg WHERE o_orderkey % 3 <> 0""".stripMargin)
+      spark.sql(
+        s"""MERGE INTO $t t
+           |USING (SELECT * FROM orders_src_mrg WHERE o_orderkey % 5 <> 0) s
+           |ON t.o_orderkey = s.o_orderkey
+           |WHEN MATCHED AND s.o_orderkey % 11 = 0 THEN DELETE
+           |WHEN MATCHED AND s.o_orderkey % 7 = 0 THEN UPDATE SET
+           |  o_totalprice = CAST(CAST(t.o_totalprice AS DECIMAL(18,2)) * 2 AS DOUBLE)
+           |WHEN NOT MATCHED AND s.o_orderkey % 2 = 0 THEN INSERT *
+           |WHEN NOT MATCHED BY SOURCE AND t.o_orderkey % 9 = 0 THEN UPDATE SET
+           |  o_orderpriority = '9-STALE'""".stripMargin)
+      s"${wh.getAbsolutePath}/$ns/orders_mrg"
+    }
     spark.sql(
       s"""SELECT o_orderpriority, count(*) AS n_orders,
          |  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
@@ -1659,8 +1609,7 @@ object LakeQueries {
          |FROM $t
          |GROUP BY o_orderpriority
          |ORDER BY o_orderpriority""".stripMargin)
-      .withColumn("lake_versions",
-        lit(Lake.latestVersion(s"${wh.getAbsolutePath}/$ns/orders_mrg")))
+      .withColumn("lake_versions", lit(Lake.latestVersion(merged)))
   }
 
   /** Mirror: matched = `%3≠0 ∧ %5≠0` (delete `%11`, double `%7`,
@@ -1900,8 +1849,8 @@ object LakeQueries {
     * METADATA-only — pricing two full table builds into each steady
     * invocation measured the fixture, not the feature. Bench's cold
     * pass invalidates, so the build cost stays published. */
-  private val statTablesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[(String, String, String)]]()
+  private val statTablesMemo = new graft.Scratch.FixtureMemo[(String, String, String)](
+    { case (f, d, c) => rmDirs(f, d, c) })
 
   private[graft] def autoBcastTables(spark: SparkSession,
       sfDir: String): (String, String) = {
@@ -1910,43 +1859,25 @@ object LakeQueries {
   }
 
   private[graft] def statTables(spark: SparkSession,
-      sfDir: String): (String, String, String) = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/lineitem.parquet") +
-      graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    statTablesMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(statTablesMemo.remove(k))
-        .foreach(_.peek.foreach { case (f, d, c) =>
-          rm(new java.io.File(f)); rm(new java.io.File(d)); rm(new java.io.File(c))
-        }))
-    statTablesMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val factDir = scratchDir(spark, sfDir) + "-stat-fact"
-        val dimDir = scratchDir(spark, sfDir) + "-stat-dim"
-        val custDir = scratchDir(spark, sfDir) + "-stat-cust"
-        rm(new java.io.File(factDir)); rm(new java.io.File(dimDir))
-        rm(new java.io.File(custDir))
-        Lake.create(Tables.lineitem(spark, sfDir), factDir, "l_orderkey",
-          targetFiles = 8)
-        // composite keys give the TRAILING columns per-file stats too:
-        // o_custkey and c_nationkey then carry manifest min/max — the
-        // NDV/bounds the colstats query's join estimation runs on
-        Lake.create(Tables.orders(spark, sfDir), dimDir, "o_orderkey,o_custkey",
-          targetFiles = 8)
-        Lake.create(Tables.customer(spark, sfDir), custDir,
-          "c_custkey,c_nationkey", targetFiles = 4)
-        (factDir, dimDir, custDir)
-      })).get
-  }
-
-  private[graft] def invalidateStatTables(): Unit = {
-    import scala.jdk.CollectionConverters._
-    statTablesMemo.values.asScala.foreach(_.peek.foreach { case (f, d, c) =>
-      rm(new java.io.File(f)); rm(new java.io.File(d)); rm(new java.io.File(c))
-    })
-    statTablesMemo.clear()
-  }
+      sfDir: String): (String, String, String) =
+    statTablesMemo.get(spark, sfDir,
+        Seq(s"$sfDir/lineitem.parquet", s"$sfDir/orders.parquet")) { () =>
+      val factDir = scratchDir(spark, sfDir) + "-stat-fact"
+      val dimDir = scratchDir(spark, sfDir) + "-stat-dim"
+      val custDir = scratchDir(spark, sfDir) + "-stat-cust"
+      rm(new java.io.File(factDir)); rm(new java.io.File(dimDir))
+      rm(new java.io.File(custDir))
+      Lake.create(Tables.lineitem(spark, sfDir), factDir, "l_orderkey",
+        targetFiles = 8)
+      // composite keys give the TRAILING columns per-file stats too:
+      // o_custkey and c_nationkey then carry manifest min/max — the
+      // NDV/bounds the colstats query's join estimation runs on
+      Lake.create(Tables.orders(spark, sfDir), dimDir, "o_orderkey,o_custkey",
+        targetFiles = 8)
+      Lake.create(Tables.customer(spark, sfDir), custDir,
+        "c_custkey,c_nationkey", targetFiles = 4)
+      (factDir, dimDir, custDir)
+    }
 
   /** Registered query `x8_lake_colstats` — MANIFEST COLUMN STATISTICS
     * driving cost-based JOIN REORDERING (round 11, VERDICT r10 #5):
@@ -2030,50 +1961,34 @@ object LakeQueries {
     * so c_nationkey is an UNCLUSTERED column that carries no stats at
     * all until `CALL graft.analyze` attaches HLL NDV + range + null
     * counts. Memoized like [[statTables]]. */
-  private val statTables4Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[(String, String, String, String)]]()
-
-  private[graft] def invalidateStatTables4(): Unit = {
-    import scala.jdk.CollectionConverters._
-    statTables4Memo.values.asScala.foreach(_.peek.foreach {
-      case (a, b, c, d) => Seq(a, b, c, d).foreach(x => rm(new java.io.File(x)))
-    })
-    statTables4Memo.clear()
-  }
+  private val statTables4Memo =
+    new graft.Scratch.FixtureMemo[(String, String, String, String)](
+      { case (a, b, c, d) => rmDirs(a, b, c, d) })
 
   private def statTables4(spark: SparkSession,
-      sfDir: String): (String, String, String, String) = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/lineitem.parquet") +
-      graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    statTables4Memo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(statTables4Memo.remove(k))
-        .foreach(_.peek.foreach { case (a, b, c, d) =>
-          Seq(a, b, c, d).foreach(x => rm(new java.io.File(x))) }))
-    statTables4Memo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val factDir = scratchDir(spark, sfDir) + "-stat4-fact"
-        val ordDir = scratchDir(spark, sfDir) + "-stat4-ord"
-        val custDir = scratchDir(spark, sfDir) + "-stat4-cust"
-        val natDir = scratchDir(spark, sfDir) + "-stat4-nat"
-        Seq(factDir, ordDir, custDir, natDir).foreach(x =>
-          rm(new java.io.File(x)))
-        Lake.create(Tables.lineitem(spark, sfDir), factDir, "l_orderkey",
-          targetFiles = 8)
-        Lake.create(Tables.orders(spark, sfDir), ordDir,
-          "o_orderkey,o_custkey", targetFiles = 8)
-        Lake.create(Tables.customer(spark, sfDir), custDir, "c_custkey",
-          targetFiles = 4)
-        Lake.create(Tables.nation(spark, sfDir), natDir, "n_nationkey",
-          targetFiles = 1)
-        // the round-12 feature: statistics for the UNCLUSTERED filter
-        // and join column arrive via ANALYZE, not via key clustering
-        Lake.compactAnalyzed(spark, custDir, Seq("c_nationkey"),
-          targetFiles = 4)
-        (factDir, ordDir, custDir, natDir)
-      })).get
-  }
+      sfDir: String): (String, String, String, String) =
+    statTables4Memo.get(spark, sfDir,
+        Seq(s"$sfDir/lineitem.parquet", s"$sfDir/orders.parquet")) { () =>
+      val factDir = scratchDir(spark, sfDir) + "-stat4-fact"
+      val ordDir = scratchDir(spark, sfDir) + "-stat4-ord"
+      val custDir = scratchDir(spark, sfDir) + "-stat4-cust"
+      val natDir = scratchDir(spark, sfDir) + "-stat4-nat"
+      Seq(factDir, ordDir, custDir, natDir).foreach(x =>
+        rm(new java.io.File(x)))
+      Lake.create(Tables.lineitem(spark, sfDir), factDir, "l_orderkey",
+        targetFiles = 8)
+      Lake.create(Tables.orders(spark, sfDir), ordDir,
+        "o_orderkey,o_custkey", targetFiles = 8)
+      Lake.create(Tables.customer(spark, sfDir), custDir, "c_custkey",
+        targetFiles = 4)
+      Lake.create(Tables.nation(spark, sfDir), natDir, "n_nationkey",
+        targetFiles = 1)
+      // the round-12 feature: statistics for the UNCLUSTERED filter
+      // and join column arrive via ANALYZE, not via key clustering
+      Lake.compactAnalyzed(spark, custDir, Seq("c_nationkey"),
+        targetFiles = 4)
+      (factDir, ordDir, custDir, natDir)
+    }
 
   /** The [[lakeTopNCol]] fixture: orders with a UNIQUE derived price
     * key (`cents * 10⁶ + orderkey mod 10⁶` — price-ordered,
@@ -2082,38 +1997,22 @@ object LakeQueries {
     * straddling duplicate), keyed on o_orderkey but CLUSTERED +
     * ANALYZED by the price key. Memoized like the other stat
     * fixtures. */
-  private val topnColMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+  private val topnColMemo = new graft.Scratch.FixtureMemo[String](rmDirs(_))
 
-  private[graft] def invalidateTopNCol(): Unit = {
-    import scala.jdk.CollectionConverters._
-    topnColMemo.values.asScala.foreach(_.peek.foreach(d =>
-      rm(new java.io.File(d))))
-    topnColMemo.clear()
-  }
-
-  private def topnColTable(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    topnColMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(topnColMemo.remove(k))
-        .foreach(_.peek.foreach(d => rm(new java.io.File(d)))))
-    topnColMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-topncol"
-        rm(new java.io.File(dir))
-        val orders = Tables.orders(spark, sfDir)
-          .withColumn("o_pricekey",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-              * 1000000L + pmod(col("o_orderkey"), lit(1000000L)))
-          .select("o_orderkey", "o_custkey", "o_orderpriority", "o_pricekey")
-        Lake.create(orders, dir, "o_orderkey", targetFiles = 4)
-        Lake.compactAnalyzed(spark, dir, Seq("o_pricekey"), targetFiles = 8,
-          clusterCol = Some("o_pricekey"))
-        dir
-      })).get
-  }
+  private def topnColTable(spark: SparkSession, sfDir: String): String =
+    topnColMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-topncol"
+      rm(new java.io.File(dir))
+      val orders = Tables.orders(spark, sfDir)
+        .withColumn("o_pricekey",
+          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+            * 1000000L + pmod(col("o_orderkey"), lit(1000000L)))
+        .select("o_orderkey", "o_custkey", "o_orderpriority", "o_pricekey")
+      Lake.create(orders, dir, "o_orderkey", targetFiles = 4)
+      Lake.compactAnalyzed(spark, dir, Seq("o_pricekey"), targetFiles = 8,
+        clusterCol = Some("o_pricekey"))
+      dir
+    }
 
   /** Registered query `x8_lake_topn_col` — TOP-N PUSHDOWN ON A
     * NON-KEY COLUMN (round 12, VERDICT r11 #4's second half): "the 9
@@ -2182,13 +2081,10 @@ object LakeQueries {
     * DataSketches union over all live files lands on the true ~25
     * nation NDV). The rollup mirrors relationally. */
   private val colstatsIncMemo = new graft.Scratch.FixtureMemo[String](
-    sfDir => s"$sfDir/customer.parquet",
     dir => rm(new java.io.File(dir)))
 
-  private[graft] def invalidateColstatsInc(): Unit = colstatsIncMemo.invalidate()
-
   private def colstatsIncTable(spark: SparkSession, sfDir: String): String =
-    colstatsIncMemo.get(spark, sfDir) { () =>
+    colstatsIncMemo.get(spark, sfDir, Seq(s"$sfDir/customer.parquet")) { () =>
       val dir = scratchDir(spark, sfDir) + "-colstats-inc"
       rm(new java.io.File(dir))
       val cust = Tables.customer(spark, sfDir)
@@ -2539,14 +2435,11 @@ object LakeQueries {
       healed: Boolean)
 
   private val autoCompactMemo = new graft.Scratch.FixtureMemo[AutoCompactFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => rm(new java.io.File(fx.dir)))
-
-  private[graft] def invalidateAutoCompact(): Unit = autoCompactMemo.invalidate()
 
   private def autoCompactFixture(spark: SparkSession,
       sfDir: String): AutoCompactFixture =
-    autoCompactMemo.get(spark, sfDir) { () =>
+    autoCompactMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       val dir = scratchDir(spark, sfDir) + "-autocompact"
       rm(new java.io.File(dir))
       val orders = Tables.orders(spark, sfDir)
@@ -2618,23 +2511,16 @@ object LakeQueries {
       reclaimed: Boolean, ttClean: Boolean)
 
   private val vacPinMemo = new graft.Scratch.FixtureMemo[VacPinFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => {
       graft.lake.MatView.unregister(fx.dir)
-      val f = new java.io.File(fx.dir)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
+      rmWithSiblings(fx.dir)
     })
 
-  private[graft] def invalidateVacPin(): Unit = vacPinMemo.invalidate()
-
   private def vacPinFixture(spark: SparkSession, sfDir: String): VacPinFixture =
-    vacPinMemo.get(spark, sfDir) { () =>
+    vacPinMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       val dir = scratchDir(spark, sfDir) + "-vacpin"
       graft.lake.MatView.unregister(dir)
-      val f = new java.io.File(dir)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
+      rmWithSiblings(dir)
       val orders = Tables.orders(spark, sfDir)
         .withColumn("o_cents",
           (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
@@ -2727,11 +2613,8 @@ object LakeQueries {
       abortClean: Boolean)
 
   private val pairMemo = new graft.Scratch.FixtureMemo[PairFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => Seq(fx.bronze, fx.silver, fx.txnRoot)
       .foreach(d => rm(new java.io.File(d))))
-
-  private[graft] def invalidatePair(): Unit = pairMemo.invalidate()
 
   def lakePair(spark: SparkSession, sfDir: String): DataFrame = {
     val fx = pairFixture(spark, sfDir)
@@ -2747,7 +2630,7 @@ object LakeQueries {
   }
 
   private def pairFixture(spark: SparkSession, sfDir: String): PairFixture =
-    pairMemo.get(spark, sfDir) { () =>
+    pairMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
     val bronze = scratchDir(spark, sfDir) + "-pair-bronze"
     val silver = scratchDir(spark, sfDir) + "-pair-silver"
     val txnRoot = scratchDir(spark, sfDir) + "-pair-txn"
@@ -2841,86 +2724,54 @@ object LakeQueries {
     * work is the VIEW lifecycle (define/compensate/refresh), not
     * rebuilding the source three times per bench run. Bench's cold
     * pass invalidates this memo per query, so the full history cost
-    * stays published alongside. */
-  private val mvHistMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+    * stays published alongside.
+    *
+    * The teardown sweeps every sibling the fixture spawned (view dirs,
+    * dim tables: all share the source dir's name as a prefix and are
+    * fingerprint-independent paths) and the rewrite registry, or a
+    * later defineOrRecover would resurrect registers computed against
+    * the previous source incarnation (ADVICE r10); the cold pass then
+    * re-prices the view BUILDS the steady state recovers from
+    * sidecars. */
+  private val mvHistMemo = new graft.Scratch.FixtureMemo[String](src => {
+    rmWithSiblings(src)
+    graft.lake.MatView.clear()
+  })
 
-  private[graft] def mvSharedSource(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    mvHistMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(mvHistMemo.remove(k))
-        .foreach(_.peek.foreach { d =>
-          // the view/dim/aux dirs are SIBLINGS prefixed by the source
-          // dir's name and are fingerprint-independent paths: sweep
-          // them with the source, or a later defineOrRecover would
-          // resurrect registers computed against the previous source
-          // incarnation (ADVICE r10)
-          val f = new java.io.File(d)
-          Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith(f.getName)).foreach(rm)
-          graft.lake.MatView.clear()
-        }))
-    mvHistMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-mv-src"
-        rm(new java.io.File(dir))
-        val orders = Tables.orders(spark, sfDir)
-          .withColumn("o_cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
-        Lake.create(orders, dir, "o_orderkey", targetFiles = 6)
-        // band bounds off the real key domain (one bounded driver
-        // lookup, memoized with the fixture)
-        val maxKey = Tables.orders(spark, sfDir)
-          .agg(max(col("o_orderkey"))).head().getLong(0)
-        val (b1, b2) = (maxKey / 10, maxKey / 5)
-        val cur = Lake.read(spark, dir)
-        Lake.upsert(spark, dir,
-          cur.filter(col("o_orderkey") <= b1)
-            .withColumn("o_cents", col("o_cents") * 2))
-        Lake.delete(spark, dir,
-          cur.filter(col("o_orderkey") > b1 && col("o_orderkey") <= b2)
-            .select(col("o_orderkey")))
-        // v4: INSERT-ONLY append — the top decile re-keyed above the
-        // old maximum lands outside every file range, so the commit
-        // removes nothing (the delta log proves the slice insert-only
-        // for MatView's min/max feed maintenance)
-        Lake.upsert(spark, dir,
-          cur.filter(col("o_orderkey") > maxKey - maxKey / 10)
-            .withColumn("o_orderkey", col("o_orderkey") + maxKey))
-        dir
-      })).get
-  }
+  private[graft] def mvSharedSource(spark: SparkSession, sfDir: String): String =
+    mvHistMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-mv-src"
+      rm(new java.io.File(dir))
+      val orders = Tables.orders(spark, sfDir)
+        .withColumn("o_cents",
+          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+      Lake.create(orders, dir, "o_orderkey", targetFiles = 6)
+      // band bounds off the real key domain (one bounded driver
+      // lookup, memoized with the fixture)
+      val maxKey = Tables.orders(spark, sfDir)
+        .agg(max(col("o_orderkey"))).head().getLong(0)
+      val (b1, b2) = (maxKey / 10, maxKey / 5)
+      val cur = Lake.read(spark, dir)
+      Lake.upsert(spark, dir,
+        cur.filter(col("o_orderkey") <= b1)
+          .withColumn("o_cents", col("o_cents") * 2))
+      Lake.delete(spark, dir,
+        cur.filter(col("o_orderkey") > b1 && col("o_orderkey") <= b2)
+          .select(col("o_orderkey")))
+      // v4: INSERT-ONLY append — the top decile re-keyed above the
+      // old maximum lands outside every file range, so the commit
+      // removes nothing (the delta log proves the slice insert-only
+      // for MatView's min/max feed maintenance)
+      Lake.upsert(spark, dir,
+        cur.filter(col("o_orderkey") > maxKey - maxKey / 10)
+          .withColumn("o_orderkey", col("o_orderkey") + maxKey))
+      dir
+    }
 
   /** Once-per-(session, sfDir, orders fingerprint) landed MERGE INTO
     * lifecycle ([[lakeSqlMerge]]); the slot holds the merged table's
     * directory. */
-  private val sqlMergeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
-
-  private[graft] def invalidateSqlMerge(): Unit = {
-    import scala.jdk.CollectionConverters._
-    sqlMergeMemo.values.asScala.foreach(_.peek.foreach(d =>
-      rm(new java.io.File(d))))
-    sqlMergeMemo.clear()
-  }
-
-  /** Tear down the memoized MV source history (Bench's cold pass) —
-    * including every sibling the fixture spawned (view dirs, dim
-    * tables: all share the source dir's name as a prefix) and the
-    * rewrite registry, so the cold pass re-prices the view BUILDS
-    * the steady state recovers from sidecars. */
-  private[graft] def invalidateMvHistory(): Unit = {
-    import scala.jdk.CollectionConverters._
-    mvHistMemo.values.asScala.foreach(_.peek.foreach { d =>
-      val f = new java.io.File(d)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
-    })
-    mvHistMemo.clear()
-    graft.lake.MatView.clear()
-  }
+  private val sqlMergeMemo = new graft.Scratch.FixtureMemo[String](rmDirs(_))
 
   /** The user aggregate all three MV queries issue — written against
     * the SOURCE table, never the view: the rewrite must be invisible. */
@@ -3361,55 +3212,32 @@ object LakeQueries {
     * `price_cents` for the LOW KEY BAND (`key ≤ max/10` — contiguous,
     * so the copy-on-write commit touches only intersecting files and
     * the change feed stays O(files touched)). Same disclosed-memo
-    * policy as [[mvSharedSource]]; swept by [[invalidateMvHistory]]
-    * (the dir shares the `-mv` prefix family via its own memo). */
-  private val mvxMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
-
-  private[graft] def mvExprSource(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    mvxMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(mvxMemo.remove(k))
-        .foreach(_.peek.foreach { d =>
-          val f = new java.io.File(d)
-          Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith(f.getName)).foreach(rm)
-          graft.lake.MatView.clear()
-        }))
-    mvxMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val dir = scratchDir(spark, sfDir) + "-mvx-src"
-        rm(new java.io.File(dir))
-        // orders, not lineitem: the synthetic lineitem repeats
-        // (orderkey, linenumber), so only orders carries a real unique
-        // key. The discount percentage derives from the key (mod 10) —
-        // deterministic, integer-exact, mirrorable.
-        val o = Tables.orders(spark, sfDir).select(
-          col("o_orderkey"), col("o_orderpriority"), col("o_orderstatus"),
-          (col("o_totalprice").cast("decimal(18,2)") * 100)
-            .cast("long").as("price_cents"),
-          (col("o_orderkey") % 10).as("disc_pct"))
-        Lake.create(o, dir, "o_orderkey", targetFiles = 6)
-        val maxKey = o.agg(max(col("o_orderkey"))).head().getLong(0)
-        Lake.upsert(spark, dir,
-          Lake.read(spark, dir).filter(col("o_orderkey") <= maxKey / 10)
-            .withColumn("price_cents", col("price_cents") * 2))
-        dir
-      })).get
-  }
-
-  private[graft] def invalidateMvExpr(): Unit = {
-    import scala.jdk.CollectionConverters._
-    mvxMemo.values.asScala.foreach(_.peek.foreach { d =>
-      val f = new java.io.File(d)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
-    })
-    mvxMemo.clear()
+    * policy and teardown as [[mvSharedSource]]. */
+  private val mvxMemo = new graft.Scratch.FixtureMemo[String](src => {
+    rmWithSiblings(src)
     graft.lake.MatView.clear()
-  }
+  })
+
+  private[graft] def mvExprSource(spark: SparkSession, sfDir: String): String =
+    mvxMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val dir = scratchDir(spark, sfDir) + "-mvx-src"
+      rm(new java.io.File(dir))
+      // orders, not lineitem: the synthetic lineitem repeats
+      // (orderkey, linenumber), so only orders carries a real unique
+      // key. The discount percentage derives from the key (mod 10) —
+      // deterministic, integer-exact, mirrorable.
+      val o = Tables.orders(spark, sfDir).select(
+        col("o_orderkey"), col("o_orderpriority"), col("o_orderstatus"),
+        (col("o_totalprice").cast("decimal(18,2)") * 100)
+          .cast("long").as("price_cents"),
+        (col("o_orderkey") % 10).as("disc_pct"))
+      Lake.create(o, dir, "o_orderkey", targetFiles = 6)
+      val maxKey = o.agg(max(col("o_orderkey"))).head().getLong(0)
+      Lake.upsert(spark, dir,
+        Lake.read(spark, dir).filter(col("o_orderkey") <= maxKey / 10)
+          .withColumn("price_cents", col("price_cents") * 2))
+      dir
+    }
 
   /** The user aggregate of the expression-register queries: the raw
     * TPC-H-revenue SHAPE — `sum(price * (100 - discount))` written as
@@ -4106,51 +3934,26 @@ object LakeQueries {
     * combination round 11 refused to serve. Memoized per (session,
     * sfDir, fingerprint); the view recovers from its sidecar with the
     * clean pins on steady-state runs. */
-  private val dimServe2Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+  private val dimServe2Memo = new graft.Scratch.FixtureMemo[String](rmWithSiblings)
 
-  private[graft] def invalidateDimServe2(): Unit = {
-    import scala.jdk.CollectionConverters._
-    dimServe2Memo.values.asScala.foreach(_.peek.foreach { d =>
-      val f = new java.io.File(d)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
-    })
-    dimServe2Memo.clear()
-  }
-
-  private def dimServe2Source(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/orders.parquet")
-    import scala.jdk.CollectionConverters._
-    dimServe2Memo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(dimServe2Memo.remove(k))
-        .foreach(_.peek.foreach { d =>
-          val f = new java.io.File(d)
-          Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith(f.getName)).foreach(rm)
-        }))
-    dimServe2Memo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val src = scratchDir(spark, sfDir) + "-ds2"
-        val f = new java.io.File(src)
-        Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith(f.getName)).foreach(rm)
-        val orders = Tables.orders(spark, sfDir)
-          .withColumn("o_cents",
-            (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
-        Lake.create(orders, src, "o_orderkey", targetFiles = 4)
-        Lake.create(Tables.customer(spark, sfDir), src + "-cdim",
-          "c_custkey", targetFiles = 1)
-        Lake.create(orders.select(col("o_orderpriority").as("p_prio"))
-            .distinct()
-            .withColumn("p_class",
-              when(col("p_prio").isin("1-URGENT", "2-HIGH"), "high")
-                .otherwise("low")),
-          src + "-pdim", "p_prio", targetFiles = 1)
-        src
-      })).get
-  }
+  private def dimServe2Source(spark: SparkSession, sfDir: String): String =
+    dimServe2Memo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
+      val src = scratchDir(spark, sfDir) + "-ds2"
+      rmWithSiblings(src)
+      val orders = Tables.orders(spark, sfDir)
+        .withColumn("o_cents",
+          (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
+      Lake.create(orders, src, "o_orderkey", targetFiles = 4)
+      Lake.create(Tables.customer(spark, sfDir), src + "-cdim",
+        "c_custkey", targetFiles = 1)
+      Lake.create(orders.select(col("o_orderpriority").as("p_prio"))
+          .distinct()
+          .withColumn("p_class",
+            when(col("p_prio").isin("1-URGENT", "2-HIGH"), "high")
+              .otherwise("low")),
+        src + "-pdim", "p_prio", targetFiles = 1)
+      src
+    }
 
   /** Registered query `x8_mv_dim_serve2` — SERVE-TIME STAR
     * COMPOSITION (round 12, VERDICT r11 #2): the 2-dim star view is
@@ -4298,16 +4101,13 @@ object LakeQueries {
     * recompute; DuckDB mirrors the churn + append + delete
     * relationally. */
   private val starMmDelMemo = new graft.Scratch.FixtureMemo[String](
-    sfDir => s"$sfDir/orders.parquet",
     src => {
       graft.lake.MatView.unregisterJoined(src, src + "-cdim")
       Seq("", "-cdim", "-jview").foreach(s => rm(new java.io.File(src + s)))
     })
 
-  private[graft] def invalidateStarMmDel(): Unit = starMmDelMemo.invalidate()
-
   private def starMmDelFixture(spark: SparkSession, sfDir: String): String =
-    starMmDelMemo.get(spark, sfDir) { () =>
+    starMmDelMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       val src = scratchDir(spark, sfDir) + "-mmdel"
       val cdim = src + "-cdim"
       graft.lake.MatView.unregisterJoined(src, cdim)
@@ -4425,54 +4225,29 @@ object LakeQueries {
     * SYNTHESIZED user dimension (user → region), with the dimension
     * CHURNED after creation (every `%7` user moves region). Memoized;
     * the distinct star view recovers from its sidecar. */
-  private val distinctStarMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.Scratch.Slot[String]]()
+  private val distinctStarMemo = new graft.Scratch.FixtureMemo[String](rmWithSiblings)
 
-  private[graft] def invalidateDistinctStar(): Unit = {
-    import scala.jdk.CollectionConverters._
-    distinctStarMemo.values.asScala.foreach(_.peek.foreach { d =>
-      val f = new java.io.File(d)
-      Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(f.getName)).foreach(rm)
-    })
-    distinctStarMemo.clear()
-  }
-
-  private def distinctStarSource(spark: SparkSession, sfDir: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/events.parquet")
-    import scala.jdk.CollectionConverters._
-    distinctStarMemo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 != fp)
-      .foreach(k => Option(distinctStarMemo.remove(k))
-        .foreach(_.peek.foreach { d =>
-          val f = new java.io.File(d)
-          Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.startsWith(f.getName)).foreach(rm)
-        }))
-    distinctStarMemo.computeIfAbsent((spark, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val src = scratchDir(spark, sfDir) + "-dstar"
-        val f = new java.io.File(src)
-        Option(f.getParentFile.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith(f.getName)).foreach(rm)
-        Lake.create(Tables.events(spark, sfDir)
-            .select("event_id", "event_type", "user_id"),
-          src, "event_id", targetFiles = 4)
-        val udim = Tables.events(spark, sfDir)
-          .select(col("user_id").as("u_user")).distinct()
-          .withColumn("u_region",
-            concat(lit("r"), (col("u_user") % 5).cast("string")))
-        Lake.create(udim, src + "-udim", "u_user", targetFiles = 1)
-        // the churn: every %7 user moves region AFTER creation — the
-        // aux (built below via defineDistinctStarOrRecover) never
-        // stores a region, so this costs the serve NOTHING
-        Lake.upsert(spark, src + "-udim",
-          Lake.read(spark, src + "-udim")
-            .filter(col("u_user") % 7 === 0)
-            .withColumn("u_region", lit("moved")))
-        src
-      })).get
-  }
+  private def distinctStarSource(spark: SparkSession, sfDir: String): String =
+    distinctStarMemo.get(spark, sfDir, Seq(s"$sfDir/events.parquet")) { () =>
+      val src = scratchDir(spark, sfDir) + "-dstar"
+      rmWithSiblings(src)
+      Lake.create(Tables.events(spark, sfDir)
+          .select("event_id", "event_type", "user_id"),
+        src, "event_id", targetFiles = 4)
+      val udim = Tables.events(spark, sfDir)
+        .select(col("user_id").as("u_user")).distinct()
+        .withColumn("u_region",
+          concat(lit("r"), (col("u_user") % 5).cast("string")))
+      Lake.create(udim, src + "-udim", "u_user", targetFiles = 1)
+      // the churn: every %7 user moves region AFTER creation — the
+      // aux (built below via defineDistinctStarOrRecover) never
+      // stores a region, so this costs the serve NOTHING
+      Lake.upsert(spark, src + "-udim",
+        Lake.read(spark, src + "-udim")
+          .filter(col("u_user") % 7 === 0)
+          .withColumn("u_region", lit("moved")))
+      src
+    }
 
   /** Registered query `x8_mv_distinct_star` — DISTINCT STAR VIEW
     * (round 12): "distinct active users per region" — THE training-data
@@ -4551,17 +4326,14 @@ object LakeQueries {
   private case class MvAutoFixture(dir: String, viewFresh: Boolean)
 
   private val mvAutoMemo = new graft.Scratch.FixtureMemo[MvAutoFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => {
       graft.lake.MatView.unregister(fx.dir)
       rm(new java.io.File(fx.dir))
       rm(new java.io.File(fx.dir + "-view"))
     })
 
-  private[graft] def invalidateMvAuto(): Unit = mvAutoMemo.invalidate()
-
   private def mvAutoFixture(spark: SparkSession, sfDir: String): MvAutoFixture =
-    mvAutoMemo.get(spark, sfDir) { () =>
+    mvAutoMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       val dir = scratchDir(spark, sfDir) + "-mvauto"
       graft.lake.MatView.unregister(dir)
       rm(new java.io.File(dir))
@@ -4648,7 +4420,6 @@ object LakeQueries {
       bridged: Boolean)
 
   private val mvCoalesceMemo = new graft.Scratch.FixtureMemo[MvCoalesceFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => {
       graft.lake.MatView.unregister(fx.dir)
       graft.lake.MatView.unregisterDistinct(fx.dir + "-dview")
@@ -4657,11 +4428,9 @@ object LakeQueries {
         .foreach(s => rm(new java.io.File(fx.dir + s)))
     })
 
-  private[graft] def invalidateMvCoalesce(): Unit = mvCoalesceMemo.invalidate()
-
   private def mvCoalesceFixture(spark: SparkSession,
       sfDir: String): MvCoalesceFixture =
-    mvCoalesceMemo.get(spark, sfDir) { () =>
+    mvCoalesceMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       val dir = scratchDir(spark, sfDir) + "-mvcoal"
       graft.lake.MatView.unregister(dir)
       graft.lake.MatView.unregisterDistinct(dir + "-dview")
@@ -4772,17 +4541,14 @@ object LakeQueries {
       ordered: Boolean)
 
   private val mvParallelMemo = new graft.Scratch.FixtureMemo[MvParallelFixture](
-    sfDir => s"$sfDir/orders.parquet",
     fx => fx.dirs.foreach { d =>
       graft.lake.MatView.unregister(d)
       Seq("", "-view").foreach(s => rm(new java.io.File(d + s)))
     })
 
-  private[graft] def invalidateMvParallel(): Unit = mvParallelMemo.invalidate()
-
   private def mvParallelFixture(spark: SparkSession,
       sfDir: String): MvParallelFixture =
-    mvParallelMemo.get(spark, sfDir) { () =>
+    mvParallelMemo.get(spark, sfDir, Seq(s"$sfDir/orders.parquet")) { () =>
       import graft.lake.MatView
       val root = scratchDir(spark, sfDir) + "-mvpar"
       val dirs = (0 until 3).map(i => s"$root-s$i")

@@ -504,10 +504,6 @@ object MatView {
     (recovered.toSeq.sorted, skipped.toSeq.sorted)
   }
 
-  /** Test seam: drop every in-memory registration (sidecars stay — the
-    * restarted-session state [[recoverAll]] recovers from). */
-  private[graft] def clearRegistry(): Unit = { reg.clear(); dreg.clear() }
-
   private def recoverIfCurrent(mvDir: String): Option[MvDef] = {
     val lines = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(mvDir, "_mv")).toArray(Array.empty[String])

@@ -889,16 +889,13 @@ object EventStream {
     * verdict per invocation — the dashboard read the lifecycle
     * exists for — and Bench's cold pass re-prices the full landing. */
   private val mvAutoMemo = new graft.Scratch.FixtureMemo[String](
-    sfDir => s"$sfDir/events.parquet",
     tableDir => {
       graft.lake.MatView.unregister(tableDir)
       graft.Scratch.rm(new java.io.File(tableDir).getParentFile)
     })
 
-  private[graft] def invalidateMvAuto(): Unit = mvAutoMemo.invalidate()
-
   private def streamedMvAutoFixture(spark: SparkSession, sfDir: String): String =
-    mvAutoMemo.get(spark, sfDir) { () =>
+    mvAutoMemo.get(spark, sfDir, Seq(s"$sfDir/events.parquet")) { () =>
     val src = StreamSource.chronological(spark, sfDir, "events", "ts")
     val schema = spark.read.parquet(src).schema
     val base = graft.Scratch.dir(spark, "stream-mv-auto", sfDir)

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   *    (session, sfDir, source fingerprint) still runs the full
   *    multi-micro-batch loop; subsequent calls read the same landing.
   *  - COLD (`cold_queries`) prices the full replay: Bench invalidates
-  *    every fixture (this memo included, via
-  *    [[graft.SparkEntry.invalidateMemos]]) immediately before each
+  *    every registered fixture memo, this one included
+  *    ([[graft.SparkEntry.invalidateMemos]]), immediately before each
   *    memoized query, so the published cold number includes source
   *    layout + every micro-batch + state machinery, end to end.
   *
@@ -32,38 +32,20 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamMemo {
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, String), graft.Scratch.Slot[String]]()
+  private val memo = new graft.Scratch.FixtureMemo[String](
+    d => graft.Scratch.rm(new java.io.File(d)))
 
   /** Run `build` once per (session, kind, sfDir, fingerprint of
     * `srcDir`); returns the scratch base whose contents `build`
     * landed. `build` receives the base ALREADY wiped — checkpoints
     * and landings from a prior fingerprint never leak into a rebuild. */
   def landed(spark: SparkSession, kind: String, sfDir: String, srcDir: String)
-      (build: java.io.File => Unit): java.io.File = {
-    val fp = graft.Scratch.fingerprint(srcDir)
-    import scala.jdk.CollectionConverters._
+      (build: java.io.File => Unit): java.io.File =
     // a changed source layout evicts (and deletes) the stale landing
-    memo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == kind && k._3 == sfDir && k._4 != fp)
-      .foreach(k => Option(memo.remove(k))
-        .foreach(_.peek.foreach(d => graft.Scratch.rm(new java.io.File(d)))))
-    val path = memo.computeIfAbsent((spark, kind, sfDir, fp),
-      _ => new graft.Scratch.Slot(() => {
-        val base = graft.Scratch.dir(spark, kind, sfDir)
-        graft.Scratch.rm(base)
-        build(base)
-        base.getAbsolutePath
-      })).get
-    new java.io.File(path)
-  }
-
-  /** Drop every landing (files deleted, map cleared) — the switch
-    * Bench's cold pass flips between memoized queries. */
-  def invalidate(): Unit = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.foreach(_.peek.foreach(d =>
-      graft.Scratch.rm(new java.io.File(d))))
-    memo.clear()
-  }
+    new java.io.File(memo.get(spark, sfDir, Seq(srcDir), tag = kind) { () =>
+      val base = graft.Scratch.dir(spark, kind, sfDir)
+      graft.Scratch.rm(base)
+      build(base)
+      base.getAbsolutePath
+    })
 }

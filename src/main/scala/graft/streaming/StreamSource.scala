@@ -25,30 +25,23 @@ import org.apache.spark.sql.functions.col
   *
   * Built once per (session, sfDir, asset fingerprint) — the memo
   * prices source ARRIVAL (not query work) out of steady-state bench
-  * numbers; the five streaming queries are listed in
-  * `SparkEntry.memoizedQueries`, so Bench's cold pass republishes each
-  * with the landing cost included. [[invalidate]] is the teardown.
+  * numbers; every streaming query reads it through the memo, so
+  * Bench's cold pass republishes each with the landing cost included.
   */
 object StreamSource {
 
   val NumFiles = 4
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, String), graft.Scratch.Slot[String]]()
+  private val memo = new graft.Scratch.FixtureMemo[String](
+    d => graft.Scratch.rm(new java.io.File(d)))
 
   /** The asset landed as [[NumFiles]] time-ordered parquet files;
     * returns the directory to `readStream` from. `orderCol` is the
     * event-time column in whatever RAW encoding the asset carries
     * (int64-nanos orders identically to the timestamp it encodes). */
   private[graft] def chronological(spark: SparkSession, sfDir: String,
-      asset: String, orderCol: String): String = {
-    val fp = graft.Scratch.fingerprint(s"$sfDir/$asset.parquet")
-    import scala.jdk.CollectionConverters._
-    memo.keySet.asScala
-      .filter(k => (k._1 eq spark) && k._2 == sfDir && k._3 == asset && k._4 != fp)
-      .foreach(k => Option(memo.remove(k))
-        .foreach(_.peek.foreach(d => graft.Scratch.rm(new java.io.File(d)))))
-    memo.computeIfAbsent((spark, sfDir, asset, fp), _ => new graft.Scratch.Slot(() => {
+      asset: String, orderCol: String): String =
+    memo.get(spark, sfDir, Seq(s"$sfDir/$asset.parquet"), tag = asset) { () =>
       val dir = graft.Scratch.dir(spark, s"stream-src-$asset", sfDir)
       graft.Scratch.rm(dir)
       graft.Tables.read(spark, sfDir, asset)
@@ -64,12 +57,5 @@ object StreamSource {
         f.setLastModified(t0 + i * 2000L); ()
       }
       dir.getAbsolutePath
-    })).get
-  }
-
-  private[graft] def invalidate(): Unit = {
-    import scala.jdk.CollectionConverters._
-    memo.values.asScala.foreach(_.peek.foreach(d => graft.Scratch.rm(new java.io.File(d))))
-    memo.clear()
-  }
+    }
 }

@@ -1204,7 +1204,7 @@ class MatViewSpec extends SparkSpec {
       "fmt=0\ngarbage".getBytes("UTF-8"))
     try {
       // the restarted session: in-memory registry gone, sidecars stay
-      MatView.clearRegistry()
+      MatView.clear()
       assert(kindOf(userAgg(src), src) === "none",
         "cleared registry must not serve")
       val (recovered, skipped) = MatView.recoverAll(root.getAbsolutePath)
