@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shuffle/spill scratch location for local-mode sessions.
+/** Local-mode session settings for the local disk: where shuffle and
+  * spill files go, and which class writes `file:` paths.
   *
   * Spark's local dirs default to `java.io.tmpdir`; on this container
   * buffered writes to the root disk sustain ~26 MB/s with heavy kernel
@@ -14,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   * `spark.local.dir` → NVMe scratch; this helper is the local-mode
   * equivalent and is a no-op when no tmpfs exists (CI, other hosts) or
   * when the operator already set SPARK_LOCAL_DIRS explicitly.
+  *
+  * Every `file:` path Spark writes (parquet output, lake data files,
+  * their `.crc` companions, the directories above them) goes through
+  * [[NioLocalFileSystem]], which sets file modes in process instead of
+  * forking a `chmod` per file and per directory as Hadoop's stock
+  * local filesystem does without libhadoop. Modes and checksums are
+  * unchanged. Every session the engine, its tools and its specs build
+  * comes through [[configure]], so the whole JVM agrees on the class.
   */
 object LocalDirs {
   def tmpfs: Option[String] = {
@@ -25,7 +34,10 @@ object LocalDirs {
     if (dir.isDirectory && dir.canWrite) Some(dir.getAbsolutePath) else None
   }
 
-  /** Apply to a builder: set spark.local.dir to tmpfs when available. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
+  /** Apply to a builder: register [[NioLocalFileSystem]] for `file:`,
+    * and set spark.local.dir to tmpfs when available. */
+  def configure(b: SparkSession.Builder): SparkSession.Builder = {
+    b.config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     tmpfs.fold(b)(d => b.config("spark.local.dir", d))
+  }
 }

@@ -737,9 +737,10 @@ object Lake {
     val kc = keyCols(m.key)
     require(deleteKeys.columns.length == kc.length,
       s"delete keys must have ${kc.length} column(s) for key '${m.key}'")
-    val delKeys = deleteKeys.toDF(kc: _*).distinct()
-    val allKeys = updates.select(kc.map(col): _*).distinct()
-      .unionByName(delKeys).distinct()
+    // key frames here only feed semi/anti joins, which ignore
+    // duplicate keys: a distinct() would add a shuffle and nothing else
+    val delKeys = deleteKeys.toDF(kc: _*)
+    val allKeys = updates.select(kc.map(col): _*).unionByName(delKeys)
     val touchedNames = touchedFileNames(spark, m, allKeys)
     val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
     val liveUpdates = updates.join(delKeys, kc, "left_anti")
@@ -770,7 +771,7 @@ object Lake {
     val base = latestVersion(dir)
     if (base == 0L) {
       val kc = keyCols(key)
-      val live = updates.join(deleteKeys.toDF(kc: _*).distinct(), kc, "left_anti")
+      val live = updates.join(deleteKeys.toDF(kc: _*), kc, "left_anti")
       val files = writeFiles(live, dir, key, targetFiles)
       commit(dir, None, Manifest(1L, key, files, Map(appId -> txnVersion)))
       return 1L
@@ -1338,8 +1339,7 @@ object Lake {
       dvDirs: Seq[String]): DataFrame =
     if (dvDirs.isEmpty) df0
     else {
-      val mask = spark.read.parquet(
-        dvDirs.distinct.map(d => Paths.get(dir, d).toString): _*)
+      val mask = readMasks(spark, dir, dvDirs)
       df0.withColumn("__gf", col("_metadata.file_name"))
         .withColumn("__gp", col("_metadata.row_index"))
         .join(broadcast(mask.select(col("f").as("__mf"), col("pos").as("__mp"))),
@@ -1347,6 +1347,15 @@ object Lake {
           "left_anti")
         .drop("__gf", "__gp")
     }
+
+  /** The mask sidecars `dvDirs` (relative to `dir`) as one frame of
+    * `(f = data file basename, pos = row index)`. Every sidecar is
+    * written by [[deleteWhereMor]] with this schema, so declaring it
+    * spares the parquet schema-inference job a bare read would run. */
+  private def readMasks(spark: SparkSession, dir: String,
+      dvDirs: Seq[String]): DataFrame =
+    spark.read.schema("f STRING, pos BIGINT")
+      .parquet(dvDirs.distinct.map(d => Paths.get(dir, d).toString): _*)
 
   /** Snapshot read at `version` (default: latest). `mergeSchema` makes
     * SCHEMA EVOLUTION work: after an upsert added columns, a
@@ -1652,36 +1661,29 @@ object Lake {
   /** The shared copy-on-write merge: full new file list = untouched
     * files by reference + rewrites of intersecting files with
     * `updates` folded in. */
-  /** The file names whose per-column key bounding box intersects any
-    * of `keyTuples`' distinct tuples — the leading column prunes on
-    * minKey/maxKey, each trailing key column on its `stats` range (a
-    * file missing a trailing stat is conservatively touched).
+  /** The names of the table's non-empty files whose per-column key
+    * bounding box holds at least one of `keyTuples`' tuples — the
+    * leading column tests against minKey/maxKey, each trailing key
+    * column against its `stats` range (a file missing a trailing stat
+    * is conservatively touched).
     *
-    * Cost shape (round 9, the VERDICT r8 #2 rewrite — the old form was
-    * a theta semi-join testing every file's box against every distinct
-    * tuple, O(|files| × |keys|) predicate evals per commit):
-    *  1. **Metadata-only prune first**: one small agg computes the
-    *     batch's per-column [min, max]; files whose box misses the
-    *     batch box drop out DRIVER-SIDE, no join at all. A day's
-    *     upsert against a range-clustered table eliminates everything
-    *     but the day's files here.
-    *  2. **Range-binned equi-join** for the survivors ([[
-    *     graft.plans.BinnedRangeJoinRule]]'s trick): with bin width =
-    *     the widest surviving file's key span, each file covers ≤ 2
-    *     bins and each tuple exactly 1, so tuple-vs-file pairing is a
-    *     HASH join on the bin id with the exact per-column box as a
-    *     residual — never a broadcast-nested-loop (LakeSpec
-    *     plan-asserts this). At 10⁶ keys × 10⁵ files the pair space
-    *     collapses to co-binned pairs, O(|keys| + |files| × avg
-    *     overlap). */
+    * Cost shape: ONE range-binned equi-join ([[touchedFilesJoin]],
+    * [[graft.plans.BinnedRangeJoinRule]]'s trick) and its collect.
+    * With bin width = the widest file's key span, each file covers at
+    * most two bins and each tuple exactly one, so tuple-vs-file
+    * pairing is a HASH join on the bin id with the exact per-column
+    * box as a residual — never a broadcast-nested-loop (LakeSpec
+    * plan-asserts this). At 10⁶ keys × 10⁵ files the pair space
+    * collapses to co-binned pairs, O(|keys| + |files| × avg overlap).
+    * The tuples are neither deduplicated nor cached: a semi-join
+    * ignores duplicates, and the join reads them once. */
   private def touchedFileNames(spark: SparkSession, m: Manifest,
       keyTuples: DataFrame): Set[String] = {
-    // a table with no rows has nothing to touch: skip the batch-box
-    // aggregation entirely (round 15, guide §1.2 — the CTAS-then-
-    // INSERT pattern otherwise pays a full-batch distinct + min/max
-    // agg to prune zero files; note createEmpty commits a ZERO-ROW
-    // placeholder entry, so "no rows", not "no files", is the test)
-    if (m.files.forall(_.rows == 0L)) return Set.empty
+    // createEmpty commits a ZERO-ROW placeholder entry, so a table
+    // with nothing to touch is "no rows", not "no files" — and it
+    // skips the join entirely (the CTAS-then-INSERT pattern)
+    val live = m.files.filter(_.rows > 0L)
+    if (live.isEmpty) return Set.empty
     val kc = keyCols(m.key)
     // STRING key columns ride their order-preserving 8-byte code
     // ([[encString]]/[[encExpr]]): the head compares against the
@@ -1693,44 +1695,24 @@ object Lake {
       case Some(org.apache.spark.sql.types.StringType) => encExpr(col(c))
       case _ => col(c).cast("long")
     }
-    val tuples = keyTuples.select(
-        kc.map(c => keyEnc(c).as("_uk_" + c)): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val aggs = kc.flatMap(c => Seq(
-        min(col("_uk_" + c)).as(s"lo_$c"), max(col("_uk_" + c)).as(s"hi_$c")))
-      val row = tuples.agg(aggs.head, aggs.tail: _*).head()
-      if (row.isNullAt(0)) return Set.empty // empty update batch
-      val batchBox = kc.map(c => c -> (row.getAs[Long](s"lo_$c"),
-        row.getAs[Long](s"hi_$c"))).toMap
-      val candidates = m.files.filter { f =>
-        val (lo0, hi0) = batchBox(kc.head)
-        f.maxKey >= lo0 && f.minKey <= hi0 &&
-          kc.tail.forall { c =>
-            f.stats.get(c).forall { case (flo, fhi) =>
-              fhi >= batchBox(c)._1 && flo <= batchBox(c)._2
-            }
-          }
-      }
-      if (candidates.isEmpty) Set.empty
-      else touchedFilesJoin(spark, candidates, tuples, kc)
-        .collect().map(_.getString(0)).toSet
-    } finally { tuples.unpersist(false); () }
+    val tuples = keyTuples.select(kc.map(c => keyEnc(c).as("_uk_" + c)): _*)
+    touchedFilesJoin(spark, live, tuples, kc)
+      .collect().map(_.getString(0)).toSet
   }
 
-  /** The binned tuple-vs-file join of step 2 above (exposed so
+  /** The binned tuple-vs-file join of [[touchedFileNames]] (exposed so
     * LakeSpec can assert its physical plan stays an equi-join). The
     * `tuples` frame carries one `_uk_<col>` long column per key
     * column. */
   private[graft] def touchedFilesJoin(spark: SparkSession,
-      candidates: Seq[FileEntry], tuples: DataFrame,
+      files: Seq[FileEntry], tuples: DataFrame,
       kc: Seq[String]): DataFrame = {
     // saturating span: an encoded-string file with the conservative
     // full range (or any range near 2^63) must not overflow into a
     // tiny w that would explode sequence() below
-    val w = candidates.map(f => BigInt(f.maxKey) - BigInt(f.minKey) + 1)
+    val w = files.map(f => BigInt(f.maxKey) - BigInt(f.minKey) + 1)
       .max.min(BigInt(Long.MaxValue)).max(BigInt(1)).toLong
-    val ranges = spark.createDataFrame(candidates)
+    val ranges = spark.createDataFrame(files)
       .select(col("name"), col("minKey"), col("maxKey"), col("stats"))
       // span ≤ w ⇒ a file's range covers at most two w-width bins
       .withColumn("_bin", explode(sequence(
@@ -1760,8 +1742,7 @@ object Lake {
       if (touched.isEmpty) writeFiles(updates, dir, key, targetFiles)
       else {
         val old = readTouched(spark, dir, touched, m.schemaJson)
-        val survivors = old.join(
-          updates.select(kc.map(col): _*).distinct(), kc, "left_anti")
+        val survivors = old.join(updates.select(kc.map(col): _*), kc, "left_anti")
         // allowMissingColumns: additive schema evolution — an upsert
         // carrying NEW columns null-fills them on surviving old rows
         // (and vice versa), so the rewritten files hold the merged
@@ -2986,8 +2967,7 @@ object Lake {
     val live =
       if (existing.isEmpty) withMeta
       else withMeta.join(
-        broadcast(spark.read.parquet(existing.map(d =>
-            Paths.get(dir, d).toString): _*)
+        broadcast(readMasks(spark, dir, existing)
           .select(col("f").as("__mf"), col("pos").as("__mp"))),
         col("__f") === col("__mf") && col("__p") === col("__mp"), "left_anti")
     val marks = live.filter(cond)
@@ -3002,9 +2982,8 @@ object Lake {
       val oldDvs = touchedEntries.flatMap(_.dv).distinct
       val full =
         if (oldDvs.isEmpty) marks
-        else marks.unionByName(
-          spark.read.parquet(oldDvs.map(d => Paths.get(dir, d).toString): _*)
-            .filter(col("f").isin(touchedBase.toSeq: _*)))
+        else marks.unionByName(readMasks(spark, dir, oldDvs)
+          .filter(col("f").isin(touchedBase.toSeq: _*)))
       val sub = s"dv-${java.util.UUID.randomUUID}"
       // sidecars are tiny beside data files (two longs per deleted
       // row); one part file keeps the mask read a single footer
@@ -3043,8 +3022,7 @@ object Lake {
     val m = manifest(dir, v)
     val dvd = m.files.filter(_.dv.isDefined)
     if (dvd.isEmpty) return (0, 0L, 0L)
-    val masked = spark.read.parquet(
-        dvd.flatMap(_.dv).distinct.map(d => Paths.get(dir, d).toString): _*)
+    val masked = readMasks(spark, dir, dvd.flatMap(_.dv))
       .filter(col("f").isin(dvd.map(f => baseName(f.name)): _*))
       .count()
     (dvd.size, dvd.map(_.rows).sum, masked)
@@ -3067,7 +3045,7 @@ object Lake {
       if (touched.isEmpty) Nil
       else {
         val old = readTouched(spark, dir, touched, m.schemaJson)
-        val survivors = old.join(keyDf.distinct(), kc, "left_anti")
+        val survivors = old.join(keyDf, kc, "left_anti")
         writeFiles(survivors, dir, key, math.max(touched.size, 1))
       }
     commit(dir, Some(m), Manifest(base + 1L, key, untouched ++ newFiles, m.txns))

@@ -1265,6 +1265,10 @@ object MatView {
   private val perDirRunning = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicLong]()
   private val violations = new java.util.concurrent.atomic.AtomicLong(0L)
+  // per source dir, the last Throwable that escaped an async pass (a
+  // view's own refresh failure is caught inside [[runPass]] and kept
+  // in lastMaintenance); [[awaitMaintenance]] rethrows and clears them
+  private val passFailures = new ConcurrentHashMap[String, Throwable]()
   private val poolRef = new AtomicReference[
     java.util.concurrent.ThreadPoolExecutor](null)
   // test/fixture gate: when set, a started pass awaits the latch
@@ -1331,7 +1335,7 @@ object MatView {
       Option(passGate.get()).foreach(
         _.await(60, java.util.concurrent.TimeUnit.SECONDS))
       runPass(spark, dir)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => passFailures.put(dir, e) }
     finally {
       runningNow.decrementAndGet()
       mine.decrementAndGet()
@@ -1388,13 +1392,25 @@ object MatView {
 
   /** Block until every scheduled async pass has finished (tests and
     * landed fixtures; production readers never need it — the
-    * compensation serve is exact in the gap). */
+    * compensation serve is exact in the gap). A pass that threw since
+    * the last call surfaces here: the first recorded failure is
+    * rethrown as the cause (the others suppressed), and the record is
+    * cleared. */
   def awaitMaintenance(timeoutMs: Long = 120000L): Unit = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     while (outstanding.get() > 0 && System.nanoTime() < deadline)
       Thread.sleep(5)
     require(outstanding.get() == 0,
       s"auto-maintenance did not drain within ${timeoutMs} ms")
+    import scala.jdk.CollectionConverters._
+    val failed = passFailures.keySet.asScala.toSeq.sorted
+      .flatMap(d => Option(passFailures.remove(d)).map(d -> _))
+    failed.headOption.foreach { case (dir, e) =>
+      val err = new IllegalStateException(
+        s"auto-maintenance pass for $dir failed: $e", e)
+      failed.tail.foreach(f => err.addSuppressed(f._2))
+      throw err
+    }
   }
 
   def enableAutoMaintenance(): Unit = enableAutoMaintenance(MaintainPolicy())
@@ -1409,6 +1425,7 @@ object MatView {
     lagPending.clear()
     maxOverlapRef.set(0L)
     violations.set(0L)
+    passFailures.clear()
     autoMaintain.set(true)
   }
 

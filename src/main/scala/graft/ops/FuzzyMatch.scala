@@ -137,14 +137,22 @@ object FuzzyMatch {
 
   /** Reference mapping pass: for each grand-schema column, best incoming
     * column if score > 60; `candidate` falls back to matching `choice`
-    * (:127-128). Returns canonicalName → sourceColumn. */
-  def mapColumns(schemaCols: Seq[String], incoming: Seq[String]): Map[String, String] =
-    schemaCols.flatMap { sc =>
+    * (:127-128). The reference keys its mapping by source column
+    * (`colnames`), so one source column feeds at most one grand-schema
+    * column: the one it scores highest against, the first in schema
+    * order on a tie. (Without that, a batch with `Election Date` and
+    * no `Election Day` would also cast its dates into the vote count
+    * `election_day`.) Returns canonicalName → sourceColumn. */
+  def mapColumns(schemaCols: Seq[String], incoming: Seq[String]): Map[String, String] = {
+    val best = schemaCols.flatMap { sc =>
       val m = extractOne(sc, incoming) match {
         case Some((_, score)) if sc == "candidate" && score < Threshold =>
           extractOne("choice", incoming)
         case other => other
       }
-      m.collect { case (c, score) if score > Threshold => sc -> c }
-    }.toMap
+      m.collect { case (c, score) if score > Threshold => (sc, c, score) }
+    }
+    // maxBy keeps the first of equal maxima, i.e. schema order on a tie
+    best.groupBy(_._2).values.map(_.maxBy(_._3)).map(t => t._1 -> t._2).toMap
+  }
 }

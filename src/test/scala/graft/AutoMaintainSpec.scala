@@ -220,6 +220,34 @@ class AutoMaintainSpec extends SparkSpec {
     }
   }
 
+  test("an async pass that throws surfaces from awaitMaintenance, once") {
+    import spark.implicits._
+    val dir = fresh("asyncfail")
+    Lake.create(Seq((1L, "a", 10L)).toDF("id", "grp", "v"), dir, "id",
+      targetFiles = 1)
+    MatView.define(spark, dir, dir + "-view", Seq("grp"), Seq("v"))
+    MatView.enableAutoMaintenance(MatView.MaintainPolicy(async = true))
+    // the pass throws before it touches data, outside runPass's
+    // per-view containment
+    MatView.passGate.set(new java.util.concurrent.CountDownLatch(0) {
+      override def await(t: Long, u: java.util.concurrent.TimeUnit): Boolean =
+        throw new IllegalArgumentException("injected pass failure")
+    })
+    try {
+      Lake.upsert(spark, dir, Seq((2L, "b", 20L)).toDF("id", "grp", "v"))
+      assert(Lake.latestVersion(dir) === 2L, "writer must not fail")
+      val e = intercept[IllegalStateException](MatView.awaitMaintenance())
+      assert(e.getMessage.contains(dir))
+      assert(e.getCause.getMessage === "injected pass failure")
+      assert(MatView.get(dir).exists(_.builtVersion == 1L))
+      MatView.awaitMaintenance() // reported once, then cleared
+    } finally {
+      MatView.passGate.set(null)
+      MatView.disableAutoMaintenance()
+      MatView.unregister(dir)
+    }
+  }
+
   test("independent sources' passes OVERLAP on the bounded pool; " +
       "per-source ordering holds (round 14)") {
     import spark.implicits._

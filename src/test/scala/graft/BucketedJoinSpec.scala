@@ -15,7 +15,7 @@ class BucketedJoinSpec extends AnyFunSuite {
   // dedicated session: needs a warehouse dir for managed tables
   private lazy val spark: SparkSession = {
     val wh = Files.createTempDirectory("graft_wh").toFile.getPath
-    SparkSession.builder()
+    LocalDirs.configure(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

@@ -28,6 +28,20 @@ class FuzzyMatchSpec extends AnyFunSuite {
       "total_votes" -> "Total Votes"))
   }
 
+  test("one source column feeds only the schema column it scores highest against") {
+    // election_day also clears the threshold against "Election Date"
+    assert(FuzzyMatch.wratio("election_day", "Election Date") > FuzzyMatch.Threshold)
+    val m = FuzzyMatch.mapColumns(
+      Seq("election_day", "election_date", "county"), Seq("Election Date", "County"))
+    assert(m === Map("election_date" -> "Election Date", "county" -> "County"))
+  }
+
+  test("a tie between schema columns keeps the first in schema order") {
+    val m = FuzzyMatch.mapColumns(Seq("vote_a", "vote_b"), Seq("Vote"))
+    assert(FuzzyMatch.wratio("vote_a", "Vote") === FuzzyMatch.wratio("vote_b", "Vote"))
+    assert(m === Map("vote_a" -> "Vote"))
+  }
+
   test("candidate falls back to matching 'choice'") {
     val m = FuzzyMatch.mapColumns(Seq("candidate"), Seq("Choice", "County"))
     assert(m === Map("candidate" -> "Choice"))

@@ -102,6 +102,22 @@ class IngestJobSpec extends SparkSpec {
     assert(totals === Map("WAKE" -> None, "DURHAM" -> Some(7L), "ORANGE" -> Some(11L)))
   }
 
+  test("a batch without an Election Day column counts only its one malformed total") {
+    // `Election Date` feeds election_date alone: it is not also cast
+    // into the vote count election_day, which would store three nulls
+    // and count them malformed
+    val in = batch(
+      "a.csv" -> ("County,Election Date,Contest Name,Choice,Total Votes\n" +
+        "WAKE,2012-11-06,US SENATE,Jane Doe,5#\n" +
+        "DURHAM,2012-11-06,US SENATE,John Roe,7\n"),
+      "b.tsv" -> ("Total Votes\tChoice\tContest Name\tElection Date\tCounty\n" +
+        "11\tJane Doe\tGOVERNOR\t2012-11-06\tORANGE\n"))
+    val r = IngestJob.ingest(spark, in, store(), ContestSchema.precinct)
+    assert(r.rows === 3L)
+    assert(r.malformedCells === 1L)
+    assert(r.malformed.filter(_._2 > 0) === Map("total_votes" -> 1L))
+  }
+
   test("header-only batch writes no rows and returns 0") {
     val in = batch("a.csv" -> "County,Contest Name,Total Votes\n")
     assert(IngestJob.run(spark, in, store(), ContestSchema.precinct,
