@@ -80,18 +80,7 @@ object Bench {
     // More task slots help the scan/codegen stages; FEWER shuffle
     // partitions keep the 96-query tail's stages from drowning in
     // per-task overhead at this data scale. Both remain overridable.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Graft.defaultCores.toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(8, cpus.toInt).toString)
-    val spark = Graft.builder(s"local[$cpus]", shuffle.toInt)
-      // testdata files are single small parquets (lineitem@sf0.1 ≈ 11 MB);
-      // the 128 MB default split → 1-task scans. 4 MB splits let scans
-      // use the cores while shuffle stages already use `cpus` partitions.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.toolSession()
     // Warm the JVM/codegen/file-listing paths so per-query numbers
     // measure the query, not first-touch costs.
     Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")

@@ -8,19 +8,10 @@ import org.apache.spark.sql.SparkSession
   * WholeStageCodegen coverage. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    // honor the bench contract's env knobs so a dumped plan matches
-    // what Bench actually executes (sf, core count, shuffle width) —
-    // defaults keep the original quick-look behavior
+    // Bench's session (Graft.toolSession), so a dumped plan matches
+    // what Bench executes; the sf defaults to sf0.001 for a quick look
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(8, cpus).toString).toInt
-    val spark = Graft.builder(s"local[$cpus]", shuffle)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Graft.toolSession("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing_summary", "x8_join_star", "a1_county_rollup",
         "x7_topk_global", "x2_minhash_lsh", "x3_cosine_topk",

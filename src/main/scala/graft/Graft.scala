@@ -45,6 +45,28 @@ object Graft {
         // honor a V2 scan's KeyGroupedPartitioning instead of shuffling
         .config("spark.sql.sources.v2.bucketing.enabled", "true"))
 
+  /** The session of the timing and inspection mains (`Bench`,
+    * `QueryTime`, `ColdTime`, `JobProfile`, `SkewAudit`, `Explain`), so
+    * a number or a plan one of them prints is taken under the same
+    * settings as the others: `SPARK_GRAFT_CPUS` cores (default
+    * [[defaultCores]]), `SPARK_GRAFT_SHUFFLE` shuffle partitions
+    * (default min(8, cores)), 4 MB scan splits at a 1 MB open cost —
+    * the testdata files are single small parquets (lineitem@sf0.1 ≈
+    * 11 MB), so the 128 MB default split would make every scan one
+    * task — and no UI. */
+  def toolSession(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString).toInt
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt)
+      .getOrElse(math.min(8, cpus))
+    val s = builder(s"local[$cpus]", shuffle)
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+
   /** `getOrCreate` returns a PRE-EXISTING session unchanged (its
     * builder-time extensions never ran in that case), so the function
     * surface is (re-)registered post-hoc — temp-function registration

@@ -545,7 +545,7 @@ object SparkEntry {
     // layout's pushed one-year range opens only intersecting files
     ("x8_lake_date_skip", graft.lake.LakeQueries.lakeDateSkip _,
       Some(graft.lake.LakeQueries.lakeDateSkipSql)),
-    // round-9: two writer threads race upsertWithRetry through a
+    // round-9: two writer threads race a retried upsert through a
     // barrier; both land, versions pinned, snapshot = relational merge
     ("x8_lake_concurrent", graft.lake.LakeQueries.lakeConcurrent _,
       Some(graft.lake.LakeQueries.lakeConcurrentSql)),

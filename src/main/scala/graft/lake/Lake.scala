@@ -444,15 +444,9 @@ object Lake {
     * until [[publishTxn]]. The flag file writes BEFORE the delta
     * (crash between the two self-heals as "no transaction"). */
   def upsertPending(spark: SparkSession, dir: String, updates: DataFrame,
-      txnRoot: String, txnId: String, targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = mergedFileList(spark, dir, m, updates, targetFiles)
-    commitImpl(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns),
-      pending = Some((txnRoot, txnId)))
-    base + 1L
-  }
+      txnRoot: String, txnId: String, targetFiles: Int = 2): Long =
+    commitNext(dir, pending = Some((txnRoot, txnId)))(m => Some(m.copy(
+      files = foldKeys(spark, dir, m, Some(updates), None, targetFiles))))
 
   /** Atomically publish a file under the link(2) protocol; returns
     * false when the target already exists. */
@@ -488,17 +482,6 @@ object Lake {
     }
   }
 
-  /** Stage + atomically publish manifest `m` as version `m.version`,
-    * DELTA-ENCODED against `parent` (None for version 1 / a full
-    * rewrite): the log record carries only the files added and removed
-    * — O(files touched) bytes, the property LakeSpec measures. Every
-    * [[CheckpointInterval]]-th version also writes a full checkpoint.
-    * Throws [[CommitConflict]] if the version already committed — the
-    * caller re-reads the table state and retries (or aborts; see
-    * [[withRetry]]). (`private[graft]` so LakeSpec can drive the
-    * two-writers race directly — the public ops always derive the
-    * target version from the manifest they read, so a same-version
-    * race needs two actors.) */
   /** POST-COMMIT hooks (round 12, VERDICT r11 #1): observers invoked
     * with (table dir, committed version) after a VISIBLE commit
     * publishes — the seam the MV plane's automatic incremental
@@ -530,10 +513,66 @@ object Lake {
     }
   }
 
+  /** Stage + atomically publish manifest `m` as version `m.version`,
+    * DELTA-ENCODED against `parent` (None for version 1 / a full
+    * rewrite): the log record carries only the files added and removed
+    * — O(files touched) bytes, the property LakeSpec measures. Every
+    * [[CheckpointInterval]]-th version also writes a full checkpoint.
+    * Throws [[CommitConflict]] if the version already committed — the
+    * caller re-reads the table state and retries (or aborts; see
+    * [[withRetry]]). (`private[graft]` so LakeSpec can drive the
+    * two-writers race directly — the public ops always derive the
+    * target version from the manifest they read, so a same-version
+    * race needs two actors.) */
   private[graft] def commit(dir: String, parent: Option[Manifest], m: Manifest): Unit = {
     commitImpl(dir, parent, m, pending = None)
     fireCommitHooks(dir, m.version)
   }
+
+  /** The next-version step every write on an existing table takes:
+    * read the head manifest, let `next` derive the new one from it,
+    * and commit that as head + 1 — staged under the cross-table
+    * transaction `pending` names ([[upsertPending]]), else visible
+    * with its hooks fired. A `None` from `next` is a no-op: nothing
+    * commits and the head version returns. `rewriteOnly` stamps the
+    * commit as row-preserving maintenance ([[RewriteOnlyTxn]]).
+    * Returns the table's version after the step. */
+  private def commitNext(dir: String, rewriteOnly: Boolean = false,
+      pending: Option[(String, String)] = None)(
+      next: Manifest => Option[Manifest]): Long = {
+    val base = latestVersion(dir)
+    require(base > 0L, s"no lake table at $dir")
+    val m = manifest(dir, base)
+    next(m).fold(base) { n =>
+      val v = base + 1L
+      commitImpl(dir, Some(m), n.copy(version = v,
+        txns = if (rewriteOnly) n.txns + (RewriteOnlyTxn -> v) else n.txns), pending)
+      if (pending.isEmpty) fireCommitHooks(dir, v)
+      v
+    }
+  }
+
+  /** The exactly-once step of the streaming writes ([[streamUpsert]],
+    * [[streamMerge]], [[streamOverwrite]]): the (appId, txnVersion)
+    * replay marker commits atomically WITH the data manifest, so a
+    * replayed micro-batch (Structured Streaming re-runs the last
+    * uncommitted batch with the SAME batch id after a failure)
+    * observes its marker already recorded and commits nothing —
+    * at-least-once delivery becomes exactly-once table state. The
+    * first batch creates the table keyed by `key`, its `files` derived
+    * against an empty version-0 manifest. Returns the (possibly
+    * unchanged) latest version. */
+  private def commitOnce(dir: String, key: String, appId: String,
+      txnVersion: Long)(files: Manifest => Seq[FileEntry]): Long =
+    if (latestVersion(dir) == 0L) {
+      commit(dir, None, Manifest(1L, key, files(Manifest(0L, key, Nil)),
+        Map(appId -> txnVersion)))
+      1L
+    } else commitNext(dir) { m =>
+      require(m.key == key, s"table at $dir is keyed by ${m.key}, not $key")
+      if (m.txns.get(appId).exists(_ >= txnVersion)) None // replay: no-op
+      else Some(m.copy(files = files(m), txns = m.txns + (appId -> txnVersion)))
+    }
 
   // ---- AUTO-COMPACT (round 12): small-file management on the hook ---------
   //
@@ -696,12 +735,6 @@ object Lake {
     sys.error("unreachable")
   }
 
-  /** [[upsert]] under the optimistic-concurrency loop — the production
-    * entry point for concurrent writers. */
-  def upsertWithRetry(spark: SparkSession, dir: String, updates: DataFrame,
-      targetFiles: Int = 2, maxAttempts: Int = 5): Long =
-    withRetry(maxAttempts)(upsert(spark, dir, updates, targetFiles))
-
   /** MERGE: one ATOMIC commit applying an upsert batch and a delete
     * key set together — the full Delta `MERGE INTO` shape (`WHEN
     * MATCHED UPDATE / WHEN NOT MATCHED INSERT / WHEN MATCHED DELETE`)
@@ -715,75 +748,26 @@ object Lake {
     * columns map positionally onto the table's key columns. */
   def merge(spark: SparkSession, dir: String, updates: DataFrame,
       deleteKeys: DataFrame, targetFiles: Int = 2,
-      txn: Option[(String, Long)] = None): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = mergedWithDeletes(spark, dir, m, updates, deleteKeys, targetFiles)
+      txn: Option[(String, Long)] = None): Long =
     // an optional (appId, version) marker commits ATOMICALLY with the
     // merge — [[graft.lake.MatView.refresh]] records the absorbed
     // source version this way, so a crash between the data commit and
     // its sidecar write is reconcilable from the log (ADVICE r10)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns ++ txn))
-    base + 1L
-  }
+    commitNext(dir)(m => Some(m.copy(txns = m.txns ++ txn, files =
+      foldKeys(spark, dir, m, Some(updates), Some(deleteKeys), targetFiles))))
 
-  /** The post-merge file list: survivors of the touched files
-    * anti-joined against the union key set, live updates folded back
-    * in, untouched files carried by reference. */
-  private def mergedWithDeletes(spark: SparkSession, dir: String, m: Manifest,
-      updates: DataFrame, deleteKeys: DataFrame,
-      targetFiles: Int): Seq[FileEntry] = {
-    val kc = keyCols(m.key)
-    require(deleteKeys.columns.length == kc.length,
-      s"delete keys must have ${kc.length} column(s) for key '${m.key}'")
-    // key frames here only feed semi/anti joins, which ignore
-    // duplicate keys: a distinct() would add a shuffle and nothing else
-    val delKeys = deleteKeys.toDF(kc: _*)
-    val allKeys = updates.select(kc.map(col): _*).unionByName(delKeys)
-    val touchedNames = touchedFileNames(spark, m, allKeys)
-    val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
-    val liveUpdates = updates.join(delKeys, kc, "left_anti")
-    val newFiles = {
-      val folded =
-        if (touched.isEmpty) liveUpdates
-        else {
-          val old = readTouched(spark, dir, touched, m.schemaJson)
-          old.join(allKeys, kc, "left_anti")
-            .unionByName(liveUpdates, allowMissingColumns = true)
-        }
-      writeFiles(folded, dir, m.key, targetFiles)
-    }
-    untouched ++ newFiles
-  }
-
-  /** EXACTLY-ONCE CDC APPLY for streaming sinks — [[merge]] with the
-    * (appId, txnVersion) replay marker committed atomically with the
-    * manifest: the downstream half of a bronze→silver pipeline, where
-    * each micro-batch of a change feed lands as ONE atomic
-    * upsert+delete commit and a replayed batch observes its marker
-    * and no-ops (the [[streamUpsert]] contract extended to deletes).
-    * Creates the table on the first batch (its deletes, necessarily
-    * aimed at nothing, drop out through the live-update anti-join). */
+  /** EXACTLY-ONCE CDC APPLY for streaming sinks — [[merge]] under the
+    * exactly-once step ([[commitOnce]]): the downstream half of a
+    * bronze→silver pipeline, where each micro-batch of a change feed
+    * lands as ONE atomic upsert+delete commit and a replayed batch
+    * observes its marker and no-ops. On the first batch the deletes,
+    * necessarily aimed at nothing, drop out through the live-update
+    * anti-join. */
   def streamMerge(spark: SparkSession, dir: String, updates: DataFrame,
       deleteKeys: DataFrame, key: String, appId: String, txnVersion: Long,
-      targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    if (base == 0L) {
-      val kc = keyCols(key)
-      val live = updates.join(deleteKeys.toDF(kc: _*), kc, "left_anti")
-      val files = writeFiles(live, dir, key, targetFiles)
-      commit(dir, None, Manifest(1L, key, files, Map(appId -> txnVersion)))
-      return 1L
-    }
-    val m = manifest(dir, base)
-    require(m.key == key, s"table at $dir is keyed by ${m.key}, not $key")
-    if (m.txns.get(appId).exists(_ >= txnVersion)) return base // replay: no-op
-    val files = mergedWithDeletes(spark, dir, m, updates, deleteKeys, targetFiles)
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, files, m.txns + (appId -> txnVersion)))
-    base + 1L
-  }
+      targetFiles: Int = 2): Long =
+    commitOnce(dir, key, appId, txnVersion)(m =>
+      foldKeys(spark, dir, m, Some(updates), Some(deleteKeys), targetFiles))
 
   /** Storage-level GC for UNREFERENCED data files: the staged writes
     * of [[withRetry]] losers and crashed writers land in data subdirs
@@ -854,10 +838,6 @@ object Lake {
       targetFiles: Int): Seq[FileEntry] =
     writeFilesBy(df, dir, key, targetFiles, keyCols(key).map(col), Nil)
 
-  /** Generalized writer: cluster (range-partition + in-file sort) by
-    * arbitrary expressions and record per-file [min,max] stats for the
-    * key plus any extra integer columns — one stats pass over the
-    * fresh files, metadata-cheap. */
   /** ORDER-PRESERVING 64-bit encoding of a string's first 8 UTF-8
     * bytes (big-endian, zero-padded, unsigned→signed shift): byte-wise
     * lexicographic order on strings maps to signed-long order on
@@ -906,6 +886,10 @@ object Lake {
       case _ => p.children.isEmpty
     }
 
+  /** Generalized writer: cluster (range-partition + in-file sort) by
+    * arbitrary expressions and record per-file [min,max] stats for the
+    * key plus any extra integer columns — one stats pass over the
+    * fresh files, metadata-cheap. */
   private def writeFilesBy(df0: DataFrame, dir: String, key: String,
       targetFiles: Int, cluster: Seq[org.apache.spark.sql.Column],
       extraStatCols: Seq[String],
@@ -1110,14 +1094,13 @@ object Lake {
       }.toSeq
   }
 
-  /** Test/A-B seam: force the distributed stats pass so suites can
-    * assert footer-derived entries match it bit-for-bit on the same
-    * files (and benchmarks can price the two paths). Defaults on; the
-    * env knob exists for measurement, not tuning — the fallback is
-    * automatic and per-write either way. */
+  /** Test/A-B seam: switched off, writes take the distributed stats
+    * pass and reads infer their schema, so suites can assert
+    * footer-derived entries match it bit-for-bit on the same files.
+    * Always on outside tests — the fallback is automatic and per-write
+    * either way. */
   private[graft] val footerStatsEnabled =
-    new java.util.concurrent.atomic.AtomicBoolean(
-      !sys.env.get("SPARK_GRAFT_FOOTER_STATS").contains("off"))
+    new java.util.concurrent.atomic.AtomicBoolean(true)
 
   /** Per-file stats derived DRIVER-SIDE from the parquet footers the
     * write just produced (guide §5/§6: the post-write stats pass was a
@@ -1244,7 +1227,7 @@ object Lake {
           // this path trusts Spark's partitioner contract (the same
           // contract the V2 bucket function resolves against) and
           // keeps the verifying pass as the fallback/A-B seam
-          // (SPARK_GRAFT_FOOTER_STATS=off). Unparseable name → fall back.
+          // ([[footerStatsEnabled]] off). Unparseable name → fall back.
           val bstat = buckets.map { n =>
             val idx = f.getName.split('-').lift(1)
               .flatMap(s => scala.util.Try(s.toLong).toOption)
@@ -1357,13 +1340,6 @@ object Lake {
     spark.read.schema("f STRING, pos BIGINT")
       .parquet(dvDirs.distinct.map(d => Paths.get(dir, d).toString): _*)
 
-  /** Snapshot read at `version` (default: latest). `mergeSchema` makes
-    * SCHEMA EVOLUTION work: after an upsert added columns, a
-    * snapshot's untouched old files lack them — the merged read fills
-    * them with NULLs (additive evolution, the Delta default; renames
-    * and type changes stay rejected by parquet's merge rules).
-    * Deletion vectors apply ([[applyDv]]): a MoR-deleted row is
-    * invisible at every version whose entry carries its mask. */
   /** Per-directory DATA-read counter: every programmatic snapshot or
     * change-feed read of a table increments its entry. Observability
     * only (specs and the `x8_mv_dim_churn` fact-untouched assert pin
@@ -1379,6 +1355,13 @@ object Lake {
   def readsOf(dir: String): Long =
     Option(readCounts.get(dir)).map(_.get).getOrElse(0L)
 
+  /** Snapshot read at `version` (default: latest). `mergeSchema` makes
+    * SCHEMA EVOLUTION work: after an upsert added columns, a
+    * snapshot's untouched old files lack them — the merged read fills
+    * them with NULLs (additive evolution, the Delta default; renames
+    * and type changes stay rejected by parquet's merge rules).
+    * Deletion vectors apply ([[applyDv]]): a MoR-deleted row is
+    * invisible at every version whose entry carries its mask. */
   def read(spark: SparkSession, dir: String, version: Long = 0L): DataFrame = {
     val v = if (version == 0L) latestVersion(dir) else version
     require(v > 0L, s"no committed version at $dir")
@@ -1416,7 +1399,7 @@ object Lake {
     * (mid-evolution snapshots), missing footer, or a file count past
     * the cap (driver reads are serial; a wide snapshot on a cluster
     * keeps the parallel job) falls back to distributed inference.
-    * `SPARK_GRAFT_FOOTER_STATS=off` forces the fallback (A/B seam). */
+    * [[footerStatsEnabled]] off forces the fallback (A/B seam). */
   private val FooterSchemaMaxFiles = 64
   private def mergedRead(spark: SparkSession, dir: String,
       files: Seq[FileEntry]): DataFrame =
@@ -1653,14 +1636,6 @@ object Lake {
         .filter(col(m.key) >= lo && col(m.key) <= hi)
   }
 
-  /** SCD1 upsert: rows of `updates` replace same-key rows and insert
-    * otherwise. Copy-on-write at FILE granularity: only files whose
-    * [min,max] key range intersects the update keys are rewritten;
-    * everything else carries forward by reference. Returns the new
-    * version. */
-  /** The shared copy-on-write merge: full new file list = untouched
-    * files by reference + rewrites of intersecting files with
-    * `updates` folded in. */
   /** The names of the table's non-empty files whose per-column key
     * bounding box holds at least one of `keyTuples`' tuples — the
     * leading column tests against minKey/maxKey, each trailing key
@@ -1730,67 +1705,65 @@ object Lake {
       .select(col("name"))
   }
 
-  private def mergedFileList(spark: SparkSession, dir: String, m: Manifest,
-      updates: DataFrame, targetFiles: Int): Seq[FileEntry] = {
-    val key = m.key
-    val kc = keyCols(key)
-    // file pruning: only rows that can collide live in files whose
-    // key bounding box the update tuples intersect
-    val touchedNames = touchedFileNames(spark, m, updates)
+  /** The keyed copy-on-write fold every key-addressed write shares
+    * ([[upsert]], [[merge]], [[delete]] and their stream and pending
+    * variants): the table's new file list after `upserts` replace
+    * same-key rows or insert, and `deleteKeys` remove rows by key —
+    * deletes win over updates when a key appears in both. Only files
+    * whose key bounding box the union key set touches
+    * ([[touchedFileNames]]) are read; their survivors anti-join against
+    * that key set, the live upserts union back in, and everything else
+    * carries forward by reference. `deleteKeys`' columns map
+    * POSITIONALLY onto the table's key columns. `targetFiles` 0 writes
+    * as many files as were touched. */
+  private def foldKeys(spark: SparkSession, dir: String, m: Manifest,
+      upserts: Option[DataFrame], deleteKeys: Option[DataFrame],
+      targetFiles: Int): Seq[FileEntry] = {
+    val kc = keyCols(m.key)
+    // key frames here only feed semi/anti joins, which ignore
+    // duplicate keys: a distinct() would add a shuffle and nothing else
+    val dels = deleteKeys.map { d =>
+      require(d.columns.length == kc.length,
+        s"delete keys must have ${kc.length} column(s) for key '${m.key}'")
+      d.toDF(kc: _*)
+    }
+    val live = upserts.map(u => dels.fold(u)(u.join(_, kc, "left_anti")))
+    val keys = (upserts.map(_.select(kc.map(col): _*)) ++ dels).reduce(_ unionByName _)
+    val touchedNames = touchedFileNames(spark, m, keys)
     val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
     val newFiles =
-      if (touched.isEmpty) writeFiles(updates, dir, key, targetFiles)
+      if (touched.isEmpty) live.toSeq.flatMap(writeFiles(_, dir, m.key, targetFiles))
       else {
-        val old = readTouched(spark, dir, touched, m.schemaJson)
-        val survivors = old.join(updates.select(kc.map(col): _*), kc, "left_anti")
+        val survivors = readTouched(spark, dir, touched, m.schemaJson)
+          .join(keys, kc, "left_anti")
         // allowMissingColumns: additive schema evolution — an upsert
         // carrying NEW columns null-fills them on surviving old rows
         // (and vice versa), so the rewritten files hold the merged
         // schema while untouched files evolve lazily at read time
-        writeFiles(survivors.unionByName(updates, allowMissingColumns = true),
-          dir, key, targetFiles)
+        writeFiles(live.fold(survivors)(survivors.unionByName(_, allowMissingColumns = true)),
+          dir, m.key, if (targetFiles > 0) targetFiles else touched.size)
       }
     untouched ++ newFiles
   }
 
+  /** SCD1 upsert: rows of `updates` replace same-key rows and insert
+    * otherwise. Copy-on-write at FILE granularity: only files whose
+    * [min,max] key range intersects the update keys are rewritten;
+    * everything else carries forward by reference. Returns the new
+    * version. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
-      targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = mergedFileList(spark, dir, m, updates, targetFiles)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns))
-    base + 1L
-  }
+      targetFiles: Int = 2): Long =
+    commitNext(dir)(m => Some(m.copy(
+      files = foldKeys(spark, dir, m, Some(updates), None, targetFiles))))
 
-  /** EXACTLY-ONCE upsert for streaming sinks: the (appId, txnVersion)
-    * marker commits atomically WITH the data manifest, so a replayed
-    * micro-batch (Structured Streaming re-runs the last uncommitted
-    * batch with the SAME batch id after a failure) observes its marker
-    * already recorded and commits nothing — at-least-once delivery
-    * becomes exactly-once table state. Creates the table on the first
+  /** EXACTLY-ONCE upsert for streaming sinks: [[upsert]] under the
+    * exactly-once step ([[commitOnce]]). Creates the table on the first
     * batch. Returns the (possibly unchanged) latest version. */
   def streamUpsert(spark: SparkSession, dir: String, updates: DataFrame,
-      key: String, appId: String, txnVersion: Long, targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    if (base == 0L) {
-      val files = writeFiles(updates, dir, key, targetFiles)
-      commit(dir, None, Manifest(1L, key, files, Map(appId -> txnVersion)))
-      return 1L
-    }
-    val m = manifest(dir, base)
-    require(m.key == key, s"table at $dir is keyed by ${m.key}, not $key")
-    if (m.txns.get(appId).exists(_ >= txnVersion)) return base // replay: no-op
-    val files = mergedFileList(spark, dir, m, updates, targetFiles)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns + (appId -> txnVersion)))
-    base + 1L
-  }
+      key: String, appId: String, txnVersion: Long, targetFiles: Int = 2): Long =
+    commitOnce(dir, key, appId, txnVersion)(m =>
+      foldKeys(spark, dir, m, Some(updates), None, targetFiles))
 
-  /** Compaction: rewrite the CURRENT snapshot into `targetFiles`
-    * range-clustered files as a new version — the small-file
-    * maintenance op every streaming-ingest table needs. Data is
-    * byte-identical (same rows, better layout); older versions keep
-    * referencing the old files until [[vacuum]]. */
   /** Txn app id stamped by every ROW-PRESERVING maintenance commit
     * (compaction, bucketed/z-order/clustered re-layout, bloom
     * attachment, deletion-vector materialization): the commit's
@@ -1806,6 +1779,9 @@ object Lake {
     * maintenance. */
   val RewriteOnlyTxn = "graft-rewrite-only"
 
+  private val rewriteOnlyCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), (Long, java.nio.file.attribute.FileTime, Boolean)]()
+
   /** Did version `v` commit as row-preserving maintenance?
     * Conservative false when the version's delta record is gone.
     *
@@ -1819,9 +1795,6 @@ object Lake {
     * cache key carries the file's (size, mtime) — one stat call
     * replaces the read+parse, and a recreated table never serves a
     * stale verdict. */
-  private val rewriteOnlyCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, java.nio.file.attribute.FileTime, Boolean)]()
-
   def rewriteOnly(dir: String, v: Long): Boolean = {
     val p = deltaPath(dir, v)
     if (!Files.exists(p)) return false
@@ -1840,14 +1813,14 @@ object Lake {
     }
   }
 
-  def compact(spark: SparkSession, dir: String, targetFiles: Int): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = writeFiles(read(spark, dir, base), dir, m.key, targetFiles)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+  /** Compaction: rewrite the CURRENT snapshot into `targetFiles`
+    * range-clustered files as a new version — the small-file
+    * maintenance op every streaming-ingest table needs. Data is
+    * byte-identical (same rows, better layout); older versions keep
+    * referencing the old files until [[vacuum]]. */
+  def compact(spark: SparkSession, dir: String, targetFiles: Int): Long =
+    commitNext(dir, rewriteOnly = true)(m => Some(m.copy(
+      files = writeFiles(read(spark, dir, m.version), dir, m.key, targetFiles))))
 
   /** HASH-BUCKETED re-layout (the Iceberg `bucket(n, key)` partition
     * transform as a maintenance op): rewrite the CURRENT snapshot so
@@ -1867,13 +1840,9 @@ object Lake {
     * files until [[vacuum]]. */
   def compactBucketed(spark: SparkSession, dir: String, buckets: Int): Long = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = writeFilesBy(read(spark, dir, base), dir, m.key, buckets,
-      keyCols(m.key).map(col), Nil, buckets = Some(buckets))
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
+    commitNext(dir, rewriteOnly = true)(m => Some(m.copy(files =
+      writeFilesBy(read(spark, dir, m.version), dir, m.key, buckets,
+        keyCols(m.key).map(col), Nil, buckets = Some(buckets)))))
   }
 
   /** The snapshot's bucket count iff EVERY file carries a consistent
@@ -1903,19 +1872,13 @@ object Lake {
     * qualify — there is nothing to pack. Cost: O(small-file bytes),
     * never O(table). */
   def compactSmall(spark: SparkSession, dir: String, rowThreshold: Long,
-      targetFiles: Int = 1): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val (small, packed) = m.files.partition(_.rows < rowThreshold)
-    if (small.size < 2) return base
-    val fresh = writeFiles(readSubset(spark, dir, base, small), dir, m.key,
-      targetFiles)
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, packed ++ fresh,
-        m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+      targetFiles: Int = 1): Long =
+    commitNext(dir, rewriteOnly = true) { m =>
+      val (small, packed) = m.files.partition(_.rows < rowThreshold)
+      if (small.size < 2) None
+      else Some(m.copy(files = packed ++ writeFiles(
+        readSubset(spark, dir, m.version, small), dir, m.key, targetFiles)))
+    }
 
   /** Snapshot REPLACE (SQL `INSERT OVERWRITE` via
     * [[graft.sources.LakeSource]]): commit `df` as the table's new
@@ -1923,19 +1886,8 @@ object Lake {
     * and exactly-once txn markers carry forward, so time travel still
     * resolves every replaced snapshot until [[vacuum]]. */
   def overwrite(spark: SparkSession, dir: String, df: DataFrame,
-      targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = writeFiles(df, dir, m.key, targetFiles)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns))
-    base + 1L
-  }
-
-  /** [[overwrite]] under the optimistic-concurrency loop. */
-  def overwriteWithRetry(spark: SparkSession, dir: String, df: DataFrame,
-      targetFiles: Int = 2, maxAttempts: Int = 5): Long =
-    withRetry(maxAttempts)(overwrite(spark, dir, df, targetFiles))
+      targetFiles: Int = 2): Long =
+    commitNext(dir)(m => Some(m.copy(files = writeFiles(df, dir, m.key, targetFiles))))
 
   /** One commit's audit row, derived ENTIRELY from its delta-log entry
     * — no extra bookkeeping is written anywhere ([[history]]). `kind`
@@ -1990,28 +1942,32 @@ object Lake {
   def addColumns(spark: SparkSession, dir: String,
       cols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(cols.nonEmpty, "ALTER TABLE ADD COLUMNS requires at least one column")
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val cur = snapshotSchema(spark, dir, base)
-    // each added column mints a FRESH physical name (suffixed with the
-    // declaring version): a column added after a same-named DROP can
-    // then never resurrect the dropped data from old files, and new
-    // writes land under the fresh name unambiguously
-    val added = cols.map { f =>
-      require(!cur.fieldNames.exists(_.equalsIgnoreCase(f.name)),
-        s"column ${f.name} already exists (schema: ${cur.fieldNames.mkString(", ")})")
-      require(f.nullable,
-        s"added column ${f.name} must be nullable: existing rows null-fill")
-      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata)
-        .putString(PhysKey, s"${f.name}__c${base + 1L}").build())
+    declareSchema(spark, dir) { (m, cur) =>
+      // each added column mints a FRESH physical name (suffixed with the
+      // declaring version): a column added after a same-named DROP can
+      // then never resurrect the dropped data from old files, and new
+      // writes land under the fresh name unambiguously
+      val added = cols.map { f =>
+        require(!cur.fieldNames.exists(_.equalsIgnoreCase(f.name)),
+          s"column ${f.name} already exists (schema: ${cur.fieldNames.mkString(", ")})")
+        require(f.nullable,
+          s"added column ${f.name} must be nullable: existing rows null-fill")
+        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putString(PhysKey, s"${f.name}__c${m.version + 1L}").build())
+      }
+      org.apache.spark.sql.types.StructType(cur.fields ++ added)
     }
-    val next = org.apache.spark.sql.types.StructType(cur.fields ++ added)
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, m.files, m.txns, Some(next.json)))
-    base + 1L
   }
+
+  /** The METADATA-ONLY commit of the `ALTER TABLE` ops: `next` maps the
+    * head manifest and its logical schema to the new declaration, which
+    * rides the delta log; no data file is touched. */
+  private def declareSchema(spark: SparkSession, dir: String)(
+      next: (Manifest, org.apache.spark.sql.types.StructType) =>
+        org.apache.spark.sql.types.StructType): Long =
+    commitNext(dir)(m => Some(m.copy(
+      schemaJson = Some(next(m, snapshotSchema(spark, dir, m.version)).json))))
 
   /** SQL `ALTER TABLE … RENAME COLUMN a TO b` — a METADATA-ONLY commit
     * under column mapping: the logical field re-labels, its physical
@@ -2023,27 +1979,22 @@ object Lake {
     * register definitions no longer resolve. */
   def renameColumn(spark: SparkSession, dir: String,
       from: String, to: String): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val kc = keyCols(m.key).map(_.toLowerCase)
-    require(!kc.contains(from.toLowerCase),
-      s"cannot rename key column $from (the manifest and file stats key on it)")
-    val cur = snapshotSchema(spark, dir, base)
-    val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(from))
-    require(idx >= 0, s"no column $from (schema: ${cur.fieldNames.mkString(", ")})")
-    require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
-      s"column $to already exists")
-    val f = cur.fields(idx)
-    val renamed = org.apache.spark.sql.types.StructField(to, f.dataType,
-      f.nullable, new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())
-    val next = org.apache.spark.sql.types.StructType(cur.fields.updated(idx, renamed))
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, m.files, m.txns, Some(next.json)))
+    val v = declareSchema(spark, dir) { (m, cur) =>
+      require(!keyCols(m.key).map(_.toLowerCase).contains(from.toLowerCase),
+        s"cannot rename key column $from (the manifest and file stats key on it)")
+      val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(from))
+      require(idx >= 0, s"no column $from (schema: ${cur.fieldNames.mkString(", ")})")
+      require(!cur.fieldNames.exists(_.equalsIgnoreCase(to)),
+        s"column $to already exists")
+      val f = cur.fields(idx)
+      org.apache.spark.sql.types.StructType(cur.fields.updated(idx,
+        org.apache.spark.sql.types.StructField(to, f.dataType,
+          f.nullable, new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())))
+    }
     MatView.invalidateReferencing(dir, from)
     MatView.invalidateDistinctReferencing(dir, from)
-    base + 1L
+    v
   }
 
   /** SQL `ALTER TABLE … DROP COLUMN` — metadata-only: the field leaves
@@ -2054,29 +2005,22 @@ object Lake {
     * them. */
   def dropColumn(spark: SparkSession, dir: String,
       name: String): (Long, Seq[String]) = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val kc = keyCols(m.key).map(_.toLowerCase)
-    require(!kc.contains(name.toLowerCase),
-      s"cannot drop key column $name")
-    val cur = snapshotSchema(spark, dir, base)
-    require(cur.fieldNames.exists(_.equalsIgnoreCase(name)),
-      s"no column $name (schema: ${cur.fieldNames.mkString(", ")})")
-    val kept = cur.fields.filterNot(_.name.equalsIgnoreCase(name))
-    require(kept.length >= 1, "cannot drop the last column")
-    // the remaining fields pin their physical names explicitly: the
-    // mapping must stay active so a later same-named ADD (fresh phys)
-    // can never be confused with this column's stored data
-    val pinned = kept.map(f => f.copy(
-      metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putString(PhysKey, physName(f)).build()))
-    val next = org.apache.spark.sql.types.StructType(pinned)
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, m.files, m.txns, Some(next.json)))
-    val dropped = MatView.invalidateReferencing(dir, name) ++
-      MatView.invalidateDistinctReferencing(dir, name)
-    (base + 1L, dropped)
+    val v = declareSchema(spark, dir) { (m, cur) =>
+      require(!keyCols(m.key).map(_.toLowerCase).contains(name.toLowerCase),
+        s"cannot drop key column $name")
+      require(cur.fieldNames.exists(_.equalsIgnoreCase(name)),
+        s"no column $name (schema: ${cur.fieldNames.mkString(", ")})")
+      val kept = cur.fields.filterNot(_.name.equalsIgnoreCase(name))
+      require(kept.length >= 1, "cannot drop the last column")
+      // the remaining fields pin their physical names explicitly: the
+      // mapping must stay active so a later same-named ADD (fresh phys)
+      // can never be confused with this column's stored data
+      org.apache.spark.sql.types.StructType(kept.map(f => f.copy(
+        metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())))
+    }
+    (v, MatView.invalidateReferencing(dir, name) ++
+      MatView.invalidateDistinctReferencing(dir, name))
   }
 
   /** SQL `ALTER TABLE … ALTER COLUMN x TYPE t` — TYPE WIDENING as a
@@ -2088,55 +2032,36 @@ object Lake {
   def widenColumn(spark: SparkSession, dir: String, name: String,
       newType: org.apache.spark.sql.types.DataType): Long = {
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val kc = keyCols(m.key).map(_.toLowerCase)
-    require(!kc.contains(name.toLowerCase),
-      s"cannot widen key column $name (manifest stats encode its type)")
-    val cur = snapshotSchema(spark, dir, base)
-    val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(name))
-    require(idx >= 0, s"no column $name (schema: ${cur.fieldNames.mkString(", ")})")
-    val f = cur.fields(idx)
-    val ok = (f.dataType, newType) match {
-      case (IntegerType, LongType) | (IntegerType, DoubleType) |
-           (FloatType, DoubleType) => true
-      case _ => false
+    declareSchema(spark, dir) { (m, cur) =>
+      require(!keyCols(m.key).map(_.toLowerCase).contains(name.toLowerCase),
+        s"cannot widen key column $name (manifest stats encode its type)")
+      val idx = cur.fields.indexWhere(_.name.equalsIgnoreCase(name))
+      require(idx >= 0, s"no column $name (schema: ${cur.fieldNames.mkString(", ")})")
+      val f = cur.fields(idx)
+      val ok = (f.dataType, newType) match {
+        case (IntegerType, LongType) | (IntegerType, DoubleType) |
+             (FloatType, DoubleType) => true
+        case _ => false
+      }
+      require(ok, s"unsupported type change ${f.dataType.simpleString} → " +
+        s"${newType.simpleString} (lossless widenings only: int→long, " +
+        "int→double, float→double)")
+      org.apache.spark.sql.types.StructType(cur.fields.updated(idx, f.copy(dataType = newType,
+        metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())))
     }
-    require(ok, s"unsupported type change ${f.dataType.simpleString} → " +
-      s"${newType.simpleString} (lossless widenings only: int→long, " +
-      "int→double, float→double)")
-    val widened = f.copy(dataType = newType,
-      metadata = new org.apache.spark.sql.types.MetadataBuilder()
-        .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())
-    val next = org.apache.spark.sql.types.StructType(cur.fields.updated(idx, widened))
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, m.files, m.txns, Some(next.json)))
-    base + 1L
   }
 
   /** EXACTLY-ONCE snapshot replace for streaming sinks (Complete
     * output mode through [[graft.sources.LakeSink]]): [[overwrite]]
-    * with the (appId, txnVersion) replay marker committed atomically
-    * with the manifest, so a replayed micro-batch neither lands a
-    * duplicate version nor rolls the snapshot back to its own (stale)
-    * emission. Creates the table on the first batch. */
+    * under the exactly-once step ([[commitOnce]]), so a replayed
+    * micro-batch neither lands a duplicate version nor rolls the
+    * snapshot back to its own (stale) emission. Creates the table on
+    * the first batch. */
   def streamOverwrite(spark: SparkSession, dir: String, df: DataFrame,
-      key: String, appId: String, txnVersion: Long, targetFiles: Int = 2): Long = {
-    val base = latestVersion(dir)
-    if (base == 0L) {
-      val files = writeFiles(df, dir, key, targetFiles)
-      commit(dir, None, Manifest(1L, key, files, Map(appId -> txnVersion)))
-      return 1L
-    }
-    val m = manifest(dir, base)
-    require(m.key == key, s"table at $dir is keyed by ${m.key}, not $key")
-    if (m.txns.get(appId).exists(_ >= txnVersion)) return base // replay: no-op
-    val files = writeFiles(df, dir, m.key, targetFiles)
-    commit(dir, Some(m),
-      Manifest(base + 1L, m.key, files, m.txns + (appId -> txnVersion)))
-    base + 1L
-  }
+      key: String, appId: String, txnVersion: Long, targetFiles: Int = 2): Long =
+    commitOnce(dir, key, appId, txnVersion)(m =>
+      writeFiles(df, dir, m.key, targetFiles))
 
   /** Z-ORDER compaction — Delta/Iceberg `OPTIMIZE ZORDER BY (x, y)` on
     * the hand-built format: rewrite the current snapshot clustered by
@@ -2150,16 +2075,12 @@ object Lake {
     * key sort serves one predicate and table-scans the other. */
   def compactZOrder(spark: SparkSession, dir: String, xCol: String,
       yCol: String, targetFiles: Int): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
     val z = graft.analytics.ZOrder.zValue(
       col(xCol).cast("long").bitwiseAND(lit(0xFFFFL)),
       col(yCol).cast("long").bitwiseAND(lit(0xFFFFL)))
-    val files = writeFilesBy(read(spark, dir, base), dir, m.key, targetFiles,
-      Seq(z), Seq(xCol, yCol))
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
+    commitNext(dir, rewriteOnly = true)(m => Some(m.copy(files =
+      writeFilesBy(read(spark, dir, m.version), dir, m.key, targetFiles,
+        Seq(z), Seq(xCol, yCol)))))
   }
 
   /** The file names a box read must open at `version` — manifest-stat
@@ -2202,15 +2123,10 @@ object Lake {
     * the SQL surface) opens only the files whose recorded window
     * intersects. */
   def compactClustered(spark: SparkSession, dir: String,
-      clusterCols: Seq[String], targetFiles: Int): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = writeFilesBy(read(spark, dir, base), dir, m.key, targetFiles,
-      clusterCols.map(col), clusterCols)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, files, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+      clusterCols: Seq[String], targetFiles: Int): Long =
+    commitNext(dir, rewriteOnly = true)(m => Some(m.copy(files =
+      writeFilesBy(read(spark, dir, m.version), dir, m.key, targetFiles,
+        clusterCols.map(col), clusterCols))))
 
   /** Files a [lo, hi] read on an integer-ENCODED stat column must
     * open (dates in epoch days, timestamps in epoch micros — exposed
@@ -2403,18 +2319,14 @@ object Lake {
     * (range stats on the id are useless when the id is scattered
     * across time; membership bits are not). */
   def compactWithBloom(spark: SparkSession, dir: String, clusterCol: String,
-      bloomCol: String, targetFiles: Int): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val files = writeFilesBy(read(spark, dir, base), dir, m.key, targetFiles,
-      Seq(col(clusterCol)), Seq(clusterCol))
-    val blooms = fileBlooms(spark, dir, files, bloomCol)
-    val withBlooms = files.map(f =>
-      f.copy(blooms = Map(bloomCol -> blooms(f.name))))
-    commit(dir, Some(m), Manifest(base + 1L, m.key, withBlooms, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+      bloomCol: String, targetFiles: Int): Long =
+    commitNext(dir, rewriteOnly = true) { m =>
+      val files = writeFilesBy(read(spark, dir, m.version), dir, m.key, targetFiles,
+        Seq(col(clusterCol)), Seq(clusterCol))
+      val blooms = fileBlooms(spark, dir, files, bloomCol)
+      Some(m.copy(files = files.map(f =>
+        f.copy(blooms = Map(bloomCol -> blooms(f.name))))))
+    }
 
   /** ANALYZE as a maintenance op (round 12, VERDICT r11 #6): rewrite
     * the current snapshot — re-clustered by the leading key, so the
@@ -2432,23 +2344,17 @@ object Lake {
     * predicates (the round-11 gap: only clustered key components
     * carried NDV). */
   def compactAnalyzed(spark: SparkSession, dir: String, statCols: Seq[String],
-      targetFiles: Int, clusterCol: Option[String] = None): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val head = m.key.split(',').head.trim
-    // optionally RE-CLUSTER by an analyzed column instead of the key:
-    // its per-file ranges then become pairwise disjoint, which is what
-    // unlocks TopN boundary pruning on a non-key sort column (nulls
-    // range-cluster low and are excluded from the stats; the recorded
-    // null counts keep the prune's row accounting exact)
-    val files = writeFilesBy(read(spark, dir, base), dir, m.key, targetFiles,
-      Seq(col(clusterCol.getOrElse(head))), statCols)
-    val enriched = attachColumnSketches(spark, dir, files, statCols)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, enriched,
-      m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+      targetFiles: Int, clusterCol: Option[String] = None): Long =
+    commitNext(dir, rewriteOnly = true) { m =>
+      // optionally RE-CLUSTER by an analyzed column instead of the key:
+      // its per-file ranges then become pairwise disjoint, which is what
+      // unlocks TopN boundary pruning on a non-key sort column (nulls
+      // range-cluster low and are excluded from the stats; the recorded
+      // null counts keep the prune's row accounting exact)
+      val files = writeFilesBy(read(spark, dir, m.version), dir, m.key, targetFiles,
+        Seq(col(clusterCol.getOrElse(keyCols(m.key).head))), statCols)
+      Some(m.copy(files = attachColumnSketches(spark, dir, files, statCols)))
+    }
 
   /** Per-file HLL sketches + exact null counts for `cols` over freshly
     * written files — one distributed pass, one ≤ few-KiB hex string
@@ -2571,15 +2477,11 @@ object Lake {
     * OPPOSITE: keeping the newest markers suppresses replays of
     * batches that are already part of history, which is the correct
     * exactly-once reading. */
-  def restore(spark: SparkSession, dir: String, version: Long): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    require(version >= 1L && version <= base, s"no version $version at $dir")
-    val cur = manifest(dir, base)
-    val target = manifest(dir, version)
-    commit(dir, Some(cur), Manifest(base + 1L, cur.key, target.files, cur.txns))
-    base + 1L
-  }
+  def restore(spark: SparkSession, dir: String, version: Long): Long =
+    commitNext(dir) { cur =>
+      require(version >= 1L && version <= cur.version, s"no version $version at $dir")
+      Some(cur.copy(files = manifest(dir, version).files))
+    }
 
   /** Vacuum: physically delete data files referenced ONLY by versions
     * older than the `retainVersions` most recent, plus those versions'
@@ -2884,45 +2786,44 @@ object Lake {
   def updateWhere(spark: SparkSession, dir: String,
       cond: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)],
-      targetFiles: Int = 0): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val kc = keyCols(m.key)
-    val schema = snapshotSchema(spark, dir, base)
-    sets.foreach { case (c, _) =>
-      require(!kc.contains(c),
-        s"UPDATE must not assign key column '$c' (delete + reinsert moves a key)")
-      require(schema.fieldNames.contains(c),
-        s"unknown column '$c' in UPDATE SET (schema: ${schema.fieldNames.mkString(", ")})")
+      targetFiles: Int = 0): Long =
+    commitNext(dir) { m =>
+      val kc = keyCols(m.key)
+      val schema = snapshotSchema(spark, dir, m.version)
+      sets.foreach { case (c, _) =>
+        require(!kc.contains(c),
+          s"UPDATE must not assign key column '$c' (delete + reinsert moves a key)")
+        require(schema.fieldNames.contains(c),
+          s"unknown column '$c' in UPDATE SET (schema: ${schema.fieldNames.mkString(", ")})")
+      }
+      val condExpr = org.apache.spark.sql.graft.Bridge.expression(cond)
+      val candidates = graft.sources.LakeScanBuilder.pruneEntries(
+        m.files, kc.head, Seq(physPredicate(dir, condExpr)))
+      val byPath = candidates.map(f =>
+        Paths.get(dir, f.name).toAbsolutePath.normalize.toString -> f.name).toMap
+      val touchedNames =
+        if (candidates.isEmpty) Set.empty[String]
+        else readSubset(spark, dir, m.version, candidates)
+          .filter(cond).select(input_file_name().as("f")).distinct().collect()
+          .flatMap(r => byPath.get(Paths.get(r.getString(0).stripPrefix("file:"))
+            .toAbsolutePath.normalize.toString))
+          .toSet
+      if (touchedNames.isEmpty) None
+      else {
+        val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
+        val byName = sets.toMap
+        val updated = readSubset(spark, dir, m.version, touched).select(
+          schema.fields.toSeq.map { f =>
+            byName.get(f.name) match {
+              case Some(v) =>
+                when(cond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+              case None => col(f.name)
+            }
+          }: _*)
+        Some(m.copy(files = untouched ++ writeFiles(updated, dir, m.key,
+          if (targetFiles > 0) targetFiles else touched.size)))
+      }
     }
-    val condExpr = org.apache.spark.sql.graft.Bridge.expression(cond)
-    val candidates = graft.sources.LakeScanBuilder.pruneEntries(
-      m.files, kc.head, Seq(physPredicate(dir, condExpr)))
-    if (candidates.isEmpty) return base
-    val byPath = candidates.map(f =>
-      Paths.get(dir, f.name).toAbsolutePath.normalize.toString -> f.name).toMap
-    val touchedNames = readSubset(spark, dir, base, candidates)
-      .filter(cond).select(input_file_name().as("f")).distinct().collect()
-      .flatMap(r => byPath.get(Paths.get(r.getString(0).stripPrefix("file:"))
-        .toAbsolutePath.normalize.toString))
-      .toSet
-    if (touchedNames.isEmpty) return base
-    val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
-    val byName = sets.toMap
-    val updated = readSubset(spark, dir, base, touched).select(
-      schema.fields.toSeq.map { f =>
-        byName.get(f.name) match {
-          case Some(v) =>
-            when(cond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    val newFiles = writeFiles(updated, dir, m.key,
-      if (targetFiles > 0) targetFiles else math.max(touched.size, 1))
-    commit(dir, Some(m), Manifest(base + 1L, m.key, untouched ++ newFiles, m.txns))
-    base + 1L
-  }
 
   private def baseName(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
@@ -2945,73 +2846,66 @@ object Lake {
     * self-contained mask; superseded sidecars stay for time travel
     * until [[vacuum]]). A no-match delete commits nothing. */
   def deleteWhereMor(spark: SparkSession, dir: String,
-      cond: org.apache.spark.sql.Column): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val kc = keyCols(m.key)
-    val condExpr = org.apache.spark.sql.graft.Bridge.expression(cond)
-    val candidates = graft.sources.LakeScanBuilder.pruneEntries(
-      m.files, kc.head, Seq(physPredicate(dir, condExpr)))
-    if (candidates.isEmpty) return base
-    // physical read + logical re-label WITH the metadata columns kept
-    // (toLogical would project them away; cond references logical names)
-    val decl = snapshotSchema(spark, dir, base)
-    val withMeta = spark.read.schema(physSchema(decl))
-      .parquet(candidates.map(f => Paths.get(dir, f.name).toString): _*)
-      .withColumn("__f", col("_metadata.file_name"))
-      .withColumn("__p", col("_metadata.row_index"))
-      .select(decl.fields.map(f => col(physName(f)).as(f.name)).toSeq ++
-        Seq(col("__f"), col("__p")): _*)
-    val existing = candidates.flatMap(_.dv).distinct
-    val live =
-      if (existing.isEmpty) withMeta
-      else withMeta.join(
-        broadcast(readMasks(spark, dir, existing)
-          .select(col("f").as("__mf"), col("pos").as("__mp"))),
-        col("__f") === col("__mf") && col("__p") === col("__mp"), "left_anti")
-    val marks = live.filter(cond)
-      .select(col("__f").as("f"), col("__p").as("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touchedBase = marks.select("f").distinct().collect()
-        .map(_.getString(0)).toSet
-      if (touchedBase.isEmpty) return base
-      val byBase = m.files.map(f => baseName(f.name) -> f).toMap
-      val touchedEntries = touchedBase.toSeq.map(byBase)
-      val oldDvs = touchedEntries.flatMap(_.dv).distinct
-      val full =
-        if (oldDvs.isEmpty) marks
-        else marks.unionByName(readMasks(spark, dir, oldDvs)
-          .filter(col("f").isin(touchedBase.toSeq: _*)))
-      val sub = s"dv-${java.util.UUID.randomUUID}"
-      // sidecars are tiny beside data files (two longs per deleted
-      // row); one part file keeps the mask read a single footer
-      full.coalesce(1).write.parquet(Paths.get(dir, sub).toString)
-      val newFiles = m.files.map(f =>
-        if (touchedBase(baseName(f.name))) f.copy(dv = Some(sub)) else f)
-      commit(dir, Some(m), Manifest(base + 1L, m.key, newFiles, m.txns))
-      base + 1L
-    } finally { marks.unpersist(false); () }
-  }
+      cond: org.apache.spark.sql.Column): Long =
+    commitNext(dir) { m =>
+      val condExpr = org.apache.spark.sql.graft.Bridge.expression(cond)
+      val candidates = graft.sources.LakeScanBuilder.pruneEntries(
+        m.files, keyCols(m.key).head, Seq(physPredicate(dir, condExpr)))
+      if (candidates.isEmpty) None
+      else {
+        // physical read + logical re-label WITH the metadata columns kept
+        // (toLogical would project them away; cond references logical names)
+        val decl = snapshotSchema(spark, dir, m.version)
+        val withMeta = spark.read.schema(physSchema(decl))
+          .parquet(candidates.map(f => Paths.get(dir, f.name).toString): _*)
+          .withColumn("__f", col("_metadata.file_name"))
+          .withColumn("__p", col("_metadata.row_index"))
+          .select(decl.fields.map(f => col(physName(f)).as(f.name)).toSeq ++
+            Seq(col("__f"), col("__p")): _*)
+        val existing = candidates.flatMap(_.dv).distinct
+        val live =
+          if (existing.isEmpty) withMeta
+          else withMeta.join(
+            broadcast(readMasks(spark, dir, existing)
+              .select(col("f").as("__mf"), col("pos").as("__mp"))),
+            col("__f") === col("__mf") && col("__p") === col("__mp"), "left_anti")
+        val marks = live.filter(cond)
+          .select(col("__f").as("f"), col("__p").as("pos"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val touchedBase = marks.select("f").distinct().collect()
+            .map(_.getString(0)).toSet
+          if (touchedBase.isEmpty) None
+          else {
+            val byBase = m.files.map(f => baseName(f.name) -> f).toMap
+            val oldDvs = touchedBase.toSeq.map(byBase).flatMap(_.dv).distinct
+            val full =
+              if (oldDvs.isEmpty) marks
+              else marks.unionByName(readMasks(spark, dir, oldDvs)
+                .filter(col("f").isin(touchedBase.toSeq: _*)))
+            val sub = s"dv-${java.util.UUID.randomUUID}"
+            // sidecars are tiny beside data files (two longs per deleted
+            // row); one part file keeps the mask read a single footer
+            full.coalesce(1).write.parquet(Paths.get(dir, sub).toString)
+            Some(m.copy(files = m.files.map(f =>
+              if (touchedBase(baseName(f.name))) f.copy(dv = Some(sub)) else f)))
+          }
+        } finally { marks.unpersist(false); () }
+      }
+    }
 
   /** Materialize deletion vectors: rewrite every masked file minus its
     * masked rows as plain files, one commit ([[deleteWhereMor]]'s
     * repayment half — `CALL graft.rewrite_dvs`). Unmasked files carry
     * forward by reference; the change feed across this commit is
     * EMPTY (no live row changes). No-op without masks. */
-  def rewriteDvs(spark: SparkSession, dir: String, targetFiles: Int = 0): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val (dvd, plain) = m.files.partition(_.dv.isDefined)
-    if (dvd.isEmpty) return base
-    val live = readSubset(spark, dir, base, dvd)
-    val fresh = writeFiles(live, dir, m.key,
-      if (targetFiles > 0) targetFiles else dvd.size)
-    commit(dir, Some(m), Manifest(base + 1L, m.key, plain ++ fresh, m.txns + (RewriteOnlyTxn -> (base + 1L))))
-    base + 1L
-  }
+  def rewriteDvs(spark: SparkSession, dir: String, targetFiles: Int = 0): Long =
+    commitNext(dir, rewriteOnly = true) { m =>
+      val (dvd, plain) = m.files.partition(_.dv.isDefined)
+      if (dvd.isEmpty) None
+      else Some(m.copy(files = plain ++ writeFiles(readSubset(spark, dir, m.version, dvd),
+        dir, m.key, if (targetFiles > 0) targetFiles else dvd.size)))
+    }
 
   /** Live (mask-excluded) row count of the current snapshot's masked
     * files vs their physical rows — the DV bookkeeping surfaced for
@@ -3028,27 +2922,11 @@ object Lake {
     (dvd.size, dvd.map(_.rows).sum, masked)
   }
 
-  /** Delete by key set (copy-on-write, same file skipping). `keys`'
-    * columns map POSITIONALLY onto the table's key columns. */
-  def delete(spark: SparkSession, dir: String, keys: DataFrame): Long = {
-    val base = latestVersion(dir)
-    require(base > 0L, s"no lake table at $dir")
-    val m = manifest(dir, base)
-    val key = m.key
-    val kc = keyCols(key)
-    require(keys.columns.length == kc.length,
-      s"delete keys must have ${kc.length} column(s) for key '$key'")
-    val keyDf = keys.toDF(kc: _*)
-    val touchedNames = touchedFileNames(spark, m, keyDf)
-    val (touched, untouched) = m.files.partition(f => touchedNames(f.name))
-    val newFiles =
-      if (touched.isEmpty) Nil
-      else {
-        val old = readTouched(spark, dir, touched, m.schemaJson)
-        val survivors = old.join(keyDf, kc, "left_anti")
-        writeFiles(survivors, dir, key, math.max(touched.size, 1))
-      }
-    commit(dir, Some(m), Manifest(base + 1L, key, untouched ++ newFiles, m.txns))
-    base + 1L
-  }
+  /** Delete by key set (copy-on-write, same file skipping): each
+    * rewrite writes as many files as it touched, and a version commits
+    * even when no file is touched. `keys`' columns map POSITIONALLY onto the
+    * table's key columns. */
+  def delete(spark: SparkSession, dir: String, keys: DataFrame): Long =
+    commitNext(dir)(m => Some(m.copy(
+      files = foldKeys(spark, dir, m, None, Some(keys), targetFiles = 0))))
 }

@@ -699,8 +699,8 @@ object LakeQueries {
     * previously lived only in LakeSpec): two writer THREADS holding
     * key-disjoint insert batches (the even and odd halves of the `%3`
     * orders slice, priority-stamped per writer) release through one
-    * CyclicBarrier and race [[Lake.upsertWithRetry]] against the same
-    * table. Exactly one loses the version-2 `link(2)` publish,
+    * CyclicBarrier and race [[Lake.upsert]] under [[Lake.withRetry]]
+    * against the same table. Exactly one loses the version-2 `link(2)` publish,
     * re-reads the winner's manifest, re-derives its merge, and lands
     * as version 3 — so `lake_versions` is PINNED to 3 and the final
     * snapshot must equal the relational union of the base slice and
@@ -722,7 +722,7 @@ object LakeQueries {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = batches.map { df =>
       val t = new Thread(() => {
-        try { gate.await(); Lake.upsertWithRetry(spark, dir, df); () }
+        try { gate.await(); Lake.withRetry()(Lake.upsert(spark, dir, df)); () }
         catch { case e: Throwable => errs.add(e); () }
       })
       t.start(); t

@@ -57,12 +57,16 @@ private[sources] class LakeSink(dir: String, key: String, appId: String,
       // relation (sameResult on the normalized batch plan), so the
       // micro-batch executes exactly once end to end.
       batch.count()
-      if (mode == OutputMode.Complete())
-        Lake.streamOverwrite(spark, dir, batch.toDF(), key, appId, batchId,
-          targetFiles)
-      else
-        Lake.withRetry()(Lake.streamUpsert(spark, dir, batch.toDF(), key,
-          appId, batchId, targetFiles))
+      // a commit conflict re-runs the whole exactly-once step: the retry
+      // re-reads the winner's manifest (and its replay markers) first
+      Lake.withRetry() {
+        if (mode == OutputMode.Complete())
+          Lake.streamOverwrite(spark, dir, batch.toDF(), key, appId, batchId,
+            targetFiles)
+        else
+          Lake.streamUpsert(spark, dir, batch.toDF(), key, appId, batchId,
+            targetFiles)
+      }
       ()
     } finally { batch.unpersist(); () }
   }

@@ -178,8 +178,10 @@ private[sources] class LakeTable(dir: String, version: Long,
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
     val kc = Lake.manifest(dir, Lake.latestVersion(dir)).key.split(',').map(_.trim)
+    // the keys only feed Lake.delete's semi- and anti-joins, which
+    // ignore duplicates: no distinct() shuffle
     val keys = Lake.read(spark, dir).filter(cond)
-      .select(kc.head, kc.tail.toSeq: _*).distinct()
+      .select(kc.head, kc.tail.toSeq: _*)
     Lake.withRetry()(Lake.delete(spark, dir, keys))
     ()
   }
@@ -216,17 +218,17 @@ private[sources] object LakeTable {
 
 /** Write path of the SQL surface, via the V1 fallback (`V1Write` →
   * `InsertableRelation`): `INSERT INTO` the relation is a KEY-MERGE
-  * upsert ([[Lake.upsertWithRetry]] — last-writer-wins per key, the
-  * only append semantics that preserve the format's key-uniqueness
+  * upsert ([[Lake.upsert]] — last-writer-wins per key, the only
+  * append semantics that preserve the format's key-uniqueness
   * invariant, which file skipping, CDF, and MERGE all rely on), and
   * `INSERT OVERWRITE` replaces the snapshot as a new version
-  * ([[Lake.overwriteWithRetry]]). The fallback hands over an
-  * already-resolved DataFrame (Catalyst has by-position matched and
-  * cast it to the table schema), which is exactly the input the Lake
-  * commit protocol wants — its stats derivation, range clustering,
-  * delta-encoded log, and optimistic retry are the write path; a
-  * hand-rolled `BatchWrite` would re-implement all of that per-task
-  * for zero plan benefit (the write sits above a shuffle boundary, so
+  * ([[Lake.overwrite]]), each under [[Lake.withRetry]]. The fallback
+  * hands over an already-resolved DataFrame (Catalyst has by-position
+  * matched and cast it to the table schema), which is exactly the
+  * input the Lake commit protocol wants — its stats derivation, range
+  * clustering, delta-encoded log, and optimistic retry are the write
+  * path; a hand-rolled `BatchWrite` would re-implement all of that
+  * per-task for zero plan benefit (the write sits above a shuffle boundary, so
   * there is no codegen fusion to preserve — unlike the read path,
   * where the columnar delegation is the whole point). */
 private[sources] class LakeWriteBuilder(dir: String,
@@ -237,9 +239,10 @@ private[sources] class LakeWriteBuilder(dir: String,
   override def build(): Write = new V1Write {
     override def toInsertableRelation: org.apache.spark.sql.sources.InsertableRelation =
       (data: org.apache.spark.sql.DataFrame, overwrite: Boolean) =>
-        if (replaceSnapshot || overwrite)
-          Lake.overwriteWithRetry(data.sparkSession, dir, data)
-        else Lake.upsertWithRetry(data.sparkSession, dir, data)
+        Lake.withRetry() {
+          if (replaceSnapshot || overwrite) Lake.overwrite(data.sparkSession, dir, data)
+          else Lake.upsert(data.sparkSession, dir, data)
+        }
   }
 }
 

@@ -14,13 +14,7 @@ object ColdTime {
     val n = args.collectFirst { case a if a.startsWith("--n=") => a.drop(4).toInt }.getOrElse(3)
     val names = args.filterNot(_.startsWith("--"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Graft.defaultCores.toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.min(8, cpus.toInt).toString)
-    val spark = Graft.builder(s"local[$cpus]", shuffle.toInt)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.toolSession()
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
       fn(spark, sfDir).count() // warm codegen/JIT on the landed path once

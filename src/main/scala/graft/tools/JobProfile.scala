@@ -12,15 +12,7 @@ import graft.{Graft, SparkEntry}
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Graft.defaultCores.toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(8, cpus.toInt).toString)
-    val spark = Graft.builder(s"local[$cpus]", shuffle.toInt)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.toolSession()
     args.filterNot(_.startsWith("--")).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

@@ -20,14 +20,7 @@ import graft.Graft
 object SkewAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Graft.defaultCores.toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(8, cpus.toInt).toString)
-    val spark = Graft.builder(s"local[$cpus]", shuffle.toInt)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.toolSession()
 
     def audit(label: String, banded: org.apache.spark.sql.DataFrame): Unit = {
       val counts = banded.groupBy(col("band"), col("bh"))

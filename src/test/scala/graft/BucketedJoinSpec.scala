@@ -12,19 +12,39 @@ import graft.sink.Sinks
   * shuffle exchange (the persistent co-location strategy for 100 TB). */
 class BucketedJoinSpec extends AnyFunSuite {
 
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+  private val LeakCheck = "the shared session's broadcast threshold is unchanged after the suite"
+
+  /** The threshold the suite's shared session read before this spec
+    * first touched it (Spark's default when no session existed yet). */
+  private var priorThreshold = ""
+
   // dedicated session: needs a warehouse dir for managed tables
   private lazy val spark: SparkSession = {
+    priorThreshold = SparkSession.getDefaultSession.map(_.conf.get(Threshold))
+      .getOrElse(new org.apache.spark.sql.internal.SQLConf().getConfString(Threshold))
     val wh = Files.createTempDirectory("graft_wh").toFile.getPath
     LocalDirs.configure(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
       .config("spark.ui.enabled", "false")
       .appName("bucketed")
       .getOrCreate()
   }
+
+  /** Each test runs with broadcasts off (the sort-merge path these
+    * plans are about). `getOrCreate` hands every spec the same
+    * session, so the threshold is set around each test and restored
+    * after it, never at build time. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    if (test.name == LeakCheck) super.withFixture(test)
+    else {
+      val prior = spark.conf.get(Threshold)
+      spark.conf.set(Threshold, "-1")
+      try super.withFixture(test) finally spark.conf.set(Threshold, prior)
+    }
 
   /** A killed JVM can leave a managed table's LOCATION behind with no
     * catalog entry (the in-memory metastore dies with the process);
@@ -127,5 +147,10 @@ class BucketedJoinSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(viaTable === viaInline,
       s"ivf-table result diverged: ${viaTable.length} vs ${viaInline.length} rows")
+  }
+
+  // last in the file, so it runs after every test above
+  test(LeakCheck) {
+    assert(spark.conf.get(Threshold) === priorThreshold)
   }
 }

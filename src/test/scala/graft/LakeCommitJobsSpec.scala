@@ -12,17 +12,19 @@ import graft.lake.Lake
 /** Guards on the Spark jobs a copy-on-write lake commit and a
   * deletion-vector read start, on a KB-sized four-file table. A commit
   * decides which files it touches with one semi-join and feeds its
-  * anti-joins undeduplicated keys; mask sidecars are read with their
-  * declared schema. A change that adds a metadata job back to either
-  * path fails here. */
+  * anti-joins undeduplicated keys (SQL `DELETE`'s included); mask
+  * sidecars are read with their declared schema. A change that adds a
+  * metadata job back to either path fails here. */
 class LakeCommitJobsSpec extends SparkSpec {
   import spark.implicits._
 
   private val Rows = 2000L
 
-  private def table(tag: String): String = {
-    val d = new java.io.File(Scratch.root,
-      s"graft-commitjobs-$tag-${spark.sparkContext.applicationId}")
+  private def table(tag: String): String =
+    table(new java.io.File(Scratch.root,
+      s"graft-commitjobs-$tag-${spark.sparkContext.applicationId}"))
+
+  private def table(d: java.io.File): String = {
     Scratch.rm(d)
     Lake.create(spark.range(1L, Rows + 1L).select(col("id").as("k"),
       (col("id") % 5).cast("string").as("p"), (col("id") * 3L).as("c")),
@@ -36,14 +38,9 @@ class LakeCommitJobsSpec extends SparkSpec {
 
   /** `body`'s result and the call sites of the jobs it started (in its
     * job group, which Spark SQL hands to the threads it runs the
-    * query's stages on). It runs at Spark's default broadcast
-    * threshold, the engine's setting: the shared session may carry
-    * another spec's `-1` (BucketedJoinSpec builds with it), and without
-    * broadcasts every small join plans as shuffles and extra jobs. */
+    * query's stages on). */
   private def jobsOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
-    val threshold = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.getOption(threshold)
     val group = s"commitjobs-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -52,7 +49,6 @@ class LakeCommitJobsSpec extends SparkSpec {
           jobs.add(Option(e.properties.getProperty("callSite.short"))
             .getOrElse(e.stageInfos.maxBy(_.stageId).name))
     }
-    spark.conf.set(threshold, "10MB")
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
     try {
@@ -62,7 +58,6 @@ class LakeCommitJobsSpec extends SparkSpec {
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
-      prior.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
     }
   }
 
@@ -87,6 +82,28 @@ class LakeCommitJobsSpec extends SparkSpec {
     assert(back.count() === Rows - 50L)
     assert(back.filter(col("p") === "u").count() === 200L)
     assert(back.filter(col("k").between(1201L, 1250L)).count() === 0L)
+  }
+
+  test("a 100-key copy-on-write delete from a four-file table runs at most 5 jobs") {
+    val dir = table("delete")
+    val (_, jobs) = jobsOf(Lake.delete(spark, dir, (1201L to 1300L).toDF("k")))
+    info(s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+    assert(jobs.size <= 5, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(Lake.read(spark, dir).count() === Rows - 100L)
+  }
+
+  test("a SQL DELETE of 100 keys from a four-file table runs at most 5 jobs") {
+    val wh = new java.io.File(Scratch.root,
+      s"graft-commitjobs-wh-${spark.sparkContext.applicationId}")
+    Scratch.rm(wh)
+    spark.conf.set("spark.sql.catalog.commitjobs",
+      classOf[graft.sources.LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.commitjobs.warehouse", wh.getAbsolutePath)
+    val dir = table(new java.io.File(wh, "ns/t"))
+    val (_, jobs) = jobsOf(spark.sql("DELETE FROM commitjobs.ns.t WHERE k > 1200 AND k <= 1300"))
+    info(s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+    assert(jobs.size <= 5, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(Lake.read(spark, dir).count() === Rows - 100L)
   }
 
   test("repeated delete keys in a merge delete each row once; deletes win") {

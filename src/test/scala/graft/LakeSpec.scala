@@ -104,7 +104,7 @@ class LakeSpec extends SparkSpec {
     assert(Lake.latestVersion(dir) === 2L)
   }
 
-  test("upsertWithRetry: two racing writers BOTH land (loser re-merges against winner)") {
+  test("withRetry(upsert): two racing writers BOTH land (loser re-merges against winner)") {
     val dir = freshDir("retry")
     val orders = Tables.orders(spark, sf).limit(200)
     Lake.create(orders, dir, "o_orderkey", targetFiles = 4)
@@ -126,7 +126,7 @@ class LakeSpec extends SparkSpec {
           val df = spark.createDataFrame(
             java.util.Arrays.asList(rows: _*), schema)
           gate.await()
-          Lake.upsertWithRetry(spark, dir, df)
+          Lake.withRetry()(Lake.upsert(spark, dir, df))
           ()
         } catch { case e: Throwable => errs.add(e); () }
       })

@@ -791,4 +791,35 @@ class StreamingSpec extends SparkSpec {
       assert(Lake.read(spark, dir, 1L).count() === 1L)
     } finally q.stop()
   }
+
+  test("graft-lake streaming SINK: two racing complete-mode commits both land") {
+    import spark.implicits._
+    import graft.lake.Lake
+    val dir = java.nio.file.Files.createTempDirectory("graft-sink-race").toString + "/table"
+    Lake.create(Seq((7L, 1L)).toDF("user_id", "n"), dir, "user_id")
+    // two writers, each with its own replay id, emit their complete
+    // result as batch 0 behind one barrier: the loser's commit
+    // conflicts, and the sink retries its exactly-once step against
+    // the winner's version instead of failing the micro-batch
+    val gate = new java.util.concurrent.CyclicBarrier(2)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = Seq("A" -> 10L, "B" -> 20L).map { case (id, n) =>
+      val sink = new graft.sources.LakeSource().createSink(spark.sqlContext,
+        Map("path" -> dir, "txnAppId" -> id), Nil,
+        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val batch = Seq((7L, n), (8L, n)).toDF("user_id", "n")
+      val t = new Thread(() => {
+        try { gate.await(); sink.addBatch(0L, batch) }
+        catch { case e: Throwable => errs.add(e); () }
+      })
+      t.start(); t
+    }
+    threads.foreach(_.join())
+    assert(errs.isEmpty, s"racing sink commit failed: ${Option(errs.peek())}")
+    assert(Lake.latestVersion(dir) === 3L)
+    // the later commit re-read the earlier one: both replay markers ride it
+    val txns = Lake.manifest(dir, 3L).txns
+    assert(txns.get("A").contains(0L) && txns.get("B").contains(0L), txns)
+    assert(Lake.read(spark, dir).count() === 2L)
+  }
 }
