@@ -514,7 +514,7 @@ object SparkEntry {
     ("x8_mv_dim_minmax", graft.lake.LakeQueries.mvDimMinMax _,
       Some(graft.lake.LakeQueries.mvDimMinMaxSql)),
     // round-13: extrema x insert-only fact delta x dim churn composed
-    // in one serve — view and aux extrema roll via MinMaxFeed, moves
+    // in one serve — view and aux extrema roll through the feed, moves
     // recompute off the extrema-fresh aux
     ("x8_mv_star_minmax", graft.lake.LakeQueries.mvStarMinMax _,
       Some(graft.lake.LakeQueries.mvStarMinMaxSql)),

@@ -203,10 +203,10 @@ object Lake {
         })))
       .mkString("", "\n", "\n")
 
-  private def strHex(s: String): String =
+  private[lake] def strHex(s: String): String =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       .map(b => f"${b & 0xff}%02x").mkString
-  private def hexToStr(h: String): String =
+  private[lake] def hexToStr(h: String): String =
     new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
       java.nio.charset.StandardCharsets.UTF_8)
 
@@ -917,7 +917,7 @@ object Lake {
   private def writeFilesByImpl(df: DataFrame, dir: String, key: String,
       targetFiles: Int, cluster: Seq[org.apache.spark.sql.Column],
       extraStatCols: Seq[String],
-      buckets: Option[Int] = None): Seq[FileEntry] = {
+      buckets: Option[Int]): Seq[FileEntry] = {
     val sub = s"data-${java.util.UUID.randomUUID}"
     val out = Paths.get(dir, sub).toString
     val shaped = buckets match {
@@ -1574,7 +1574,7 @@ object Lake {
     * Deletion vectors applied either way. */
   private def readTouched(spark: SparkSession, dir: String,
       files: Seq[FileEntry],
-      schemaJson: Option[String] = None): DataFrame = {
+      schemaJson: Option[String]): DataFrame = {
     countRead(dir)
     schemaJson.map(schemaFromJson).filter(mappingActive) match {
       case Some(decl) =>
@@ -2207,25 +2207,12 @@ object Lake {
       .filter(col(colName) >= lo && col(colName) <= hi)
   }
 
-  /** The k probe bit positions of `value` — computed THROUGH Spark's
-    * own xxhash64 so build and probe can never drift (a 1-row job;
-    * bounded, and only run per point lookup). */
-  private def bloomPositions(spark: SparkSession, value: Long): Seq[Int] = {
-    val exprs = (0 until BloomHashes).map(i =>
-      pmod(xxhash64(lit(i), lit(value)), lit(BloomBits.toLong)).as(s"p$i"))
-    val r = spark.range(1).select(exprs: _*).head()
-    (0 until BloomHashes).map(i => r.getLong(i).toInt)
-  }
-
-  private def hexBits(bs: java.util.BitSet): String =
-    bs.toByteArray.map(b => f"${b & 0xff}%02x").mkString
-
-  /** [[bloomPositions]] computed DRIVER-LOCAL via Catalyst's own
-    * XxHash64Function — bit-identical to the distributed builder's
-    * `xxhash64(lit(i), col)` chain (seed 42, left-fold over children),
-    * pinned equal by InListSpec so build and probe can never drift.
-    * Used by the scan builder's IN-list pruning, where a per-value
-    * 1-row Spark job at PLANNING time would be absurd. */
+  /** The k probe bit positions of `value`, computed DRIVER-LOCAL via
+    * Catalyst's own XxHash64Function — bit-identical to the distributed
+    * builder's `xxhash64(lit(i), col)` chain (seed 42, left-fold over
+    * children), pinned equal by InListSpec so build and probe can never
+    * drift. Used by the scan builder's IN-list pruning, where a
+    * per-value 1-row Spark job at PLANNING time would be absurd. */
   private[graft] def bloomPositionsLocal(value: Long): Seq[Int] = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, LongType}

@@ -4031,7 +4031,7 @@ object LakeQueries {
     * pinned at the clean state) asked for `min/max(o_cents)`. The
     * fact slice is INSERT-ONLY, so the view's and the aux's extrema
     * registers roll forward via least/greatest of the feed
-    * ([[MatView.MinMaxFeed]]), and each dim move then re-derives its
+    * ([[MatView.compensated]]), and each dim move then re-derives its
     * affected groups from the extrema-fresh aux — no fact re-scan
     * anywhere. (A delete-bearing slice serves too since round 14 —
     * see `x8_mv_star_minmax_del`.) `mv_star_minmax` pins the composed
@@ -4094,7 +4094,7 @@ object LakeQueries {
     * this combination back to the raw join; round 14 serves it in one
     * plan: the groups the delete touched re-derive view and aux
     * extrema from the fact RESTRICTED to those groups
-    * ([[MatView.MinMaxRecompute]]'s `left_semi` bound — pinned into
+    * (the recompute's `left_semi` bound — pinned into
     * the hash via the plan's LeftSemi join), and the dim move then
     * runs on the extrema-fresh aux. `mv_star_minmax_del` pins the
     * `star-compensated-join` kind, the clean pins, and the bounded

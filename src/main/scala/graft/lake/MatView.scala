@@ -3,6 +3,8 @@ package graft.lake
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -179,7 +181,6 @@ object MatView {
     * declaration references must invalidate the view
     * ([[invalidateReferencing]]). */
   def viewsOver(dir: String): Seq[MvDef] = {
-    import scala.jdk.CollectionConverters._
     reg.values.asScala.filter(_.sourceDir == dir).toSeq
   }
 
@@ -191,7 +192,6 @@ object MatView {
     * the expired commits' files), so vacuum refuses instead —
     * VERDICT r11 #7. Returns (view dir, pinned version) pairs. */
   def pinsOn(dir: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
     reg.values.asScala.flatMap { d =>
       (if (d.sourceDir == dir) Seq(d.mvDir -> d.builtVersion) else Nil) ++
         d.dims.filter(_.dimDir == dir).map(ds => d.mvDir -> ds.dimVersion)
@@ -209,15 +209,10 @@ object MatView {
     * a word-boundary name match over the SQL text (identifiers are
     * lowercase ASCII word characters here). */
   def invalidateReferencing(dir: String, colName: String): Seq[String] = {
-    val lc = colName.toLowerCase
     val hit = viewsOver(dir).filter { d =>
-      val raw = (d.groupCols ++ d.sumCols ++ d.dims.map(_.factKey))
-        .exists(_.equalsIgnoreCase(lc))
-      val inDerived = d.derived.exists { case (_, e) =>
-        s"\\b${java.util.regex.Pattern.quote(lc)}\\b".r
-          .findFirstIn(e.toLowerCase).isDefined
-      }
-      raw || inDerived
+      (d.groupCols ++ d.sumCols ++ d.dims.map(_.factKey))
+        .exists(_.equalsIgnoreCase(colName)) ||
+        d.derived.exists { case (_, e) => mentions(e, colName) }
     }
     hit.foreach(d => reg.remove(regKey(d.sourceDir, d.dims.map(_.dimDir))))
     hit.map(_.mvDir)
@@ -268,18 +263,17 @@ object MatView {
   private def withDerived(df: DataFrame, derived: Seq[(String, String)]): DataFrame =
     derived.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, expr(e)) }
 
-  /** The view's input frame at a source version: the fact read, joined
-    * with every pinned dimension for star views, derived columns
-    * applied. */
-  private def sourceFrame(spark: SparkSession, sourceDir: String,
-      version: Long, dims: Seq[DimSpec],
-      derived: Seq[(String, String)]): DataFrame = {
-    val fact = Lake.read(spark, sourceDir, version)
-    withDerived(dims.foldLeft(fact) { (df, ds) =>
+  /** The view's input frame over `base` — a fact snapshot or its change
+    * feed: joined with every pinned dimension for star views, derived
+    * columns applied. Each fact row meets at most one row per dimension
+    * (or drops, exactly as it dropped from the view), so a feed's
+    * signed rows keep their meaning through the joins. */
+  private def sourceFrame(spark: SparkSession, base: DataFrame,
+      dims: Seq[DimSpec], derived: Seq[(String, String)]): DataFrame =
+    withDerived(dims.foldLeft(base) { (df, ds) =>
       df.join(broadcast(Lake.read(spark, ds.dimDir, ds.dimVersion)),
         col(ds.factKey) === col(ds.dimKey))
     }, derived)
-  }
 
   /** The register aggregate list over a prepared (joined + derived)
     * frame: count(*), then per sum column sum / non-null count / min /
@@ -296,15 +290,10 @@ object MatView {
       asOfVersion: Long, dim: Seq[DimSpec],
       derived: Seq[(String, String)]): MvDef = {
     require(groupCols.nonEmpty && sumCols.nonEmpty, "empty MV definition")
-    derived.foreach { case (n, e) =>
-      require(!derived.exists { case (m, _) =>
-        (m ne n) && e.toLowerCase.matches(s".*\\b${java.util.regex.Pattern.quote(m.toLowerCase)}\\b.*")
-      }, s"derived column $n references another derived column — " +
-        "derived expressions may reference source columns only")
-    }
+    requireSourceOnlyDerived(derived)
     val v = if (asOfVersion == 0L) Lake.latestVersion(sourceDir) else asOfVersion
     require(v > 0L, s"no lake table at $sourceDir")
-    val src = sourceFrame(spark, sourceDir, v, dim, derived)
+    val src = sourceFrame(spark, Lake.read(spark, sourceDir, v), dim, derived)
     val numeric = Set("integer", "long", "double")
     sumCols.foreach { c =>
       val dt = src.schema(c).dataType.typeName
@@ -316,15 +305,9 @@ object MatView {
     invalidatePlanMemoFor(mvDir)
     createViewTable(spark, agg, mvDir, groupCols)
     // group columns must be NULL-FREE (the doc'd contract): the lake
-    // key machinery and the refresh merge key on them. Checked against
-    // the WRITTEN view — one view-sized read, not a second source scan.
-    val nullGroups = Lake.read(spark, mvDir)
-      .filter(groupCols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
-    if (nullGroups > 0L) {
-      graft.Scratch.rm(new java.io.File(mvDir))
-      sys.error(s"MV group columns ${groupCols.mkString(",")} contain NULLs " +
-        s"in $sourceDir@v$v — a NULL group cannot key the view table")
-    }
+    // key machinery and the refresh merge key on them
+    requireNullFreeBuild(spark, mvDir, groupCols, s"MV group columns",
+      s"$sourceDir@v$v")
     val d = MvDef(sourceDir, mvDir, groupCols, sumCols, v, dim, derived)
     // star views additionally materialize ONE aux rollup at the grain
     // of (every dim's fact-side join key × the fact-owned group
@@ -358,6 +341,43 @@ object MatView {
     ()
   }
 
+  // ---- checks shared by plain and distinct views ----------------------
+
+  /** Does the SQL text `expr` reference the identifier `name`? A
+    * case-folded word-boundary match (identifiers are lowercase ASCII
+    * word characters here) — conservative: a match inside a string
+    * literal counts too. */
+  private def mentions(expr: String, name: String): Boolean =
+    s"\\b${java.util.regex.Pattern.quote(name.toLowerCase)}\\b".r
+      .findFirstIn(expr.toLowerCase).isDefined
+
+  /** Derived expressions may reference source columns only, never
+    * another derived column ([[withDerived]] applies them side by
+    * side). */
+  private def requireSourceOnlyDerived(derived: Seq[(String, String)]): Unit =
+    derived.foreach { case (n, e) =>
+      require(!derived.exists { case (m, _) => (m ne n) && mentions(e, m) },
+        s"derived column $n references another derived column — " +
+          "derived expressions may reference source columns only")
+    }
+
+  /** Does any row of `df` hold a NULL in one of `groupCols`? */
+  private def hasNullGroup(df: DataFrame, groupCols: Seq[String]): Boolean =
+    df.filter(groupCols.map(col(_).isNull).reduce(_ || _))
+      .limit(1).count() > 0L
+
+  /** Fail, removing the just-built table at `dir`, when a group column
+    * holds a NULL: a NULL group cannot key the view table. Checked
+    * against the WRITTEN table — one view-sized read, not a second
+    * source scan. */
+  private def requireNullFreeBuild(spark: SparkSession, dir: String,
+      groupCols: Seq[String], what: String, at: String): Unit =
+    if (hasNullGroup(Lake.read(spark, dir), groupCols)) {
+      graft.Scratch.rm(new java.io.File(dir))
+      sys.error(s"$what ${groupCols.mkString(",")} contain NULLs in $at — " +
+        "a NULL group cannot key the view table")
+    }
+
   private[lake] def auxDir(mvDir: String): String = s"$mvDir-aux"
 
   /** Column names of one dimension's schema (at its pinned version). */
@@ -371,9 +391,7 @@ object MatView {
   private def factSide(spark: SparkSession, d: MvDef, name: String): Boolean = {
     val allDimFields = d.dims.flatMap(dimFields(spark, _)).toSet
     d.derivedExpr(name) match {
-      case Some(e) => !allDimFields.exists(f =>
-        s"\\b${java.util.regex.Pattern.quote(f)}\\b".r
-          .findFirstIn(e.toLowerCase).isDefined)
+      case Some(e) => !allDimFields.exists(mentions(e, _))
       case None => !allDimFields.contains(name.toLowerCase)
     }
   }
@@ -392,9 +410,7 @@ object MatView {
               val factFields = Lake.snapshotSchema(spark, d.sourceDir,
                 d.builtVersion).fieldNames.map(_.toLowerCase).toSet --
                 d.dims.map(_.factKey.toLowerCase)
-              !factFields.exists(f =>
-                s"\\b${java.util.regex.Pattern.quote(f)}\\b".r
-                  .findFirstIn(e.toLowerCase).isDefined)
+              !factFields.exists(mentions(e, _))
             case None => true // a plain dim column
           }
         }
@@ -406,13 +422,16 @@ object MatView {
     (d.dims.map(_.factKey) ++
       d.groupCols.filter(factSide(spark, d, _))).distinct
 
+  /** The derived columns the aux rollup carries: the fact-side ones. */
+  private def factDerived(spark: SparkSession, d: MvDef): Seq[(String, String)] =
+    d.derived.filter { case (n, _) => factSide(spark, d, n) }
+
   private def buildAux(spark: SparkSession, d: MvDef, dir: String): Unit = {
     val gcols = auxGroupCols(spark, d)
-    val factDerived = d.derived.filter { case (n, _) => factSide(spark, d, n) }
     // fact grain: no dim joins — the aux must stay valid whatever the
     // dims later do
     val src = withDerived(
-      Lake.read(spark, d.sourceDir, d.builtVersion), factDerived)
+      Lake.read(spark, d.sourceDir, d.builtVersion), factDerived(spark, d))
     val agg = src.groupBy(gcols.map(col): _*)
       .agg(registerAggs(d.sumCols).head, registerAggs(d.sumCols).tail: _*)
     graft.Scratch.rm(new java.io.File(dir))
@@ -440,11 +459,9 @@ object MatView {
           val same = d.sourceDir == sourceDir &&
             d.groupCols.map(_.toLowerCase) == groupCols.map(_.toLowerCase) &&
             d.sumCols.map(_.toLowerCase) == sumCols.map(_.toLowerCase) &&
-            d.derived.map { case (n, e) => (n.toLowerCase, e) } ==
-              derived.map { case (n, e) => (n.toLowerCase, e) } &&
-            d.dims.map(ds => (ds.dimDir, ds.factKey.toLowerCase,
-              ds.dimKey.toLowerCase)) ==
-              dims.map(t => (t._1, t._2.toLowerCase, t._3.toLowerCase))
+            lcDerived(d.derived) == lcDerived(derived) &&
+            lcDims(d.dims.map(ds => (ds.dimDir, ds.factKey, ds.dimKey))) ==
+              lcDims(dims)
           if (same) return d
           reg.remove(regKey(d.sourceDir, d.dims.map(_.dimDir)))
         case None => // stale sidecar format: fall through to rebuild
@@ -505,32 +522,17 @@ object MatView {
   }
 
   private def recoverIfCurrent(mvDir: String): Option[MvDef] = {
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(mvDir, "_mv")).toArray(Array.empty[String])
-    val kv = lines.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
+    val kv = readSidecar(mvDir, "_mv")
     if (!kv.get("fmt").contains(SidecarFmt.toString)) return None
     // dims ride indexed sidecar keys: dim0=dir|factKey|dimKey|version
-    val dims = kv.keys.filter(_.matches("dim\\d+")).toSeq.sortBy(_.drop(3).toInt)
-      .map { k =>
-        val Array(dd, fk, dk, dv) = kv(k).split('|')
-        DimSpec(dd, fk, dk, dv.toLong)
-      }
-    // derived columns: derN=name|hex(expr) — hex keeps the line format
-    // separator-safe whatever the expression text contains
-    val derived = kv.keys.filter(_.matches("der\\d+")).toSeq.sortBy(_.drop(3).toInt)
-      .map { k =>
-        val Array(n, hx) = kv(k).split('|')
-        n -> hexToStr(hx)
-      }
-    val sidecarVersion = kv("builtVersion").toLong
-    val txnVersion = Lake.manifest(mvDir, Lake.latestVersion(mvDir))
-      .txns.getOrElse(RefreshTxnApp, 0L)
+    val dims = indexedLines(kv, "dim").map { case Array(dd, fk, dk, dv) =>
+      DimSpec(dd, fk, dk, dv.toLong)
+    }
     val d = MvDef(kv("source"), mvDir, kv("group").split(",").toSeq,
-      kv("sums").split(",").toSeq, math.max(sidecarVersion, txnVersion), dims,
-      derived)
-    if (txnVersion > sidecarVersion) writeSidecar(d) // heal the sidecar
+      kv("sums").split(",").toSeq, recoveredVersion(kv, mvDir, RefreshTxnApp),
+      dims, derivedOf(kv))
+    // heal a sidecar the txn marker is ahead of
+    if (d.builtVersion > kv("builtVersion").toLong) writeSidecar(d)
     reg.put(regKey(d.sourceDir, dims.map(_.dimDir)), d)
     Some(d)
   }
@@ -540,113 +542,173 @@ object MatView {
     * of the freshness record. */
   private val RefreshTxnApp = "graft-mv-built"
 
-  private def strHex(s: String): String =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      .map(b => f"${b & 0xff}%02x").mkString
-  private def hexToStr(h: String): String =
-    new String(h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray,
-      java.nio.charset.StandardCharsets.UTF_8)
-
-  private def writeSidecar(d: MvDef): Unit = {
-    val p = java.nio.file.Paths.get(d.mvDir, "_mv")
-    val tmp = java.nio.file.Paths.get(d.mvDir, "_mv.tmp")
-    val dimLines = d.dims.zipWithIndex.map { case (ds, i) =>
-      s"dim$i=${ds.dimDir}|${ds.factKey}|${ds.dimKey}|${ds.dimVersion}\n"
-    }.mkString
-    val derLines = d.derived.zipWithIndex.map { case ((n, e), i) =>
-      s"der$i=$n|${strHex(e)}\n"
-    }.mkString
-    java.nio.file.Files.write(tmp,
-      (s"fmt=$SidecarFmt\nsource=${d.sourceDir}\n" +
+  private def writeSidecar(d: MvDef): Unit =
+    publishSidecar(d.mvDir, "_mv",
+      s"fmt=$SidecarFmt\nsource=${d.sourceDir}\n" +
         s"group=${d.groupCols.mkString(",")}\n" +
         s"sums=${d.sumCols.mkString(",")}\nbuiltVersion=${d.builtVersion}\n" +
-        dimLines + derLines)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, p,
+        d.dims.zipWithIndex.map { case (ds, i) =>
+          s"dim$i=${ds.dimDir}|${ds.factKey}|${ds.dimKey}|${ds.dimVersion}\n"
+        }.mkString + derivedLines(d.derived))
+
+  // ---- sidecars, shared by plain (`_mv`) and distinct (`_mvd`) views ---
+
+  /** Publish a sidecar atomically: write `<name>.tmp`, then move it
+    * over `<name>`, so a reader never sees a half-written definition. */
+  private def publishSidecar(dir: String, name: String, text: String): Unit = {
+    val tmp = java.nio.file.Paths.get(dir, s"$name.tmp")
+    java.nio.file.Files.write(tmp,
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, name),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** How a compensation/refresh derives the min/max registers for the
-    * rolled-forward view:
-    *  - [[MinMaxFeed]] — the missed slice is insert-only
-    *    ([[appendOnlySlice]]): least/greatest of the stored register
-    *    and the feed's per-group extremum. O(Δ).
-    *  - [[MinMaxRecompute]] — the slice holds updates/deletes: a
-    *    removed row may have BEEN the extremum, so the groups the
-    *    delta touched re-derive min/max from the source snapshot
-    *    (filtered to those groups — the price min/max pays under
-    *    deletes in every IVM system). Used by [[refresh]] only.
-    *  - [[MinMaxNone]] — don't produce min/max columns at all. The
-    *    rewrite rule uses this when the query asks only for
-    *    Σ-maintainable aggregates, keeping the compensation plan
-    *    feed-sized whatever the slice contains.
-    */
-  private[graft] sealed trait MinMaxMode
-  private[graft] case object MinMaxFeed extends MinMaxMode
-  private[graft] case object MinMaxRecompute extends MinMaxMode
-  private[graft] case object MinMaxNone extends MinMaxMode
-
-  /** The view's rows rolled forward by the source's change feed over
-    * `(fromVersion, toVersion]` — the shared Σ-maintenance plan both
-    * [[refresh]] (which then commits it) and the rewrite rule's
-    * compensation path (which serves it directly) consume. Groups
-    * whose row count reaches zero are dropped (a group with no rows
-    * does not appear in a real aggregate). The view⋈delta join is
-    * NULL-SAFE on every group column (ADVICE r10): plain equality
-    * would split a NULL group into a stored row and a delta row. */
-  private[graft] def compensated(spark: SparkSession, d: MvDef,
-      toVersion: Long, minMax: MinMaxMode = MinMaxNone): DataFrame = {
-    // star views join the FACT feed with the pinned dimensions before
-    // re-aggregating: each change row maps to ≤1 row per dim (or drops,
-    // exactly as it dropped from the view), so the signed contribution
-    // algebra is unchanged and dim group columns become available
-    val factFeed = Lake.changes(spark, d.sourceDir, d.builtVersion,
-      toVersion, skipRewriteOnly = true)
-    val feed = withDerived(d.dims.foldLeft(factFeed) { (df, ds) =>
-      df.join(broadcast(Lake.read(spark, ds.dimDir, ds.dimVersion)),
-        col(ds.factKey) === col(ds.dimKey))
-    }, d.derived)
-    val insertExtrema: Seq[Column] =
-      if (minMax != MinMaxFeed) Nil
-      else d.sumCols.flatMap(c => Seq(
-        min(when(col("_change_type") === "insert", col(c))).as(s"__dmin_$c"),
-        max(when(col("_change_type") === "insert", col(c))).as(s"__dmax_$c")))
-    val delta = feed
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
-      .groupBy(d.groupCols.map(col): _*)
-      .agg(sum(col("__sign")).as("__dn"),
-        (d.sumCols.flatMap(c => Seq(
-          sum(col("__sign") * col(c)).as(s"__ds_$c"),
-          sum(when(col(c).isNotNull, col("__sign")).otherwise(0L))
-            .as(s"__dnn_$c"))) ++ insertExtrema): _*)
-    val cur = Lake.read(spark, d.mvDir)
-    rollForward(cur, delta, d, minMax,
-      recompute = if (minMax == MinMaxRecompute) Some((affected: DataFrame) => {
-        val recAggs = d.sumCols.flatMap(c => Seq(
-          min(col(c)).as(s"__rmin_$c"), max(col(c)).as(s"__rmax_$c")))
-        sourceFrame(spark, d.sourceDir, toVersion, d.dims, d.derived)
-          .join(broadcast(affected), d.groupCols, "left_semi")
-          .groupBy(d.groupCols.map(col): _*)
-          .agg(recAggs.head, recAggs.tail: _*)
-      }) else None,
-      affectedGroups = feed.select(d.groupCols.map(col): _*).distinct())
+  /** A sidecar's `key=value` lines (the value may contain `=`). */
+  private def readSidecar(dir: String, name: String): Map[String, String] = {
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir, name))
+      .asScala.filter(_.contains("=")).map { l =>
+        val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
+      }.toMap
   }
 
+  /** The `|`-separated fields of the indexed lines `<prefix>0`,
+    * `<prefix>1`, … in index order. */
+  private def indexedLines(kv: Map[String, String],
+      prefix: String): Seq[Array[String]] =
+    kv.keys.filter(_.matches(s"$prefix\\d+")).toSeq
+      .sortBy(_.drop(prefix.length).toInt).map(kv(_).split('|'))
+
+  /** Derived columns ride `derN=name|hex(expr)` lines — hex keeps the
+    * line format separator-safe whatever the expression text contains. */
+  private def derivedLines(derived: Seq[(String, String)]): String =
+    derived.zipWithIndex.map { case ((n, e), i) =>
+      s"der$i=$n|${Lake.strHex(e)}\n"
+    }.mkString
+
+  private def derivedOf(kv: Map[String, String]): Seq[(String, String)] =
+    indexedLines(kv, "der").map { case Array(n, hx) => n -> Lake.hexToStr(hx) }
+
+  /** A recovered view's built version: the sidecar's, or the view
+    * table's own `txnApp` marker when that is ahead — a crash between
+    * the refresh's data commit and its sidecar write; the registers
+    * already absorbed that slice (ADVICE r10). */
+  private def recoveredVersion(kv: Map[String, String], mvDir: String,
+      txnApp: String): Long =
+    math.max(kv("builtVersion").toLong,
+      Lake.manifest(mvDir, Lake.latestVersion(mvDir)).txns.getOrElse(txnApp, 0L))
+
+  /** Declared derived columns and star dimensions as a sidecar match
+    * compares them: names case-folded, expressions and paths verbatim. */
+  private def lcDerived(derived: Seq[(String, String)]): Seq[(String, String)] =
+    derived.map { case (n, e) => (n.toLowerCase, e) }
+  private def lcDims(dims: Seq[(String, String, String)]): Seq[(String, String, String)] =
+    dims.map { case (dd, fk, dk) => (dd, fk.toLowerCase, dk.toLowerCase) }
+
+  /** How a roll-forward derives the min/max registers:
+    *  - [[MinMaxFeed]] — the missed slice is insert-only
+    *    ([[appendOnlySlice]]): least/greatest of the stored register
+    *    and the feed's per-group extremum of inserted rows. O(Δ).
+    *  - [[MinMaxRecompute]] — the slice holds updates/deletes, or a
+    *    dimension moved subtotals between groups: a removed row may
+    *    have BEEN the extremum, so the groups the delta touched take
+    *    the `__rmin_<c>`/`__rmax_<c>` that `extrema` re-derives (the
+    *    price min/max pays under deletes in every IVM system).
+    *  - [[MinMaxNone]] — don't produce min/max columns at all. A serve
+    *    asking only for Σ-maintainable aggregates keeps its plan
+    *    feed-sized whatever the slice contains.
+    * A fact slice's mode is decided in one place, [[rollFeed]]. */
+  private sealed trait MinMaxMode
+  private case object MinMaxFeed extends MinMaxMode
+  private final case class MinMaxRecompute(extrema: () => DataFrame)
+      extends MinMaxMode
+  private case object MinMaxNone extends MinMaxMode
+
+  /** +1 for a change-feed row that adds (insert, update postimage), −1
+    * for one that removes (delete, update preimage). */
+  private val changeSign: Column =
+    when(col("_change_type").isin("insert", "update_postimage"), 1L)
+      .otherwise(-1L)
+
+  /** The change slice `(from, to]` of the lake table at `dir`, as every
+    * maintenance step reads it (row-preserving rewrites skipped). */
+  private def sliceFeed(spark: SparkSession, dir: String, from: Long,
+      to: Long): DataFrame =
+    Lake.changes(spark, dir, from, to, skipRewriteOnly = true)
+
+  /** The signed per-group delta of a change feed: `__dn` (rows), per
+    * sum column `__ds_<c>` (sum) and `__dnn_<c>` (non-null count), and
+    * with `feedExtrema` the inserted rows' `__dmin_<c>`/`__dmax_<c>`. */
+  private def signedDelta(feed: DataFrame, groupCols: Seq[String],
+      sumCols: Seq[String], feedExtrema: Boolean): DataFrame = {
+    def inserted(c: String) = when(col("_change_type") === "insert", col(c))
+    feed.withColumn("__sign", changeSign)
+      .groupBy(groupCols.map(col): _*)
+      .agg(sum(col("__sign")).as("__dn"),
+        (sumCols.flatMap(c => Seq(
+          sum(col("__sign") * col(c)).as(s"__ds_$c"),
+          sum(when(col(c).isNotNull, col("__sign")).otherwise(0L))
+            .as(s"__dnn_$c"))) ++
+          (if (!feedExtrema) Nil
+          else sumCols.flatMap(c => Seq(min(inserted(c)).as(s"__dmin_$c"),
+            max(inserted(c)).as(s"__dmax_$c"))))): _*)
+  }
+
+  /** `cur` rolled forward by `feed`'s signed delta at the grain of
+    * `g.groupCols` — the one fact-slice step behind the view
+    * ([[compensated]]) and its aux rollup ([[compensatedAux]]). The
+    * min/max mode is decided here: none unless `wantsExtrema`; through
+    * the feed when `(g.builtVersion, toVersion]` is insert-only;
+    * otherwise the groups the feed touched recompute them from
+    * `snapshot` (the source at `toVersion`, built only then). */
+  private def rollFeed(cur: DataFrame, feed: DataFrame, g: MvDef,
+      toVersion: Long, wantsExtrema: Boolean,
+      snapshot: => DataFrame): DataFrame = {
+    val mode =
+      if (!wantsExtrema) MinMaxNone
+      else if (appendOnlySlice(g.sourceDir, g.builtVersion, toVersion))
+        MinMaxFeed
+      else MinMaxRecompute(() => {
+        val recAggs = g.sumCols.flatMap(c => Seq(
+          min(col(c)).as(s"__rmin_$c"), max(col(c)).as(s"__rmax_$c")))
+        snapshot
+          .join(broadcast(feed.select(g.groupCols.map(col): _*).distinct()),
+            g.groupCols, "left_semi")
+          .groupBy(g.groupCols.map(col): _*)
+          .agg(recAggs.head, recAggs.tail: _*)
+      })
+    rollForward(cur, signedDelta(feed, g.groupCols, g.sumCols,
+      feedExtrema = mode == MinMaxFeed), g, mode)
+  }
+
+  /** The view's rows rolled forward by the source's change feed over
+    * `(builtVersion, toVersion]` — the Σ-maintenance plan both
+    * [[refresh]] (which commits it) and the rewrite rule's
+    * compensation path (which serves it directly) consume; the min/max
+    * registers ride along when `wantsExtrema`. Star views join the
+    * FACT feed with the pinned dimensions ([[sourceFrame]]), which
+    * makes dim group columns available. */
+  private[graft] def compensated(spark: SparkSession, d: MvDef,
+      toVersion: Long, wantsExtrema: Boolean): DataFrame =
+    rollFeed(Lake.read(spark, d.mvDir),
+      sourceFrame(spark, sliceFeed(spark, d.sourceDir, d.builtVersion,
+        toVersion), d.dims, d.derived),
+      d, toVersion, wantsExtrema,
+      sourceFrame(spark, Lake.read(spark, d.sourceDir, toVersion), d.dims,
+        d.derived))
+
   /** The shared roll-forward algebra: stored registers ⊕ a signed
-    * per-group delta frame (`__dn`, `__ds_<c>`, `__dnn_<c>`, optional
-    * `__dmin/__dmax`), joined NULL-SAFELY on the group columns.
-    * `recompute`, when set, re-derives min/max for the groups in
-    * `affectedGroups` via the supplied snapshot aggregation (the
-    * delete-slice path); [[MinMaxFeed]] rolls extrema via
-    * least/greatest instead. Used by both fact compensation and the
-    * dimension-churn path ([[refreshDim]]), which produce delta frames
-    * from different inputs but share this exact merge. */
+    * per-group delta frame (`__dn`, `__ds_<c>`, `__dnn_<c>`, and
+    * `__dmin/__dmax` under [[MinMaxFeed]]). Groups whose row count
+    * reaches zero are dropped (a group with no rows does not appear in
+    * a real aggregate). The view⋈delta join is NULL-SAFE on every group
+    * column (ADVICE r10): plain equality would split a NULL group into
+    * a stored row and a delta row. Fact compensation, the aux rollup,
+    * the distinct view and the dimension-churn move ([[refreshDim]])
+    * produce their delta frames from different inputs but share this
+    * exact merge. */
   private def rollForward(cur: DataFrame, delta: DataFrame, d: MvDef,
-      minMax: MinMaxMode, recompute: Option[DataFrame => DataFrame],
-      affectedGroups: DataFrame): DataFrame = {
+      minMax: MinMaxMode): DataFrame = {
     val v = cur.alias("__v")
     val dl = delta.alias("__d")
     val joinCond = d.groupCols
@@ -672,21 +734,21 @@ object MatView {
             case MinMaxFeed => Seq(sumPart, nnPart,
               least(col(minCol(c)), col(s"__dmin_$c")).as(minCol(c)),
               greatest(col(maxCol(c)), col(s"__dmax_$c")).as(maxCol(c)))
-            case MinMaxRecompute => Seq(sumPart, nnPart,
+            case MinMaxRecompute(_) => Seq(sumPart, nnPart,
               col(minCol(c)).as(minCol(c)), col(maxCol(c)).as(maxCol(c)))
             case MinMaxNone => Seq(sumPart, nnPart)
           }
         }: _*)
       .filter(col(countCol) > 0L)
-    recompute match {
-      case Some(rec0) =>
-        // groups the delta touched re-derive min/max from the source
-        // snapshot; untouched groups carry their stored registers. The
-        // recompute frame carries a membership marker so an affected
-        // group whose surviving values are all NULL takes the (NULL)
-        // recomputed extremum instead of falling back to the stale
-        // stored one (ADVICE r10 NULL semantics).
-        val rec = rec0(affectedGroups).withColumn("__raff", lit(true))
+    minMax match {
+      case MinMaxRecompute(extrema) =>
+        // groups the delta touched re-derive min/max; untouched groups
+        // carry their stored registers. The recompute frame carries a
+        // membership marker so an affected group whose surviving
+        // values are all NULL takes the (NULL) recomputed extremum
+        // instead of falling back to the stale stored one (ADVICE r10
+        // NULL semantics).
+        val rec = extrema().withColumn("__raff", lit(true))
         rolled.alias("__r").join(rec.alias("__c"),
             d.groupCols.map(c => col(s"__r.$c") <=> col(s"__c.$c"))
               .reduce(_ && _), "left_outer")
@@ -697,21 +759,43 @@ object MatView {
                 .otherwise(col(minCol(c))).as(minCol(c)),
               when(col("__raff").isNotNull, col(s"__rmax_$c"))
                 .otherwise(col(maxCol(c))).as(maxCol(c)))): _*)
-      case None => rolled
+      case _ => rolled
     }
   }
 
+  /** Commit a rolled-forward frame into the lake table at `dir`, keyed
+    * on `keyCols`: its rows upsert and the keys it no longer holds
+    * delete, in ONE atomic [[Lake.merge]] (a reader between two
+    * separate commits would otherwise see refreshed registers beside
+    * should-be-gone groups) that carries `txn`. No `nullFree` column
+    * may hold a NULL: a NULL cannot key the table. The one commit step
+    * of [[refresh]] (view and aux), [[refreshDim]] and
+    * [[refreshDistinct]]. */
+  private def commitRolled(spark: SparkSession, dir: String,
+      keyCols: Seq[String], rolled: DataFrame,
+      txn: Option[(String, Long)] = None,
+      nullFree: Seq[String] = Nil): Unit = {
+    val next = rolled.persist()
+    try {
+      require(nullFree.isEmpty || !hasNullGroup(next, nullFree),
+        s"refresh of $dir: the missed slice introduced NULL group " +
+          "values, which cannot key the view table — re-define instead")
+      // emptied groups: present now, absent from the rolled-forward frame
+      val dead = Lake.read(spark, dir).select(keyCols.map(col): _*)
+        .except(next.select(keyCols.map(col): _*))
+      Lake.merge(spark, dir, next, dead, targetFiles = 1, txn = txn)
+      ()
+    } finally next.unpersist()
+  }
+
   /** Incrementally roll the view forward to the source's CURRENT
-    * version: changed groups upsert and emptied groups delete in ONE
-    * atomic [[Lake.merge]] commit (a reader between two separate
-    * commits would otherwise see refreshed registers beside
-    * should-be-gone groups) that ALSO carries the absorbed source
-    * version as a txn marker — so a crash before the sidecar advance
-    * is reconciled by [[recover]] instead of double-applying the slice
-    * (ADVICE r10). Cost is O(changes since builtVersion), never a
-    * source re-scan. Star views roll their per-dimension AUX rollups
-    * forward in the same call (each its own table, same feed). No-op
-    * when already current. */
+    * version in one [[commitRolled]] that ALSO carries the absorbed
+    * source version as a txn marker — so a crash before the sidecar
+    * advance is reconciled by [[recover]] instead of double-applying
+    * the slice (ADVICE r10). Cost is O(changes since builtVersion),
+    * never a source re-scan (min/max of groups a delete touched
+    * excepted). Star views roll their AUX rollup forward in the same
+    * call (its own table, same feed). No-op when already current. */
   def refresh(spark: SparkSession, sourceDir: String,
       dimDirs: Seq[String] = Nil): MvDef = {
     val d = reg.get(regKey(sourceDir, dimDirs))
@@ -719,75 +803,18 @@ object MatView {
     val v = Lake.latestVersion(sourceDir)
     if (v == d.builtVersion) return d
     require(v > d.builtVersion, s"source $sourceDir regressed below MV build")
-    // insert-only slice → min/max roll via the feed; otherwise the
-    // affected groups recompute from the snapshot (delta-log decided)
-    val mode =
-      if (appendOnlySlice(sourceDir, d.builtVersion, v)) MinMaxFeed
-      else MinMaxRecompute
-    val next = compensated(spark, d, v, mode).persist()
-    try {
-      require(next.filter(d.groupCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).count() == 0L,
-        s"refresh of ${d.mvDir}: the missed slice introduced NULL group " +
-          "values, which cannot key the view table — re-define instead")
-      val cur = Lake.read(spark, d.mvDir)
-      // emptied groups: present now, absent from the rolled-forward view
-      val dead = cur.select(d.groupCols.map(col): _*)
-        .except(next.select(d.groupCols.map(col): _*))
-      Lake.merge(spark, d.mvDir, next, dead, targetFiles = 1,
-        txn = Some(RefreshTxnApp -> v))
-      // star views: roll the aux rollup forward with the same fact
-      // feed (its own grouping — rebuild-free dim churn depends on
-      // the aux staying fact-fresh)
-      if (d.dims.nonEmpty && Lake.latestVersion(auxDir(d.mvDir)) > 0L)
-        refreshAux(spark, d, v)
-      val nd = d.copy(builtVersion = v)
-      writeSidecar(nd)
-      reg.put(regKey(sourceDir, dimDirs), nd)
-      nd
-    } finally next.unpersist()
-  }
-
-  /** Roll the aux rollup forward to fact version `v` — the same
-    * signed-feed algebra as [[compensated]], grouped at the aux grain.
-    * The aux is dim-attribute-free, so the feed needs NO dim joins.
-    * Min/max always recompute over affected aux groups (the aux's own
-    * MinMaxRecompute): correctness over cleverness on the index. */
-  private def refreshAux(spark: SparkSession, d: MvDef, v: Long): Unit = {
-    val adir = auxDir(d.mvDir)
-    val gcols = auxGroupCols(spark, d)
-    val factDerived = d.derived.filter { case (n, _) => factSide(spark, d, n) }
-    val feed = withDerived(
-      Lake.changes(spark, d.sourceDir, d.builtVersion, v,
-        skipRewriteOnly = true), factDerived)
-    val delta = feed
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
-      .groupBy(gcols.map(col): _*)
-      .agg(sum(col("__sign")).as("__dn"),
-        d.sumCols.flatMap(c => Seq(
-          sum(col("__sign") * col(c)).as(s"__ds_$c"),
-          sum(when(col(c).isNotNull, col("__sign")).otherwise(0L))
-            .as(s"__dnn_$c"))): _*)
-    val auxDef = d.copy(groupCols = gcols, mvDir = adir)
-    val cur = Lake.read(spark, adir)
-    val next = rollForward(cur, delta, auxDef, MinMaxRecompute,
-      recompute = Some((affected: DataFrame) => {
-        val recAggs = d.sumCols.flatMap(c => Seq(
-          min(col(c)).as(s"__rmin_$c"), max(col(c)).as(s"__rmax_$c")))
-        withDerived(Lake.read(spark, d.sourceDir, v), factDerived)
-          .join(broadcast(affected), gcols, "left_semi")
-          .groupBy(gcols.map(col): _*)
-          .agg(recAggs.head, recAggs.tail: _*)
-      }),
-      affectedGroups = feed.select(gcols.map(col): _*).distinct()).persist()
-    try {
-      val dead = cur.select(gcols.map(col): _*)
-        .except(next.select(gcols.map(col): _*))
-      Lake.merge(spark, adir, next, dead, targetFiles = 1)
-      ()
-    } finally next.unpersist()
+    commitRolled(spark, d.mvDir, d.groupCols,
+      compensated(spark, d, v, wantsExtrema = true),
+      txn = Some(RefreshTxnApp -> v), nullFree = d.groupCols)
+    // star views: rebuild-free dim churn depends on the aux staying
+    // fact-fresh
+    if (dimCompensable(d))
+      commitRolled(spark, auxDir(d.mvDir), auxGroupCols(spark, d),
+        compensatedAux(spark, d, v, wantsExtrema = true))
+    val nd = d.copy(builtVersion = v)
+    writeSidecar(nd)
+    reg.put(regKey(sourceDir, dimDirs), nd)
+    nd
   }
 
   /** DIMENSION CHURN, incrementally (round 11 — replaces the
@@ -838,12 +865,12 @@ object MatView {
     cur
   }
 
-  /** The move algebra of one dimension's churn: delta/affected frames
-    * plus the extrema re-derivation, shared by [[refreshDim]] (which
-    * commits them) and the rewrite rule's SERVE-TIME star compensation
-    * ([[compensatedStar]], which consumes the deltas directly). */
-  private case class DimChurnPlan(delta: DataFrame, affected: DataFrame,
-      recompute: DataFrame => DataFrame)
+  /** The move algebra of one dimension's churn: the signed delta, and
+    * the extrema re-derivation for the groups it touches — shared by
+    * [[refreshDim]] (which commits them) and the rewrite rule's
+    * SERVE-TIME star compensation ([[compensatedStar]], which consumes
+    * them directly). */
+  private case class DimChurnPlan(delta: DataFrame, recompute: MinMaxRecompute)
 
   /** The view groups whose registers dim `i`'s churn touches, and the
     * signed per-group delta — computed from Δdim ⋈ aux (plus broadcast
@@ -872,11 +899,8 @@ object MatView {
     // the dim feed: preimages/deletes carry the OLD attribute values
     // (sign −1), postimages/inserts the NEW (sign +1); an insert of a
     // key no fact row references joins nothing and contributes nothing
-    val dimFeed = Lake.changes(spark, ds.dimDir, ds.dimVersion,
-      toDimVersion, skipRewriteOnly = true)
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
+    val dimFeed = sliceFeed(spark, ds.dimDir, ds.dimVersion, toDimVersion)
+      .withColumn("__sign", changeSign)
     val joined = withDerived(
       joinOthers(aux).join(broadcast(dimFeed),
         col(ds.factKey) === col(ds.dimKey)), dimDerived)
@@ -889,13 +913,12 @@ object MatView {
         d.sumCols.flatMap(c => Seq(
           sum(col("__sign") * col(sumCol(c))).as(s"__ds_$c"),
           sum(col("__sign") * col(nnCol(c))).as(s"__dnn_$c"))): _*)
-    val affected = joined.select(d.groupCols.map(col): _*).distinct()
     // extrema re-derive from aux ⋈ dims (dim i at its NEW version),
     // restricted to affected groups: aux mins/maxes partition the
     // fact rows per aux group, so min-of-mins over a view group is
     // exact. O(aux), bounded by dim size × fact-group fanout —
     // never O(fact).
-    val recompute = (aff: DataFrame) => {
+    val recompute = MinMaxRecompute(() => {
       val newDim = Lake.read(spark, ds.dimDir, toDimVersion)
       val reJoined = withDerived(
         joinOthers(aux).join(broadcast(newDim),
@@ -903,11 +926,13 @@ object MatView {
       val recAggs = d.sumCols.flatMap(c => Seq(
         min(when(col(nnCol(c)) > 0L, col(minCol(c)))).as(s"__rmin_$c"),
         max(when(col(nnCol(c)) > 0L, col(maxCol(c)))).as(s"__rmax_$c")))
-      reJoined.join(broadcast(aff), d.groupCols, "left_semi")
+      reJoined
+        .join(broadcast(joined.select(d.groupCols.map(col): _*).distinct()),
+          d.groupCols, "left_semi")
         .groupBy(d.groupCols.map(col): _*)
         .agg(recAggs.head, recAggs.tail: _*)
-    }
-    DimChurnPlan(delta, affected, recompute)
+    })
+    DimChurnPlan(delta, recompute)
   }
 
   /** The committed aux table, or — when the aux is missing because a
@@ -924,107 +949,29 @@ object MatView {
       toDimVersion: Long): Unit = {
     val p = dimMoveDelta(spark, d, i, toDimVersion, committedAux(spark, d),
       j => d.dims(j).dimVersion)
-    val cur = Lake.read(spark, d.mvDir)
-    val next = rollForward(cur, p.delta, d, MinMaxRecompute,
-      recompute = Some(p.recompute), affectedGroups = p.affected).persist()
-    try {
-      val dead = cur.select(d.groupCols.map(col): _*)
-        .except(next.select(d.groupCols.map(col): _*))
-      Lake.merge(spark, d.mvDir, next, dead, targetFiles = 1)
-      ()
-    } finally next.unpersist()
+    commitRolled(spark, d.mvDir, d.groupCols,
+      rollForward(Lake.read(spark, d.mvDir), p.delta, d, p.recompute))
   }
 
-  /** The aux rollup rolled to fact version `v` IN-PLAN — the same
-    * signed-feed algebra [[refreshAux]] commits, consumed directly
-    * (Σ registers only). The device that lets serve-time dim moves
-    * compose with an unabsorbed FACT delta: moves must be computed
-    * against the fact state the serve answers at. */
+  /** The aux rollup rolled to fact version `v` IN-PLAN — the
+    * [[compensated]] step at the aux grain. The aux is
+    * dim-attribute-free, so the feed needs NO dim joins, only the
+    * fact-side derived columns. [[refresh]] commits it; the serve-time
+    * star compensation consumes it directly, which lets dim moves
+    * compose with an unabsorbed FACT delta (moves must be computed
+    * against the fact state the serve answers at). Extrema roll as the
+    * view's do ([[rollFeed]]): through the feed on an insert-only
+    * slice, else recomputed for the touched aux groups from the fact
+    * snapshot — bounded by Δ's group set, never O(table). */
   private def compensatedAux(spark: SparkSession, d: MvDef, v: Long,
-      withExtrema: Boolean = false): DataFrame = {
-    // extrema ride the aux roll-forward two ways (round 14 closes the
-    // last refusal — VERDICT r13 #2): an INSERT-ONLY slice rolls them
-    // via least/greatest of stored register and feed extremum (the
-    // same MinMaxFeed rule the view registers use, O(Δ)); a
-    // delete/update slice may have removed an aux group's extremum,
-    // so the groups the slice touched re-derive min/max from the fact
-    // snapshot RESTRICTED to those groups (the same affected-group
-    // recompute the committed [[refreshAux]] runs — bounded by Δ's
-    // group set, never O(table))
-    val feedMode = withExtrema &&
-      appendOnlySlice(d.sourceDir, d.builtVersion, v)
-    val gcols = auxGroupCols(spark, d)
-    val factDerived = d.derived.filter { case (n, _) => factSide(spark, d, n) }
-    val feed = withDerived(
-      Lake.changes(spark, d.sourceDir, d.builtVersion, v,
-        skipRewriteOnly = true), factDerived)
-    val delta = feed
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
-      .groupBy(gcols.map(col): _*)
-      .agg(sum(col("__sign")).as("__dn"),
-        (d.sumCols.flatMap(c => Seq(
-          sum(col("__sign") * col(c)).as(s"__ds_$c"),
-          sum(when(col(c).isNotNull, col("__sign")).otherwise(0L))
-            .as(s"__dnn_$c"))) ++
-          (if (feedMode) d.sumCols.flatMap(c => Seq(
-            min(col(c)).as(s"__dmin_$c"), max(col(c)).as(s"__dmax_$c")))
-          else Nil)): _*)
-    val auxDef = d.copy(groupCols = gcols)
-    val mode =
-      if (!withExtrema) MinMaxNone
-      else if (feedMode) MinMaxFeed
-      else MinMaxRecompute
-    rollForward(committedAux(spark, d), delta, auxDef, mode,
-      recompute = if (mode == MinMaxRecompute)
-        Some((affected: DataFrame) => {
-          val recAggs = d.sumCols.flatMap(c => Seq(
-            min(col(c)).as(s"__rmin_$c"), max(col(c)).as(s"__rmax_$c")))
-          withDerived(Lake.read(spark, d.sourceDir, v), factDerived)
-            .join(broadcast(affected), gcols, "left_semi")
-            .groupBy(gcols.map(col): _*)
-            .agg(recAggs.head, recAggs.tail: _*)
-        })
-      else None,
-      affectedGroups = feed.select(gcols.map(col): _*).distinct())
+      wantsExtrema: Boolean): DataFrame = {
+    val derived = factDerived(spark, d)
+    rollFeed(committedAux(spark, d),
+      withDerived(sliceFeed(spark, d.sourceDir, d.builtVersion, v), derived),
+      d.copy(groupCols = auxGroupCols(spark, d)), v, wantsExtrema,
+      withDerived(Lake.read(spark, d.sourceDir, v), derived))
   }
 
-  /** SERVE-TIME STAR COMPENSATION (round 11 single-dim; round 12
-    * composes MULTIPLE churned dims AND an unabsorbed fact delta —
-    * VERDICT r11 #2): the view's rows with the fact slice
-    * `(built → factTo]` and every stale dim's churn `(pin → to]`
-    * absorbed IN-PLAN, consumed directly by the rewrite rule. Order
-    * mirrors the committed protocol (`refresh` then `refreshDim`):
-    *
-    *  1. the FACT feed (joined with the PINNED dims) compensates the
-    *     view registers to `factTo` — `Σ(Δfact ⋈ pinned dims)`;
-    *  2. the aux rollup rolls to `factTo` in-plan the same way
-    *     ([[compensatedAux]]) — moves must weigh fact-fresh subtotals;
-    *  3. each stale dim's move delta applies SEQUENTIALLY off that
-    *     aux, already-advanced dims joining at their NEW versions —
-    *     exactly [[refreshDim]]'s composition, uncommitted.
-    *
-    * Σ registers always move exactly (count/sum/non-null count).
-    * EXTREMA (round 13, VERDICT r12 #5): a moved subtotal may have
-    * carried the extremum away, so min/max cannot move — but the aux
-    * rows' own min/max registers stay VALID under dim churn (no fact
-    * row changed), so each move re-derives the affected view groups'
-    * extrema from `aux ⋈ dims` exactly as the committed
-    * [[refreshDim]] does ([[dimMoveDelta]]`.recompute` — O(aux),
-    * never a fact re-scan). Available when the fact sits at the view
-    * pin, or when the unabsorbed fact slice is INSERT-ONLY — the
-    * view's and aux's extrema then roll via [[MinMaxFeed]]
-    * (least/greatest, exact for inserts) before the moves recompute
-    * off the extrema-fresh aux. DELETE/UPDATE fact slices compose too
-    * (round 14, VERDICT r13 #2 — the refusal matrix closes): the
-    * groups the slice touched re-derive view AND aux extrema from the
-    * fact snapshot restricted to those groups ([[MinMaxRecompute]] —
-    * bounded by Δ's group set, the price min/max pays under deletes
-    * in every IVM system), and the moves then run on the
-    * extrema-fresh aux exactly as before. Cost:
-    * O(view + Δfact + Σᵢ(Δdimᵢ ⋈ aux)) (+ the affected-group fact
-    * read under a delete-bearing slice). */
   // ---- serve-plan construction memo (round 14, VERDICT r13 #5) --------
   // JobProfile evidence: of a ~3-4 s star serve, only ~2-2.4 s sits
   // inside Spark jobs — the rest is DRIVER time, dominated by
@@ -1102,26 +1049,55 @@ object MatView {
     * calling the raw builder: it persists and commits the frame, and
     * its pins change immediately after). */
   private[graft] def compensatedCached(spark: SparkSession, d: MvDef,
-      toVersion: Long, minMax: MinMaxMode): DataFrame =
+      toVersion: Long, wantsExtrema: Boolean): DataFrame =
     planMemo(s"${System.identityHashCode(spark)}:" +
         s"${d.mvDir}@${Lake.latestVersion(d.mvDir)}" +
-        s":b${d.builtVersion}:f$toVersion:$minMax") {
-      compensated(spark, d, toVersion, minMax)
+        s":b${d.builtVersion}:f$toVersion:$wantsExtrema") {
+      compensated(spark, d, toVersion, wantsExtrema)
     }
 
+  /** SERVE-TIME STAR COMPENSATION (round 11 single-dim; round 12
+    * composes MULTIPLE churned dims AND an unabsorbed fact delta —
+    * VERDICT r11 #2): the view's rows with the fact slice
+    * `(built → factTo]` and every stale dim's churn `(pin → to]`
+    * absorbed IN-PLAN, consumed directly by the rewrite rule. Order
+    * mirrors the committed protocol (`refresh` then `refreshDim`):
+    *
+    *  1. the FACT feed (joined with the PINNED dims) compensates the
+    *     view registers to `factTo` — `Σ(Δfact ⋈ pinned dims)`;
+    *  2. the aux rollup rolls to `factTo` in-plan the same way
+    *     ([[compensatedAux]]) — moves must weigh fact-fresh subtotals;
+    *  3. each stale dim's move delta applies SEQUENTIALLY off that
+    *     aux, already-advanced dims joining at their NEW versions —
+    *     exactly [[refreshDim]]'s composition, uncommitted.
+    *
+    * Σ registers always move exactly (count/sum/non-null count).
+    * EXTREMA (round 13, VERDICT r12 #5): a moved subtotal may have
+    * carried the extremum away, so min/max cannot move — but the aux
+    * rows' own min/max registers stay VALID under dim churn (no fact
+    * row changed), so each move re-derives the affected view groups'
+    * extrema from `aux ⋈ dims` exactly as the committed
+    * [[refreshDim]] does ([[dimMoveDelta]]`.recompute` — O(aux),
+    * never a fact re-scan). Available when the fact sits at the view
+    * pin, or when the unabsorbed fact slice is INSERT-ONLY — the
+    * view's and aux's extrema then roll via [[MinMaxFeed]]
+    * (least/greatest, exact for inserts) before the moves recompute
+    * off the extrema-fresh aux. DELETE/UPDATE fact slices compose too
+    * (round 14, VERDICT r13 #2 — the refusal matrix closes): the
+    * groups the slice touched re-derive view AND aux extrema from the
+    * fact snapshot restricted to those groups ([[MinMaxRecompute]] —
+    * bounded by Δ's group set, the price min/max pays under deletes
+    * in every IVM system), and the moves then run on the
+    * extrema-fresh aux exactly as before. Cost:
+    * O(view + Δfact + Σᵢ(Δdimᵢ ⋈ aux)) (+ the affected-group fact
+    * read under a delete-bearing slice). */
   private[graft] def compensatedStar(spark: SparkSession, d: MvDef,
       factTo: Long, staleDims: Seq[(Int, Long)],
-      wantsExtrema: Boolean = false): DataFrame = {
+      wantsExtrema: Boolean): DataFrame = {
     val factAhead = factTo > d.builtVersion
     var view: DataFrame =
-      if (factAhead) {
-        val viewMode =
-          if (!wantsExtrema) MinMaxNone
-          else if (appendOnlySlice(d.sourceDir, d.builtVersion, factTo))
-            MinMaxFeed
-          else MinMaxRecompute
-        compensated(spark, d, factTo, viewMode)
-      } else Lake.read(spark, d.mvDir)
+      if (factAhead) compensated(spark, d, factTo, wantsExtrema)
+      else Lake.read(spark, d.mvDir)
     val aux =
       if (factAhead) compensatedAux(spark, d, factTo, wantsExtrema)
       else committedAux(spark, d)
@@ -1129,8 +1105,7 @@ object MatView {
     staleDims.foreach { case (i, to) =>
       val p = dimMoveDelta(spark, d, i, to, aux, j => effective(j))
       view = rollForward(view, p.delta, d,
-        if (wantsExtrema) MinMaxRecompute else MinMaxNone,
-        if (wantsExtrema) Some(p.recompute) else None, p.affected)
+        if (wantsExtrema) p.recompute else MinMaxNone)
       effective(i) = to
     }
     view
@@ -1402,7 +1377,6 @@ object MatView {
       Thread.sleep(5)
     require(outstanding.get() == 0,
       s"auto-maintenance did not drain within ${timeoutMs} ms")
-    import scala.jdk.CollectionConverters._
     val failed = passFailures.keySet.asScala.toSeq.sorted
       .flatMap(d => Option(passFailures.remove(d)).map(d -> _))
     failed.headOption.foreach { case (dir, e) =>
@@ -1461,7 +1435,6 @@ object MatView {
   }
 
   private def hasDependents(dir: String): Boolean = {
-    import scala.jdk.CollectionConverters._
     reg.values.asScala.exists(d =>
       d.sourceDir == dir || d.dims.exists(_.dimDir == dir)) ||
       dreg.values.asScala.exists(_.sourceDir == dir)
@@ -1473,7 +1446,6 @@ object MatView {
     * per-thread, so the pass's own view-table commits are no-ops on
     * whichever thread runs it. */
   private def runPass(spark: SparkSession, dir: String): Unit = {
-    import scala.jdk.CollectionConverters._
     val asSource = reg.values.asScala.filter(_.sourceDir == dir).toSeq
     val asDim = reg.values.asScala
       .filter(d => d.sourceDir != dir && d.dims.exists(_.dimDir == dir)).toSeq
@@ -1596,11 +1568,8 @@ object MatView {
     * daily DAU aux must not evict it — the rewrite's candidate scan
     * already picks per query). */
   private def registerDistinct(d: DistinctDef): Unit = {
-    import scala.jdk.CollectionConverters._
     def shape(x: DistinctDef) = (x.sourceDir, x.distinctCol.toLowerCase,
-      x.groupCols.map(_.toLowerCase),
-      x.derived.map { case (n, e) => (n.toLowerCase, e) },
-      x.dims.map { case (dd, fk, dk) => (dd, fk.toLowerCase, dk.toLowerCase) })
+      x.groupCols.map(_.toLowerCase), lcDerived(x.derived), lcDims(x.dims))
     dreg.entrySet().asScala
       .filter(e => shape(e.getValue) == shape(d) && e.getKey != d.mvDir)
       .map(_.getKey).foreach(dreg.remove)
@@ -1612,20 +1581,15 @@ object MatView {
     * dependency check rides [[invalidateReferencing]]'s sibling for
     * these — see [[invalidateDistinctReferencing]]). */
   def distinctViews(sourceDir: String): Seq[DistinctDef] = {
-    import scala.jdk.CollectionConverters._
     dreg.values.asScala.filter(_.sourceDir == sourceDir).toSeq
   }
 
   /** DROP COLUMN dependency check for distinct views: a view whose
     * grouping or value column is dropped cannot be maintained. */
   def invalidateDistinctReferencing(dir: String, colName: String): Seq[String] = {
-    val lc = colName.toLowerCase
     val hit = distinctViews(dir).filter { d =>
-      (d.groupCols :+ d.distinctCol).exists(_.equalsIgnoreCase(lc)) ||
-        d.derived.exists { case (_, e) =>
-          s"\\b${java.util.regex.Pattern.quote(lc)}\\b".r
-            .findFirstIn(e.toLowerCase).isDefined
-        }
+      (d.groupCols :+ d.distinctCol).exists(_.equalsIgnoreCase(colName)) ||
+        d.derived.exists { case (_, e) => mentions(e, colName) }
     }
     hit.foreach(d => dreg.remove(d.mvDir))
     hit.map(_.mvDir)
@@ -1687,9 +1651,8 @@ object MatView {
         s"distinct star dim $dd must be KEYED on its join key $dk " +
           "(uniqueness is what keeps the serve-time join exact)")
     }
-    val auxCols = (factGroupCols ++ dims.map(_._2))
-      .map(_.toLowerCase).distinct
-    defineDistinctImpl(spark, sourceDir, mvDir, auxCols, distinctCol,
+    defineDistinctImpl(spark, sourceDir, mvDir,
+      distinctStarGrain(factGroupCols, dims), distinctCol,
       asOfVersion, derived, dims)
   }
 
@@ -1698,24 +1661,15 @@ object MatView {
       asOfVersion: Long, derived: Seq[(String, String)],
       dims: Seq[(String, String, String)]): DistinctDef = {
     require(groupCols.nonEmpty, "empty distinct-view grouping")
-    derived.foreach { case (n, e) =>
-      require(!derived.exists { case (m, _) =>
-        (m ne n) && e.toLowerCase.matches(s".*\\b${java.util.regex.Pattern.quote(m.toLowerCase)}\\b.*")
-      }, s"derived column $n references another derived column")
-    }
+    requireSourceOnlyDerived(derived)
     val v = if (asOfVersion == 0L) Lake.latestVersion(sourceDir) else asOfVersion
     require(v > 0L, s"no lake table at $sourceDir")
     val agg = distinctAuxFrame(spark, sourceDir, v, groupCols, distinctCol,
       derived)
     graft.Scratch.rm(new java.io.File(mvDir))
-    createViewTable(spark, agg, mvDir, groupCols :+ vNullCol :+ vCol)
-    val nullGroups = Lake.read(spark, mvDir)
-      .filter(groupCols.map(col(_).isNull).reduce(_ || _)).limit(1).count()
-    if (nullGroups > 0L) {
-      graft.Scratch.rm(new java.io.File(mvDir))
-      sys.error(s"distinct view group columns ${groupCols.mkString(",")} " +
-        s"contain NULLs in $sourceDir@v$v — a NULL group cannot key the view")
-    }
+    createViewTable(spark, agg, mvDir, distinctKey(groupCols))
+    requireNullFreeBuild(spark, mvDir, groupCols,
+      "distinct view group columns", s"$sourceDir@v$v")
     val d = DistinctDef(sourceDir, mvDir, groupCols, distinctCol, v, derived,
       dims)
     writeDistinctSidecar(d)
@@ -1723,103 +1677,80 @@ object MatView {
     d
   }
 
-  /** [[defineDistinct]] with the build memoized on storage — same
-    * policy as [[defineOrRecover]]: a matching `_mvd` sidecar
-    * re-registers instead of re-aggregating (built version may differ,
-    * a refresh advances it); any definition mismatch rebuilds. */
-  def defineDistinctOrRecover(spark: SparkSession, sourceDir: String,
-      mvDir: String, groupCols: Seq[String], distinctCol: String,
-      asOfVersion: Long = 0L, derived: Seq[(String, String)] = Nil): DistinctDef = {
-    val sidecar = java.nio.file.Paths.get(mvDir, "_mvd")
-    if (java.nio.file.Files.exists(sidecar)) {
+  /** A distinct star view's aux grain: the fact group columns plus
+    * every dim's fact-side join key. */
+  private def distinctStarGrain(factGroupCols: Seq[String],
+      dims: Seq[(String, String, String)]): Seq[String] =
+    (factGroupCols ++ dims.map(_._2)).map(_.toLowerCase).distinct
+
+  /** The view `mvDir`'s `_mvd` sidecar holds, re-registered, when it is
+    * the SAME definition (its built version may differ: a refresh
+    * advances it); a different one is unregistered. */
+  private def recoverSameDistinct(sourceDir: String, mvDir: String,
+      groupCols: Seq[String], distinctCol: String,
+      derived: Seq[(String, String)],
+      dims: Seq[(String, String, String)]): Option[DistinctDef] =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(mvDir, "_mvd"))) None
+    else {
       val d = recoverDistinct(mvDir)
       val same = d.sourceDir == sourceDir &&
         d.groupCols.map(_.toLowerCase) == groupCols.map(_.toLowerCase) &&
         d.distinctCol.equalsIgnoreCase(distinctCol) &&
-        d.derived.map { case (n, e) => (n.toLowerCase, e) } ==
-          derived.map { case (n, e) => (n.toLowerCase, e) } &&
-        d.dims.isEmpty
-      if (same) return d
-      dreg.remove(mvDir)
+        lcDerived(d.derived) == lcDerived(derived) &&
+        lcDims(d.dims) == lcDims(dims)
+      if (!same) dreg.remove(mvDir)
+      Some(d).filter(_ => same)
     }
-    defineDistinct(spark, sourceDir, mvDir, groupCols, distinctCol,
-      asOfVersion, derived)
-  }
+
+  /** [[defineDistinct]] with the build memoized on storage — same
+    * policy as [[defineOrRecover]]: a matching `_mvd` sidecar
+    * re-registers instead of re-aggregating; any definition mismatch
+    * rebuilds. */
+  def defineDistinctOrRecover(spark: SparkSession, sourceDir: String,
+      mvDir: String, groupCols: Seq[String], distinctCol: String,
+      asOfVersion: Long = 0L, derived: Seq[(String, String)] = Nil): DistinctDef =
+    recoverSameDistinct(sourceDir, mvDir, groupCols, distinctCol, derived, Nil)
+      .getOrElse(defineDistinct(spark, sourceDir, mvDir, groupCols,
+        distinctCol, asOfVersion, derived))
 
   /** [[defineDistinctStar]] with the build memoized on storage — the
     * [[defineDistinctOrRecover]] policy for the star shape. */
   def defineDistinctStarOrRecover(spark: SparkSession, sourceDir: String,
       dims: Seq[(String, String, String)], mvDir: String,
       factGroupCols: Seq[String], distinctCol: String,
-      asOfVersion: Long = 0L, derived: Seq[(String, String)] = Nil): DistinctDef = {
-    val sidecar = java.nio.file.Paths.get(mvDir, "_mvd")
-    if (java.nio.file.Files.exists(sidecar)) {
-      val d = recoverDistinct(mvDir)
-      val auxCols = (factGroupCols ++ dims.map(_._2))
-        .map(_.toLowerCase).distinct
-      val same = d.sourceDir == sourceDir &&
-        d.groupCols.map(_.toLowerCase) == auxCols &&
-        d.distinctCol.equalsIgnoreCase(distinctCol) &&
-        d.derived.map { case (n, e) => (n.toLowerCase, e) } ==
-          derived.map { case (n, e) => (n.toLowerCase, e) } &&
-        d.dims.map { case (dd, fk, dk) => (dd, fk.toLowerCase, dk.toLowerCase) } ==
-          dims.map { case (dd, fk, dk) => (dd, fk.toLowerCase, dk.toLowerCase) }
-      if (same) return d
-      dreg.remove(mvDir)
-    }
-    defineDistinctStar(spark, sourceDir, dims, mvDir, factGroupCols,
-      distinctCol, asOfVersion, derived)
-  }
+      asOfVersion: Long = 0L, derived: Seq[(String, String)] = Nil): DistinctDef =
+    recoverSameDistinct(sourceDir, mvDir,
+      distinctStarGrain(factGroupCols, dims), distinctCol, derived, dims)
+      .getOrElse(defineDistinctStar(spark, sourceDir, dims, mvDir,
+        factGroupCols, distinctCol, asOfVersion, derived))
 
   /** Re-register a distinct view from its sidecar, reconciling the
     * built version against the view table's own txn marker (same
     * crash-window rule as [[recover]]): the marker wins — those
     * registers already absorbed the slice. */
   def recoverDistinct(mvDir: String): DistinctDef = {
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(mvDir, "_mvd")).toArray(Array.empty[String])
-    val kv = lines.filter(_.contains("=")).map { l =>
-      val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    val sidecarVersion = kv("builtVersion").toLong
-    val txnVersion = Lake.manifest(mvDir, Lake.latestVersion(mvDir))
-      .txns.getOrElse(DistinctTxnApp, 0L)
-    val derived = kv.keys.filter(_.matches("der\\d+")).toSeq.sortBy(_.drop(3).toInt)
-      .map { k =>
-        val Array(n, hx) = kv(k).split('|')
-        n -> hexToStr(hx)
-      }
-    val dims = kv.keys.filter(_.matches("dim\\d+")).toSeq.sortBy(_.drop(3).toInt)
-      .map { k =>
-        val Array(dd, fk, dk) = kv(k).split('|')
-        (dd, fk, dk)
-      }
+    val kv = readSidecar(mvDir, "_mvd")
     val d = DistinctDef(kv("source"), mvDir, kv("group").split(",").toSeq,
-      kv("dcol"), math.max(sidecarVersion, txnVersion), derived, dims)
-    if (txnVersion > sidecarVersion) writeDistinctSidecar(d)
+      kv("dcol"), recoveredVersion(kv, mvDir, DistinctTxnApp), derivedOf(kv),
+      indexedLines(kv, "dim").map { case Array(dd, fk, dk) => (dd, fk, dk) })
+    if (d.builtVersion > kv("builtVersion").toLong) writeDistinctSidecar(d)
     registerDistinct(d)
     d
   }
 
-  private def writeDistinctSidecar(d: DistinctDef): Unit = {
-    val p = java.nio.file.Paths.get(d.mvDir, "_mvd")
-    val tmp = java.nio.file.Paths.get(d.mvDir, "_mvd.tmp")
-    val derLines = d.derived.zipWithIndex.map { case ((n, e), i) =>
-      s"der$i=$n|${strHex(e)}\n"
-    }.mkString
-    val dimLines = d.dims.zipWithIndex.map { case ((dd, fk, dk), i) =>
-      s"dim$i=$dd|$fk|$dk\n"
-    }.mkString
-    java.nio.file.Files.write(tmp,
-      (s"fmt=1\nsource=${d.sourceDir}\n" +
+  private def writeDistinctSidecar(d: DistinctDef): Unit =
+    publishSidecar(d.mvDir, "_mvd",
+      s"fmt=1\nsource=${d.sourceDir}\n" +
         s"group=${d.groupCols.mkString(",")}\n" +
         s"dcol=${d.distinctCol}\nbuiltVersion=${d.builtVersion}\n" +
-        derLines + dimLines)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+        derivedLines(d.derived) +
+        d.dims.zipWithIndex.map { case ((dd, fk, dk), i) =>
+          s"dim$i=$dd|$fk|$dk\n"
+        }.mkString)
+
+  /** A distinct view's table key: its grouping plus the encoded value. */
+  private def distinctKey(groupCols: Seq[String]): Seq[String] =
+    groupCols :+ vNullCol :+ vCol
 
   /** The aux rows rolled forward by the source change feed over
     * `(builtVersion, toVersion]` — the signed algebra of
@@ -1830,28 +1761,21 @@ object MatView {
     * commits it). */
   private[graft] def compensatedDistinct(spark: SparkSession, d: DistinctDef,
       toVersion: Long): DataFrame = {
-    val keyCols = d.groupCols :+ vNullCol :+ vCol
-    val feed0 = withDerived(Lake.changes(spark, d.sourceDir, d.builtVersion,
-      toVersion, skipRewriteOnly = true), d.derived)
-    val dt = feed0.schema(d.distinctCol).dataType
-    val (nullFlag, enc) = encodedVal(col(d.distinctCol), dt)
-    val feed = feed0.withColumn(vNullCol, nullFlag).withColumn(vCol, enc)
-    val delta = feed
-      .withColumn("__sign",
-        when(col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("__sign")).as("__dn"))
-    val cur = Lake.read(spark, d.mvDir)
-    val synth = MvDef(d.sourceDir, d.mvDir, keyCols, Nil, d.builtVersion)
-    rollForward(cur, delta, synth, MinMaxNone, None,
-      affectedGroups = feed.select(keyCols.map(col): _*).distinct())
+    val keyCols = distinctKey(d.groupCols)
+    val feed = withDerived(
+      sliceFeed(spark, d.sourceDir, d.builtVersion, toVersion), d.derived)
+    val (nullFlag, enc) =
+      encodedVal(col(d.distinctCol), feed.schema(d.distinctCol).dataType)
+    rollForward(Lake.read(spark, d.mvDir),
+      signedDelta(feed.withColumn(vNullCol, nullFlag).withColumn(vCol, enc),
+        keyCols, Nil, feedExtrema = false),
+      MvDef(d.sourceDir, d.mvDir, keyCols, Nil, d.builtVersion), MinMaxNone)
   }
 
   /** Roll the distinct view forward to the source's current version:
-    * one atomic merge commit (changed rows upsert, emptied rows
-    * delete) carrying the absorbed source version as a txn marker.
-    * O(Δ), never a source re-scan. */
+    * one [[commitRolled]] (changed rows upsert, emptied rows delete)
+    * carrying the absorbed source version as a txn marker. O(Δ), never
+    * a source re-scan. */
   def refreshDistinct(spark: SparkSession, mvDir: String): DistinctDef = {
     val d = dreg.get(mvDir)
     require(d != null, s"no registered distinct view at $mvDir")
@@ -1859,21 +1783,12 @@ object MatView {
     if (v == d.builtVersion) return d
     require(v > d.builtVersion,
       s"source ${d.sourceDir} regressed below distinct-view build")
-    val keyCols = d.groupCols :+ vNullCol :+ vCol
-    val next = compensatedDistinct(spark, d, v).persist()
-    try {
-      require(next.filter(d.groupCols.map(col(_).isNull).reduce(_ || _))
-          .limit(1).count() == 0L,
-        s"refresh of $mvDir: the missed slice introduced NULL group values")
-      val cur = Lake.read(spark, d.mvDir)
-      val dead = cur.select(keyCols.map(col): _*)
-        .except(next.select(keyCols.map(col): _*))
-      Lake.merge(spark, d.mvDir, next, dead, targetFiles = 1,
-        txn = Some(DistinctTxnApp -> v))
-      val nd = d.copy(builtVersion = v)
-      writeDistinctSidecar(nd)
-      registerDistinct(nd)
-      nd
-    } finally next.unpersist()
+    commitRolled(spark, d.mvDir, distinctKey(d.groupCols),
+      compensatedDistinct(spark, d, v),
+      txn = Some(DistinctTxnApp -> v), nullFree = d.groupCols)
+    val nd = d.copy(builtVersion = v)
+    writeDistinctSidecar(nd)
+    registerDistinct(nd)
+    nd
   }
 }

@@ -475,10 +475,10 @@ object MatViewRewrite extends Rule[LogicalPlan] {
       case _ => false
     }
     // stale min/max serve on BOTH slice kinds (round 14 — VERDICT r13
-    // #2): an insert-only slice rolls extrema via MinMaxFeed; a
+    // #2): an insert-only slice rolls extrema through the feed; a
     // delete-bearing slice re-derives the touched groups' extrema
-    // from the fact restricted to those groups (MinMaxRecompute —
-    // build() picks the mode off the delta log)
+    // from the fact restricted to those groups (MatView.compensated
+    // picks the mode off the delta log)
   } yield build(d, pinned, filtersT, serves, asks, wantsExtrema)
 
   /** STAR matching: an aggregate over `factLake ⋈ dim₁ ⋈ … ⋈ dimₙ`
@@ -586,10 +586,10 @@ object MatViewRewrite extends Rule[LogicalPlan] {
     }
     // extrema × fact delta: NO refusal remains (round 14 closes the
     // matrix — VERDICT r13 #2). An insert-only slice rolls extrema
-    // via MinMaxFeed (O(Δ)); a delete/update slice re-derives the
+    // through the feed (O(Δ)); a delete/update slice re-derives the
     // touched groups' extrema from the fact restricted to those
-    // groups (MinMaxRecompute — the serve path picks the mode off
-    // the delta log); churn composes either way, the moves running
+    // groups (MatView.compensated picks the mode off the delta
+    // log); churn composes either way, the moves running
     // on the extrema-fresh aux.
   } yield build(d, factPinned, keptT, serves, asks, wantsExtrema, staleDims)
 
@@ -625,11 +625,7 @@ object MatViewRewrite extends Rule[LogicalPlan] {
       else if (fresh)
         spark.read.format("graft-lake").option("path", d.mvDir).load()
       else
-        MatView.compensatedCached(spark, d, pinnedVersion,
-          if (!wantsExtrema) MatView.MinMaxNone
-          else if (MatView.appendOnlySlice(d.sourceDir, d.builtVersion,
-            pinnedVersion)) MatView.MinMaxFeed
-          else MatView.MinMaxRecompute)
+        MatView.compensatedCached(spark, d, pinnedVersion, wantsExtrema)
     val analyzedBase = base.queryExecution.analyzed
     val byBase = analyzedBase.output.map(a => a.name.toLowerCase -> a).toMap
     val transposed = filters.foldLeft(analyzedBase: LogicalPlan) { (p, c) =>
@@ -844,8 +840,8 @@ object MatViewRewrite extends Rule[LogicalPlan] {
           case GsAgg(_: MinOf) | GsAgg(_: MaxOf) => true
           case _ => false
         }
-        // no extrema staleness gate (round 14): buildGroupingSets
-        // picks MinMaxFeed vs MinMaxRecompute off the delta log
+        // no extrema staleness gate (round 14): MatView.compensated
+        // picks feed-rolled or recomputed extrema off the delta log
       } yield buildGroupingSets(d, pinned, filtersT, groupAttrs,
         gidAttr, viewColByAttr, sets, asks, wantsExtrema)
       case _ => None
@@ -895,11 +891,7 @@ object MatViewRewrite extends Rule[LogicalPlan] {
     val fresh = pinnedVersion == d.builtVersion
     val base =
       if (fresh) spark.read.format("graft-lake").option("path", d.mvDir).load()
-      else MatView.compensatedCached(spark, d, pinnedVersion,
-        if (!wantsExtrema) MatView.MinMaxNone
-        else if (MatView.appendOnlySlice(d.sourceDir, d.builtVersion,
-          pinnedVersion)) MatView.MinMaxFeed
-        else MatView.MinMaxRecompute)
+      else MatView.compensatedCached(spark, d, pinnedVersion, wantsExtrema)
     val analyzedBase = base.queryExecution.analyzed
     val byBase = analyzedBase.output.map(a => a.name.toLowerCase -> a).toMap
     val transposed = filters.foldLeft(analyzedBase: LogicalPlan) { (p, c) =>

@@ -677,8 +677,6 @@ private[graft] class LakeScan(spark: SparkSession, dir: String, version: Long,
   // createReaderFactory are each called more than once per exec
   @volatile private var memo: (Seq[Lake.FileEntry], Scan) = null
 
-  private[graft] def currentFiles: Seq[Lake.FileEntry] = entries
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   // post-construction plan notes (the TopNFilterPrune rule's

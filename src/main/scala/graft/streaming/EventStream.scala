@@ -71,15 +71,6 @@ object EventStream {
         unix_timestamp(col("w.start")).as("session_start"),
         col("n_events"), col("sum_value"))
 
-  /** Native streaming session windows (30-minute gap). */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("session_window.start").as("session_start"),
-        col("user_id"), col("n"))
-
   /** Stream-stream interval join: each error joined to clicks by the
     * same user within the preceding 30 minutes. Both sides carry
     * watermarks so the join state is bounded — click state older than
